@@ -31,9 +31,6 @@ class GraftPlannerExtensions extends (SparkSessionExtensions => Unit) {
     // join when the IN-subquery already computes the same (child, key)
     // aggregate — the pre-agg dedupes via ReusedExchange
     ext.injectOptimizerRule(session => new plans.EagerAggregationReuse(session))
-    // multi-channel UNION ALL of same-relation aggregates (TPC-DS
-    // q33/q71 shape) fuses to ONE scan + Expand — n fact reads become 1
-    ext.injectOptimizerRule(session => new plans.FuseUnionAggregates(session))
     // condition-less joins of single-row aggregates over one relation
     // (TPC-DS q88 shape) fuse into ONE scan with FILTER-clause aggregates
     ext.injectOptimizerRule(session => new plans.FuseScalarAggregates(session))

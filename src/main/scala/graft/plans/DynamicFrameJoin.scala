@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `row_number()`, bound once through a single-element-transform "binder":
   * `element_at(transform(array(struct(a, r, p…))), w -> body), 1)`.
   * Semantically right, but quadratic in the partition twice over (both
-  * MEASURED, tools/DynFrameProbe + targeted micro-benchmarks, round 8):
+  * MEASURED with targeted micro-benchmarks, round 8):
   *
   *   1. WindowExec serializes the O(partition) collect array into EVERY
   *      output UnsafeRow — O(rows²) bytes for a single partition.

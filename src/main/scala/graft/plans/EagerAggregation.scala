@@ -58,34 +58,8 @@ import org.apache.spark.sql.types.DecimalType
   */
 class EagerAggregationReuse(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  private def dbg(msg: => String): Unit =
-    if (sys.env.contains("GRAFT_EAGER_DEBUG")) System.err.println("[eager] " + msg)
-
   private def enabled: Boolean =
     spark.conf.getOption(EagerAggregationReuse.KEY).forall(_.toBoolean)
-
-  /** Variant 3 (generic eager push) is DEFAULT-OFF: interleaved sf30 A/Bs
-    * measured it LOSING on both target shapes single-box (q22 ON 6.3 s vs
-    * OFF 4.8 s median; h10 ON 4.0 s vs OFF 2.6 s — the extra 45–148 M-row
-    * hash pass costs more than the tmpfs shuffle bytes it saves; see
-    * bench/BENCH_sf30_r10_{q22,h10}_generic_ab.json). On a network fabric
-    * the saved bytes cross the wire and the trade plausibly reverses —
-    * the reference enables its cost-based equivalent
-    * (PushPartialAggregationThroughJoin) under a CBO this engine doesn't
-    * have — so it ships as an explicit cluster opt-in, exactness-swept. */
-  private def genericOn: Boolean =
-    spark.conf.getOption(EagerAggregationReuse.GENERIC_KEY).exists(_.toBoolean)
-
-  private def genericMinBytes: BigInt =
-    BigInt(spark.conf.getOption(EagerAggregationReuse.GENERIC_MIN_BYTES_KEY)
-      .map(_.toLong).getOrElse(256L << 20))
-
-  /** Minimum estimated fraction of A-side shuffle bytes the pre-aggregate
-    * must save (narrowing × reduction, see genericCostGate) for the
-    * generic tier to fire. 0 disables the cost gate. */
-  private def genericMinSavedFrac: Double =
-    spark.conf.getOption(EagerAggregationReuse.GENERIC_MIN_SAVED_KEY)
-      .map(_.toDouble).getOrElse(0.3)
 
   /** Key positions make attributes comparable across plan copies: the
     * canonicalized child + the attribute's ordinal in its output. */
@@ -167,8 +141,7 @@ class EagerAggregationReuse(spark: SparkSession) extends Rule[LogicalPlan] {
     val twins =
       if (plan.subqueriesAll.isEmpty) Set.empty[(LogicalPlan, Int)]
       else twinKeys(plan)
-    // variant 3 (generic eager push) needs no twin — only the shape
-    if (twins.isEmpty && !genericOn) return plan
+    if (twins.isEmpty) return plan
 
     plan.transformDown {
       case agg @ Aggregate(groupExprs, aggExprs, aggChild, _)
@@ -225,9 +198,8 @@ class EagerAggregationReuse(spark: SparkSession) extends Rule[LogicalPlan] {
         case _ => false
       }
       if (others.exists(_.references.exists(a.outputSet.contains))) return None
-      // the TWIN variants additionally need the outer grouping to pin the
-      // join key (their pre-aggregate groups by the key alone); the
-      // generic sum-of-sums identity needs no such pin
+      // both variants need the outer grouping to pin the join key (their
+      // pre-aggregate groups by the key alone)
       val groupPinsKey =
         groupS.exists(g => g.semanticEquals(aK) || g.semanticEquals(bK))
       // A must not already be the pre-aggregate (idempotency, both
@@ -251,15 +223,13 @@ class EagerAggregationReuse(spark: SparkSession) extends Rule[LogicalPlan] {
         supported(ae.aggregateFunction) &&
         ae.references.nonEmpty && ae.references.forall(a.outputSet.contains) &&
         ae.deterministic)) return None
-      // A-side columns referenced outside the agg calls: the twin
-      // variants require key-only (their pre groups by the key alone);
-      // the generic variant groups its pre by these PLUS the key, so any
-      // attribute set is admissible there
+      // A-side columns referenced outside the agg calls must be the key
+      // alone (the pre-aggregate groups by the key only)
       val outsideRefs = (groupS ++ substituted.map(
         _.transformUp {
           case ae: AggregateExpression => Literal(null, ae.dataType)
         })).flatMap(_.references).filter(a.outputSet.contains).toSet
-      val keyOnly = outsideRefs.subsetOf(Set[Attribute](aK))
+      if (!groupPinsKey || !outsideRefs.subsetOf(Set[Attribute](aK))) return None
 
       // Variant 1 — filtered-twin reuse (the reference's Q18 plan): B
       // carries `bK IN (SELECT k FROM A GROUP BY k [HAVING p])` over this
@@ -268,69 +238,20 @@ class EagerAggregationReuse(spark: SparkSession) extends Rule[LogicalPlan] {
       // join enforces exactly the same key set), so A is scanned,
       // aggregated, and shuffled ONCE — no second fact pass, and nothing
       // for constraint propagation to duplicate into a semi join.
-      val viaTwinJoin =
-        if (keyOnly && groupPinsKey)
-          twinJoinReuse(a, b, aK, bK, others, groupS,
-            aggExprs, substituted, hint, aIsLeft)
-        else None
+      val viaTwinJoin = twinJoinReuse(a, b, aK, bK, others, groupS,
+        aggExprs, substituted, hint, aIsLeft)
       if (viaTwinJoin.isDefined) return viaTwinJoin
 
       // Variant 2 — twin-gated push: the same (child, key) aggregate
       // exists in a subquery, so the pre-aggregate's exchange dedupes
       // with it via ReusedExchange.
-      // Variant 3 — GENERIC eager push (no twin; Yan & Larson VLDB'94
-      // eager group-by): the sum-of-sums identity needs neither a twin
-      // nor the key pinned in the outer grouping — the pre-aggregate
-      // groups by (A-side outside refs ∪ key), the inner join duplicates
-      // each pre row per matching B row, and re-aggregation multiplies
-      // both sides of the identity equally. OPT-IN ONLY (see genericOn:
-      // measured to lose single-box) with a size floor so light queries
-      // never pay the extra hash pass even when enabled. In the
-      // fixed-point batch the push CASCADES down a join chain (each
-      // firing strictly descends, so it terminates at the scans) — the
-      // cascade is what reaches the Q10 shape, where the group keys live
-      // two joins above the fact.
       val pos = a.output.indexWhere(_.exprId == aK.exprId)
-      val hasTwin = keyOnly && groupPinsKey &&
-        pos >= 0 && twins.contains((a.canonicalized, pos))
-      // Bytes-based cost gate for the generic tier (the reference fires
-      // its equivalent, PushPartialAggregationThroughJoin, under a cost
-      // model — MAIN/cost/CostComparator.java, PlanOptimizers.java:392):
-      // fire only when the estimated fraction of A-side shuffle bytes
-      // SAVED clears `genericMinSavedFrac`. The only REAL saving is row
-      // reduction — column pruning already narrows the shuffle to the
-      // kept key/agg columns with or without the pre-aggregate — and row
-      // reduction is provable exactly when the key carries a distinct
-      // count (ANALYZE TABLE ... FOR COLUMNS + spark.sql.cbo.enabled,
-      // the cluster posture). Without stats nothing is saved-by-proof
-      // and the gate stays off: that is precisely the measured sf30
-      // single-box losses (q22/h10 — the extra 45–148 M-row hash pass
-      // bought ~0.2% row reduction), so a cluster can set
-      // spark.graft.eagerAgg.generic=true once, ANALYZE its facts, and
-      // never hand-flag a query. genericMinSavedFrac=0 restores the
-      // unconditional (size-floor-only) round-10 behavior.
-      def genericCostGate: Boolean = {
-        if (a.stats.sizeInBytes < genericMinBytes) return false
-        if (genericMinSavedFrac <= 0) return true
-        val st = a.stats
-        val rowRatio =
-          (st.attributeStats.get(aK).flatMap(_.distinctCount), st.rowCount) match {
-            case (Some(d), Some(r)) if r > 0 =>
-              (BigDecimal(d) / BigDecimal(r)).min(1).toDouble
-            case _ => 1.0
-          }
-        1.0 - rowRatio >= genericMinSavedFrac
-      }
-      if (!hasTwin && !(genericOn && genericCostGate)) return None
+      if (pos < 0 || !twins.contains((a.canonicalized, pos))) return None
 
-      // pre-aggregate over A: the twin form groups by the key alone (so
-      // its exchange canonicalizes equal to the twin's); the generic form
-      // adds every A-side attribute the outer query needs
-      val preGroups: Seq[Attribute] =
-        if (hasTwin || keyOnly) Seq(aK)
-        else (outsideRefs - aK).toSeq :+ aK
+      // pre-aggregate over A, grouped by the key alone so its exchange
+      // canonicalizes equal to the twin's
       val preAliases = calls.map(ae => Alias(ae, "__eager_pre")())
-      val pre = Aggregate(preGroups, preGroups ++ preAliases, a)
+      val pre = Aggregate(Seq(aK), aK +: preAliases, a)
       val preByCall: Map[AggregateExpression, Attribute] =
         calls.zip(preAliases.map(_.toAttribute)).toMap
 
@@ -398,7 +319,7 @@ class EagerAggregationReuse(spark: SparkSession) extends Rule[LogicalPlan] {
         case Join(l, r, Inner, _, _) => findIn(l).orElse(findIn(r))
         case _ => None
       }
-    val (inFilter, inExpr, listq) = findIn(b).getOrElse { dbg("no IN filter found in b: " + b.nodeName); return None }
+    val (inFilter, inExpr, listq) = findIn(b).getOrElse(return None)
 
     // peel the subquery to the twin aggregate, collecting HAVING conjuncts;
     // the subquery's single output must be the twin's grouping key
@@ -412,11 +333,11 @@ class EagerAggregationReuse(spark: SparkSession) extends Rule[LogicalPlan] {
         Some((conds, ag))
       case _ => None
     }
-    val (having, twin) = peel(listq.plan, Nil).getOrElse { dbg("peel failed: " + listq.plan.treeString.take(500)); return None }
+    val (having, twin) = peel(listq.plan, Nil).getOrElse(return None)
     if (having.exists(!_.deterministic)) return None
     val tchild = twin.child
-    if (tchild.output.length != a.output.length) { dbg("arity mismatch"); return None }
-    if (tchild.canonicalized != a.canonicalized) { dbg("canonical mismatch:\nA=" + a.canonicalized.treeString.take(400) + "\nT=" + tchild.canonicalized.treeString.take(400)); return None }
+    if (tchild.output.length != a.output.length) return None
+    if (tchild.canonicalized != a.canonicalized) return None
 
     // positional A → twin-child column remap (sound: canonicalized
     // equality implies identical shape and column positions)
@@ -479,7 +400,7 @@ class EagerAggregationReuse(spark: SparkSession) extends Rule[LogicalPlan] {
     if (newBodies.exists(_.exists {
       case ae: AggregateExpression => !introduced.contains(ae)
       case _ => false
-    })) { dbg("unconsumed call; twinAliases=" + twinAliases.map(_.child.sql).mkString("; ") + " bodies=" + substituted.map(_.sql).mkString("; ")); return None }
+    })) return None
 
     // pre outputs the twin's key, not A's — swap it in grouping/outputs
     def keySwap(e: Expression): Expression = e.transformUp {
@@ -545,7 +466,4 @@ class EagerAggregationReuse(spark: SparkSession) extends Rule[LogicalPlan] {
 
 object EagerAggregationReuse {
   val KEY = "spark.graft.eagerAgg"
-  val GENERIC_KEY = "spark.graft.eagerAgg.generic"
-  val GENERIC_MIN_BYTES_KEY = "spark.graft.eagerAgg.genericMinBytes"
-  val GENERIC_MIN_SAVED_KEY = "spark.graft.eagerAgg.genericMinSavedFrac"
 }

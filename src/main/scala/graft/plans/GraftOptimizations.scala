@@ -82,8 +82,6 @@ object GraftOptimizations {
   private[plans] case class ProbeInKeys(lits: Seq[Literal]) extends ProbeDecision
   private[plans] case object ProbeOverflow extends ProbeDecision
   private[plans] case object ProbeSkip extends ProbeDecision
-  /** Exact distinct-key count (the scalar count probe, memo slot -1). */
-  private[plans] case class ProbeCount(n: Long) extends ProbeDecision
 
   val ENABLED_KEY = "spark.graft.dynamicFilter.enabled"
   val FACT_MIN_KEY = "spark.graft.dynamicFilter.factMinBytes"
@@ -91,14 +89,12 @@ object GraftOptimizations {
   val MAX_IN_KEY = "spark.graft.dynamicFilter.maxInKeys"
   val DIM_BCAST_KEY = "spark.graft.dynamicFilter.dimBroadcastBytes"
   val RATIO_KEY = "spark.graft.dynamicFilter.minFactDimRatio"
-  val MAX_BCAST_KEYS_KEY = "spark.graft.dynamicFilter.maxBroadcastKeys"
   val MAX_PUSH_KEYS_KEY = "spark.graft.dynamicFilter.maxPushdownKeys"
   val LONG_SET_KEY = "spark.graft.dynamicFilter.longSet"
   val SCALED_SUM_KEY = "spark.graft.scaledLongSum"
 }
 
-/** Dynamic filtering as a Catalyst rule — the engine path for what round 7
-  * proved out imperatively in [[DynamicFilters.semiJoinPrune]].
+/** Dynamic filtering as a Catalyst rule.
   *
   * Why: `fact.key IN (SELECT key FROM dim WHERE …)` (and the equivalent
   * fact⋈dim join) is statically un-plannable — the dim filter's selectivity
@@ -146,7 +142,6 @@ class DynamicSemiJoinPrune(spark: SparkSession)
   private val InKeys = GraftOptimizations.ProbeInKeys
   private val Overflow = GraftOptimizations.ProbeOverflow
   private val Skip = GraftOptimizations.ProbeSkip
-  private val KeyCount = GraftOptimizations.ProbeCount
 
   // memo keyed by a STABLE form of the dim plan (stableKey below), so
   // repeated optimizations of the same query — bench reruns, dashboards,
@@ -209,14 +204,6 @@ class DynamicSemiJoinPrune(spark: SparkSession)
     val maxIn = confLong(MAX_IN_KEY, 131072L).toInt
     val dimBcast = BigInt(confLong(DIM_BCAST_KEY, 64L << 20))
     val ratio = confLong(RATIO_KEY, 4L)
-    // Broadcast-semi tier DEFAULT-OFF on a single box: the sf30 A/B
-    // (SCALE.md round 9) measured the tier cutting h10's lineitem shuffle
-    // 1.8 GB → 70 MB yet LOSING 0.3–0.5 s on h02/h09/h10 — the local
-    // tmpfs/no-compression shuffle is cheaper than the extra broadcast
-    // build plus the dual probe passes. On a cluster the saved shuffle
-    // crosses a network and the trade reverses: set maxBroadcastKeys
-    // (e.g. 2000000) in spark-submit to enable.
-    val maxBcastKeys = confLong(MAX_BCAST_KEYS_KEY, 0L)
     val maxPushKeys = confLong(MAX_PUSH_KEYS_KEY, 1024L)
 
     // applicability pre-checks — this rule sits in a fixed-point batch, so
@@ -298,38 +285,6 @@ class DynamicSemiJoinPrune(spark: SparkSession)
       d
     }
 
-    /** Exact distinct-key count of the dim (one full dim evaluation —
-      * bounded by probeable()'s input-byte ratio guard; memoized in slot
-      * maxKeys = -1). Used to size the broadcast-semi tier: output size
-      * STATS of a filtered projection are selectivity-blind (a 4 % date
-      * filter still reports near-full size), so the count is the only
-      * trustworthy gate for "small enough to broadcast". */
-    def countProbe(dim: LogicalPlan): Long = {
-      val key = stableKey(dim, -1)
-      val cached = memo.get(key)
-      val d = if (cached != null) cached
-      else {
-        GraftOptimizations.probeMisses.incrementAndGet()
-        val r =
-          try {
-            val attr = dim.output.head
-            val cnt = Alias(AggregateExpression(
-              org.apache.spark.sql.catalyst.expressions.aggregate.Count(Seq(attr)),
-              org.apache.spark.sql.catalyst.expressions.aggregate.Complete,
-              isDistinct = true), "cnt")()
-            val rows = org.apache.spark.sql.classic.GraftPlanBridge
-              .ofRows(spark, Aggregate(Nil, Seq(cnt), dim)).collect()
-            KeyCount(rows.head.getLong(0))
-          } catch { case scala.util.control.NonFatal(_) => Skip }
-        memo.put(key, r) // LRU-bounded (removeEldestEntry)
-        r
-      }
-      d match {
-        case KeyCount(n) => n
-        case _ => -1L
-      }
-    }
-
     /** Is there already an In/InSet/IN-subquery conjunct over this key
       * anywhere below? (Idempotency for the join variant: pushdown may
       * have moved our inserted filter off the immediate child between
@@ -379,7 +334,7 @@ class DynamicSemiJoinPrune(spark: SparkSession)
         // In degrades to one [min,max] range per page and hash-bucketing
         // makes every page's raw span ~bucketCount× its key count — 30×
         // scan regression for 795 of 600 M rows skipped, see
-        // sources/SortedInPredicate scaladoc). The LOGICAL plan keeps the
+        // OPTIMIZATION_r16.md). The LOGICAL plan keeps the
         // plain InSet even though its per-row probe boxes: constraint
         // propagation copies this predicate onto every equi-joined side
         // (293 copies measured on h02 at sf30), and InSet's value-equal
@@ -474,37 +429,17 @@ class DynamicSemiJoinPrune(spark: SparkSession)
           }
         // one In conjunct per equi-key pair (TPC-H Q5's supplier join
         // carries both l_suppkey=s_suppkey and c_nationkey=s_nationkey —
-        // the reference's equality inference narrows BOTH sides). When the
-        // key domain overflows the inline-literal tier but stays small
-        // enough to broadcast, insert the key subquery itself with a
-        // BROADCAST hint: RewritePredicateSubquery turns it into a
-        // broadcast LEFT SEMI on the fact side — still zero extra fact
-        // shuffle, and the main join's shuffle volume drops to the
-        // surviving rows (h10 sf30: the quarter-filtered orders dim keeps
-        // 1.7 M of 45 M orderkeys; the 60 M-row / 1.8 GB lineitem shuffle
-        // shrinks ~25×). Sharing the dim subtree inside the subquery
-        // expression is safe — Spark's own InjectRuntimeFilter does the
-        // same, and RewritePredicateSubquery dedups on conversion.
+        // the reference's equality inference narrows BOTH sides); a key
+        // domain that overflows the inline-literal tier leaves the join as
+        // it is
         val prunes = keyPairs
           .filter { case (factKey, _) => !alreadyPruned(fact, factKey) }
           .flatMap { case (factKey, dimKey) =>
             probeTarget(dimKey).flatMap { target =>
-            val keyPlan = Project(Seq(dimKey), target)
-            probe(keyPlan, maxIn) match {
-              case InKeys(lits) => Some(inPred(factKey, lits))
-              case Overflow if maxBcastKeys > 0 =>
-                // countProbe EXECUTES a distinct-count of the dim at
-                // planning time — only pay it when the broadcast tier can
-                // actually accept the answer (it is off by default locally)
-                val n = countProbe(keyPlan)
-                if (n > 0 && n <= maxBcastKeys)
-                  Some(InSubquery(Seq(factKey),
-                    ListQuery(keyPlan, Seq.empty, NamedExpression.newExprId,
-                      keyPlan.output.length, Seq.empty,
-                      Some(HintInfo(Some(BROADCAST))))))
-                else None
-              case _ => None
-            }
+              probe(Project(Seq(dimKey), target), maxIn) match {
+                case InKeys(lits) => Some(inPred(factKey, lits))
+                case _ => None
+              }
             }
           }
         if (prunes.isEmpty) j

@@ -263,48 +263,10 @@ class LayoutJoinReorder(spark: SparkSession)
     val chosen = layoutEdges.maxBy { case (u, v) => sizes(u) + sizes(v) }
 
     // every OTHER relation must be join-order-neutral (its own filters AND
-    // any not-yet-pushed outer conjunct targeting it) — EXCEPT, under the
-    // round-15 size tier, a filtered dim that is both TINY (broadcast
-    // class: its join adds no exchange wherever it lands) and ≥ 2 join
-    // hops from the layout pair. Distance ≥ 2 means its prune reaches the
-    // pair's fact only transitively (h05's region → nation → supplier →
-    // lineitem), so delaying it costs broadcast-stream rows, not a scan
-    // prune; a DIRECTLY-connected filtered dim (TPC-H Q3's customer, Q8's
-    // part) pre-prunes a pair scan via the semi-join tier and must keep
-    // its textual position. Default OFF: the committed sf30 interleaved
-    // A/B measured the reordered h05 a wash-to-slight-loss (5.24 ON vs
-    // 5.00 OFF s median, load 22-25, bench/AB_sf30_h05_dimtier.json;
-    // a quiet re-attempt in r15 was burst-hit at load 16-26 and is not
-    // citable) — the textual and rebuilt orders shuffle comparable bytes
-    // once layouts serve the pair, so the tier ships as an opt-in
-    // (`spark.graft.joinReorder.filteredDimTier=true`) for deployments
-    // whose dim filters are colder than ours.
+    // any not-yet-pushed outer conjunct targeting it)
     val pairSet = Set(chosen._1, chosen._2)
-    val tierOn = spark.conf
-      .getOption(LayoutJoinReorder.FILTERED_DIM_TIER_KEY)
-      .flatMap(v => scala.util.Try(v.toBoolean).toOption)
-      .getOrElse(false)
-    val tierMaxBytes = spark.conf
-      .getOption(LayoutJoinReorder.FILTERED_DIM_MAX_BYTES_KEY)
-      .flatMap(v => scala.util.Try(BigInt(v)).toOption)
-      .getOrElse(BigInt(64L << 20))
-    // BFS hop distance from the pair over the equi-edge graph
-    val dist = Array.fill(units.length)(Int.MaxValue)
-    dist(chosen._1) = 0; dist(chosen._2) = 0
-    val bfs = scala.collection.mutable.Queue(chosen._1, chosen._2)
-    while (bfs.nonEmpty) {
-      val u = bfs.dequeue()
-      edgeKeys.keys.foreach { case (a, b) =>
-        val next = if (a == u) b else if (b == u) a else -1
-        if (next >= 0 && dist(next) == Int.MaxValue) {
-          dist(next) = dist(u) + 1
-          bfs.enqueue(next)
-        }
-      }
-    }
     if (units.indices.exists { i =>
-      !pairSet(i) && (outerSensitive(i) || orderSensitive(units(i))) &&
-        !(tierOn && sizes(i) <= tierMaxBytes && dist(i) >= 2)
+      !pairSet(i) && (outerSensitive(i) || orderSensitive(units(i)))
     }) return root
 
     // ── greedy left-deep order: pair first (textual order within), then
@@ -351,7 +313,4 @@ class LayoutJoinReorder(spark: SparkSession)
 
 object LayoutJoinReorder {
   val KEY = "spark.graft.joinReorder"
-  val FILTERED_DIM_TIER_KEY = "spark.graft.joinReorder.filteredDimTier"
-  val FILTERED_DIM_MAX_BYTES_KEY =
-    "spark.graft.joinReorder.filteredDimMaxBytes"
 }

@@ -4,10 +4,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.BindReferences.bindReferences
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate, Partial}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.expressions.codegen._
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{CodegenSupport, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
@@ -29,17 +28,11 @@ import org.apache.spark.sql.types._
   * value produces (≤ 7 lineitems per order) — it stays L1-resident, and
   * its memory bound is the LARGEST RUN, not the key cardinality, so the
   * operator needs no spill path at any scale where the layout contract
-  * holds (the layout's sort key runs are row-group-bounded). Degenerate
-  * runs (a near-constant prefix) are kept safe on BOTH legs: in Partial
-  * mode `maxRunRows` caps the map — at the cap the run flushes mid-run
-  * (legal: downstream merges partial rows), hard-bounding memory at any
-  * input; in Complete mode a mid-run flush would emit duplicate groups,
-  * so the REWRITE is gated instead — it only fires when the leading
-  * prefix attribute traces to a bucketed/sorted layout scan column
-  * (StreamingSortedAggregate.prefixFromLayout), whose bucket key is
-  * high-cardinality by layout construction. An SMJ-reported join-key
-  * order over a non-layout (e.g. small-dim) key can therefore never
-  * select the unbounded leg.
+  * holds (the layout's sort key runs are row-group-bounded). The
+  * operator runs PARTIAL aggregation only, so degenerate runs (a
+  * near-constant prefix) stay safe too: `maxRunRows` caps the map — at
+  * the cap the run flushes mid-run (legal: the downstream final merge
+  * recombines the partial rows), hard-bounding memory at any input.
   *
   * Whole-stage codegen: per input row — build the full grouping key
   * (inline UnsafeProjection), compare the prefix against the running
@@ -51,23 +44,13 @@ import org.apache.spark.sql.types._
   * buffer types keep Spark's hash aggregate.
   */
 case class RunHashAggregateExec(
-    requiredChildDistributionExpressions: Option[Seq[Expression]],
     groupingExpressions: Seq[NamedExpression],
     prefixExpressions: Seq[NamedExpression],
     aggregateExpressions: Seq[AggregateExpression],
-    aggregateAttributes: Seq[Attribute],
     resultExpressions: Seq[NamedExpression],
     keyOrdering: Seq[SortOrder],
     maxRunRows: Int,
     child: SparkPlan) extends UnaryExecNode with CodegenSupport {
-
-  /** Partial-mode only: a mid-run flush emits partial rows the downstream
-    * merge combines, so capping the map is semantics-free; in Complete
-    * mode the cap is ignored (the rewrite rule gates that leg instead). */
-  private def capRows: Int = if (partialMode) maxRunRows else 0
-
-  private def partialMode: Boolean =
-    aggregateExpressions.headOption.exists(_.mode == Partial)
 
   private def aggregateFunctions: Seq[DeclarativeAggregate] =
     aggregateExpressions.map(_.aggregateFunction
@@ -79,10 +62,10 @@ case class RunHashAggregateExec(
   private def groupingAttrs: Seq[Attribute] =
     groupingExpressions.map(_.toAttribute)
 
+  /** Partial results pass raw buffers, which the planner names by the
+    * functions' inputAggBufferAttributes. */
   private def resultInputAttrs: Seq[Attribute] =
-    if (partialMode)
-      groupingAttrs ++ aggregateFunctions.flatMap(_.inputAggBufferAttributes)
-    else groupingAttrs ++ aggregateAttributes
+    groupingAttrs ++ aggregateFunctions.flatMap(_.inputAggBufferAttributes)
 
   override def output: Seq[Attribute] = resultExpressions.map(_.toAttribute)
 
@@ -91,13 +74,6 @@ case class RunHashAggregateExec(
       "number of output rows"),
     "maxRunGroups" -> SQLMetrics.createMetric(sparkContext,
       "max groups in one run"))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    requiredChildDistributionExpressions match {
-      case Some(exprs) if exprs.isEmpty => AllTuples :: Nil
-      case Some(exprs) => ClusteredDistribution(exprs) :: Nil
-      case None => UnspecifiedDistribution :: Nil
-    }
 
   // the rewrite rule is the ordering guarantee (the child may UNDER-report
   // its order through SMJ) — see StreamingSortedAggregateExec
@@ -127,8 +103,6 @@ case class RunHashAggregateExec(
     val prefixExprs = prefixExpressions
     val initExprs = aggFns.flatMap(_.initialValues)
     val updateExprs = aggFns.flatMap(_.updateExpressions)
-    val evalExprs: Seq[Expression] =
-      if (partialMode) bufAttrs else aggFns.map(_.evaluateExpression)
     val resExprs = resultExpressions
     val resInAttrs = resultInputAttrs
     child.execute().mapPartitions { iter =>
@@ -138,8 +112,6 @@ case class RunHashAggregateExec(
         private val initProj = MutableProjection.create(initExprs, Nil)
         private val updateProj =
           MutableProjection.create(updateExprs, bufAttrs ++ childOutput)
-        private val evalProj = UnsafeProjection.create(
-          bindReferences[Expression](evalExprs, bufAttrs))
         private val resultProj = UnsafeProjection.create(resExprs, resInAttrs)
         private val updateJoin = new JoinedRow
         private val resultJoin = new JoinedRow
@@ -161,7 +133,7 @@ case class RunHashAggregateExec(
           flushIdx += 1
           if (flushIdx == flush.length) flush = null
           numOutput += 1
-          resultProj(resultJoin(e.getKey, evalProj(e.getValue)))
+          resultProj(resultJoin(e.getKey, e.getValue))
         }
 
         private def snapshotAndClear(): Unit = {
@@ -187,9 +159,9 @@ case class RunHashAggregateExec(
               }
             }
             update(row)
-            // partial-mode memory cap: flush the run's map mid-run (the
-            // downstream merge recombines the partial rows)
-            if (capRows > 0 && map.size() >= capRows) {
+            // memory cap: flush the run's map mid-run (the downstream
+            // merge recombines the partial rows)
+            if (maxRunRows > 0 && map.size() >= maxRunRows) {
               snapshotAndClear()
               return true
             }
@@ -275,39 +247,10 @@ case class RunHashAggregateExec(
       BoundReference(i, a.dataType, nullable = true).genCode(ctx)
     }
     ctx.INPUT_ROW = null
-    val resultVars: Seq[ExprCode] = if (partialMode) {
-      ctx.currentVars = keyCodes.map(_.copy(code = EmptyBlock)) ++
-        bufCodes.map(_.copy(code = EmptyBlock))
-      bindReferences[Expression](resultExpressions, resultInputAttrs)
-        .map(_.genCode(ctx))
-    } else {
-      ctx.currentVars = bufCodes.map(_.copy(code = EmptyBlock))
-      val evalCodes = bindReferences[Expression](
-        aggregateFunctions.map(_.evaluateExpression), bufferAttrs)
-        .map(_.genCode(ctx))
-      ctx.currentVars = keyCodes.map(_.copy(code = EmptyBlock)) ++
-        evalCodes.map(_.copy(code = EmptyBlock))
-      val rv = bindReferences[Expression](resultExpressions, resultInputAttrs)
-        .map(_.genCode(ctx))
-      // prepend the eval blocks to the first result code so everything
-      // lands inside the loop body in order
-      return s"""
-        |$maxRun.set(Math.max($maxRun.value(), (long) $mapVar.size()));
-        |java.util.Iterator $it = $mapVar.entrySet().iterator();
-        |while ($it.hasNext()) {
-        |  java.util.Map.Entry $entry = (java.util.Map.Entry) $it.next();
-        |  UnsafeRow $keyRow = (UnsafeRow) $entry.getKey();
-        |  UnsafeRow $bufRow = (UnsafeRow) $entry.getValue();
-        |  ${keyCodes.map(_.code.toString).mkString("\n")}
-        |  ${bufCodes.map(_.code.toString).mkString("\n")}
-        |  ${evalCodes.map(_.code.toString).mkString("\n")}
-        |  ${rv.map(_.code.toString).mkString("\n")}
-        |  $numOutput.add(1);
-        |  ${consume(ctx, rv.map(_.copy(code = EmptyBlock)))}
-        |}
-        |$mapVar.clear();
-      """.stripMargin
-    }
+    ctx.currentVars = keyCodes.map(_.copy(code = EmptyBlock)) ++
+      bufCodes.map(_.copy(code = EmptyBlock))
+    val resultVars = bindReferences[Expression](resultExpressions,
+      resultInputAttrs).map(_.genCode(ctx))
     s"""
       |$maxRun.set(Math.max($maxRun.value(), (long) $mapVar.size()));
       |java.util.Iterator $it = $mapVar.entrySet().iterator();
@@ -406,13 +349,13 @@ case class RunHashAggregateExec(
         |}
       """.stripMargin
     }.mkString("\n")
-    // partial-mode memory cap: flush the run's map mid-run at the cap
-    // (the downstream merge recombines the partial rows); prefix state
-    // is untouched, so the run simply continues into a fresh map
-    val capFlush = if (capRows > 0) {
+    // memory cap: flush the run's map mid-run at the cap (the
+    // downstream merge recombines the partial rows); prefix state is
+    // untouched, so the run simply continues into a fresh map
+    val capFlush = if (maxRunRows > 0) {
       val f = genFlush(ctx)
       s"""
-        |if ($mapVar.size() >= $capRows) {
+        |if ($mapVar.size() >= $maxRunRows) {
         |  $f
         |}
       """.stripMargin

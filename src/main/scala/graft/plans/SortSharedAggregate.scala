@@ -27,16 +27,9 @@ import org.apache.spark.sql.execution.window.WindowExec
   * both operators: the aggregate becomes a streaming sort-aggregate (no
   * hash table) and the window's sort disappears (prefix-satisfied).
   *
-  * Matched physical shapes (post-EnsureRequirements, AQE stage-prep):
+  * Matched physical shape (post-EnsureRequirements, AQE stage-prep):
   *
-  * 1. `Window(P, ∅) ← Sort(P) ← [Project*] ← HashAgg(Complete, G⊇P)`
-  *    (the already-co-partitioned single-stage shape that
-  *    [[CollapseSingleStageAggregate]] produces at soak scale; no
-  *    exchange anywhere between window and aggregate, so partitioning
-  *    is untouched):
-  *    → `Window ← [Project*] ← SortAgg(Complete) ← Sort(P ++ rest)`.
-  *
-  * 2. `Window(P, ∅) ← Sort(P) ← Exchange(hash P) ← [Project*] ←
+  *    `Window(P, ∅) ← Sort(P) ← Exchange(hash P) ← [Project*] ←
   *    HashAgg(Final, G⊇P) ← Exchange(hash G) ← HashAgg(Partial)`
   *    (the broadcast-join shape — two exchanges):
   *    → `Window ← [Project*] ← SortAgg(Complete) ← Sort(P ++ rest) ←
@@ -48,35 +41,23 @@ import org.apache.spark.sql.execution.window.WindowExec
   *
   * Fire conditions (all required): the window has NO order spec (its
   * required ordering is exactly `P asc`), P are bare attributes, every
-  * P attribute is a grouping key, modes are uniform
-  * Complete/Final+Partial, non-streaming, no distinct path. The rewrite
-  * never changes what any exchange partitions on except case 2's
-  * provably-compatible hash(G)→hash(P) narrowing.
+  * P attribute is a grouping key, modes are uniform Final+Partial,
+  * non-streaming, no distinct path. The rewrite never changes what any
+  * exchange partitions on except the provably-compatible
+  * hash(G)→hash(P) narrowing.
   *
   * MEASURED OUTCOME (round 11, sf30 soak, interleaved A/Bs committed in
-  * SCALE.md): shape 2 (eliminates an exchange AND the near-useless
-  * partial pass) WINS — h21 sf0.1 on-median 0.649 s vs off 0.758 s — and
-  * ships default-ON via `spark.graft.sortSharedAgg`. Shape 1 (in-place
-  * hash→sort swap, no exchange change) is a single-box LOSS and ships
-  * default-OFF behind `spark.graft.sortSharedAgg.inPlace`: the stage
-  * breakdown shows the 59.4 M-group hash table (69.9 s cumulative
-  * aggTime) replaced by a TWO-key sort (23.2 s — no radix path; the
-  * window's displaced single-bigint sort radix-sorted in 2.6 s) plus an
-  * interpreted SortAggregateExec (no whole-stage codegen), a net wash to
-  * ~5% loss (two 5-pair interleaved A/Bs). The trade is per-node CPU,
-  * not network, so it does not reverse on a cluster — the reference wins
-  * this shape only because its StreamingAggregationOperator is as
-  * codegen-tight as its hash aggregate.
+  * SCALE.md): eliminating an exchange AND the near-useless partial pass
+  * WINS — h21 sf0.1 on-median 0.649 s vs off 0.758 s — and ships
+  * default-ON via `spark.graft.sortSharedAgg`. The in-place hash→sort
+  * swap of an already co-partitioned Complete aggregate (no exchange
+  * change) measured a single-box wash-to-loss on per-node CPU and was
+  * removed (SCALE.md round 11).
   */
 class SortSharedAggregate(spark: SparkSession) extends Rule[SparkPlan] {
 
   private def enabled: Boolean =
     spark.conf.getOption(SortSharedAggregate.KEY).forall(_.toBoolean)
-
-  /** Shape 1 (in-place swap, no exchange eliminated): measured losing
-    * single-box (see class doc) — explicit opt-in. */
-  private def inPlaceEnabled: Boolean =
-    spark.conf.getOption(SortSharedAggregate.IN_PLACE_KEY).exists(_.toBoolean)
 
   /** Strip a chain of ProjectExec, returning (projects outer→inner, core). */
   private def stripProjects(p: SparkPlan): (List[ProjectExec], SparkPlan) =
@@ -108,27 +89,11 @@ class SortSharedAggregate(spark: SparkSession) extends Rule[SparkPlan] {
   override def apply(plan: SparkPlan): SparkPlan = {
     if (!enabled) return plan
     plan.transformUp {
-      // shape 1: co-partitioned Complete aggregate, no exchange in between
       case w @ WindowExec(_, partition, Seq(), sort: SortExec)
           if partition.nonEmpty && partition.forall(_.isInstanceOf[Attribute]) =>
         val (projs, core) = stripProjects(sort.child)
         core match {
-          case agg: HashAggregateExec if inPlaceEnabled && !agg.isStreaming &&
-              agg.aggregateExpressions.forall(_.mode == Complete) =>
-            partitionFirst(partition, agg.groupingExpressions) match {
-              case Some(ordered) =>
-                val sortKeys = ordered.map(g =>
-                  SortOrder(unalias(g), Ascending))
-                val sorted = SortExec(sortKeys, global = false, agg.child)
-                val sortAgg = SortAggregateExec(
-                  agg.requiredChildDistributionExpressions, agg.isStreaming,
-                  agg.numShufflePartitions, agg.groupingExpressions,
-                  agg.aggregateExpressions, agg.aggregateAttributes,
-                  agg.initialInputBufferOffset, agg.resultExpressions, sorted)
-                w.copy(child = rebuildProjects(projs, sortAgg))
-              case None => w
-            }
-          // shape 2: window's own exchange above a partial+final pair
+          // the window's own exchange above a partial+final pair
           case ex @ ShuffleExchangeExec(hp: HashPartitioning, exChild, _, _) =>
             val (projs2, core2) = stripProjects(exChild)
             core2 match {
@@ -186,5 +151,4 @@ class SortSharedAggregate(spark: SparkSession) extends Rule[SparkPlan] {
 
 object SortSharedAggregate {
   val KEY = "spark.graft.sortSharedAgg"
-  val IN_PLACE_KEY = "spark.graft.sortSharedAgg.inPlace"
 }

@@ -614,66 +614,14 @@ class StreamingSortedAggregate(spark: SparkSession) extends Rule[SparkPlan] {
     else Some((prefix, pairs.map(p => byId(p._2.get))))
   }
 
-  /** Does `attr`, seen at the top of `p`, trace down to a leaf scan column
-    * that is a BUCKET KEY (or reported sort-order head) of a bucketed/
-    * sorted layout? The trace follows pure renames, filter/sort/exchange
-    * pass-through, and — at an equi-join — the join-key EQUALITY to the
-    * partner side (o_orderkey = l_orderkey makes either side's layout
-    * evidence count). This is the Complete-mode fire guard for the hybrid:
-    * a layout bucket key is high-cardinality by layout construction, so
-    * runs stay short; an SMJ-reported order over a non-layout key (e.g. a
-    * small-dim join key) carries no such bound and must not select the
-    * leg that has no mid-run escape. */
-  private def prefixFromLayout(p: SparkPlan, attr: Attribute): Boolean = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, ProjectExec, FilterExec, SortExec}
-    p match {
-      case scan: FileSourceScanExec =>
-        scan.relation.bucketSpec.exists(
-          _.bucketColumnNames.headOption.contains(attr.name)) ||
-          scan.outputOrdering.headOption.exists {
-            case SortOrder(a: Attribute, _, _, _) => a.exprId == attr.exprId
-            case _ => false
-          }
-      case proj: ProjectExec =>
-        proj.projectList.collectFirst {
-          case al @ Alias(c: Attribute, _) if al.exprId == attr.exprId => c
-          case a: Attribute if a.exprId == attr.exprId => a
-        }.exists(next => prefixFromLayout(proj.child, next))
-      case f: FilterExec => prefixFromLayout(f.child, attr)
-      case s: SortExec => prefixFromLayout(s.child, attr)
-      case e: org.apache.spark.sql.execution.exchange.Exchange =>
-        prefixFromLayout(e.child, attr)
-      case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec =>
-        joinTrace(j.left, j.right, j.leftKeys, j.rightKeys, attr)
-      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec =>
-        joinTrace(j.left, j.right, j.leftKeys, j.rightKeys, attr)
-      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
-        joinTrace(j.left, j.right, j.leftKeys, j.rightKeys, attr)
-      case u: UnaryExecNode if u.child.outputSet.contains(attr) =>
-        prefixFromLayout(u.child, attr)
-      case _ => false
-    }
-  }
-
-  private def joinTrace(left: SparkPlan, right: SparkPlan,
-      leftKeys: Seq[Expression], rightKeys: Seq[Expression],
-      attr: Attribute): Boolean = {
-    def side(s: SparkPlan): Boolean =
-      s.outputSet.contains(attr) && prefixFromLayout(s, attr)
-    def partner(myKeys: Seq[Expression], otherKeys: Seq[Expression],
-        other: SparkPlan): Boolean =
-      myKeys.zip(otherKeys).exists {
-        case (m: AttributeReference, o: AttributeReference)
-            if m.exprId == attr.exprId =>
-          prefixFromLayout(other, o)
-        case _ => false
-      }
-    side(left) || side(right) ||
-      partner(leftKeys, rightKeys, right) ||
-      partner(rightKeys, leftKeys, left)
-  }
-
   private def rewriteHybrid(agg: BaseAggregateExec): SparkPlan = {
+    // Partial mode only: its run map is capped at maxRunRows (a mid-run
+    // flush just emits a duplicate partial group the final merge folds).
+    // The Complete-mode leg had no such escape and measured a loss at sf30
+    // (q22 4.85 s vs 2.79 s) and a wash at sf100
+    // (bench/AB_sf{30,100}_q22_hybrid_equiv.json).
+    if (!agg.aggregateExpressions.headOption.exists(_.mode == Partial))
+      return agg
     val bufferOk = agg.aggregateExpressions
       .flatMap(_.aggregateFunction.aggBufferAttributes)
       .forall(b => fixedWidth(b.dataType))
@@ -688,25 +636,9 @@ class StreamingSortedAggregate(spark: SparkSession) extends Rule[SparkPlan] {
     // uses; an unresolvable link conservatively keeps the hash agg.
     // A malformed conf value falls back to the 64 MB default (the same
     // defensive read as Bucketing's conf parsing).
-    val minBytes = spark.conf
+    val floor = spark.conf
       .getOption(StreamingSortedAggregate.HYBRID_MIN_KEY)
       .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(64L << 20)
-    // Complete mode pays the per-run machinery on EVERY row with no
-    // mid-run escape and no partial-pass reduction to amortise it, so its
-    // crossover vs a global hash sits far higher than Partial's (round-16
-    // interleaved A/Bs on the q22 shape: sf30, 3.1 GB lineitem / 4.2 M
-    // groups — hash wins, off_min 2.79 s vs on_min 4.85 s; sf100, 10 GB /
-    // 14 M groups where the global hash itself is multi-GB — a wash,
-    // on_min 6.70 vs off_min 6.93; bench/AB_sf{30,100}_q22_hybrid_equiv
-    // .json). Floor the Complete rewrite at the measured crossover,
-    // derived from input size (scale-adaptive, never from core count).
-    val isComplete =
-      agg.aggregateExpressions.headOption.exists(_.mode == Complete)
-    val completeMinBytes = spark.conf
-      .getOption(StreamingSortedAggregate.HYBRID_COMPLETE_MIN_KEY)
-      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(8L << 30)
-    val floor =
-      if (isComplete) math.max(minBytes, completeMinBytes) else minBytes
     if (floor > 0) {
       val leafBytes = agg.child.logicalLink
         .map(_.collectLeaves().map(_.stats.sizeInBytes).sum)
@@ -718,30 +650,10 @@ class StreamingSortedAggregate(spark: SparkSession) extends Rule[SparkPlan] {
       .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(1 << 20)
     strictPrefix(agg) match {
       case Some((ordering, prefixExprs)) =>
-        // Complete mode has no mid-run escape (a mid-run flush would emit
-        // duplicate group rows), so its memory bound rests entirely on the
-        // prefix being short-runned — require the leading prefix column to
-        // trace to a bucketed/sorted layout scan (high-cardinality by
-        // layout construction; the reference's preGroupedSymbols likewise
-        // only trusts connector-layout local properties). Partial mode is
-        // capped at maxRunRows inside the operator and may fire on any
-        // prefix. `hybridCompleteRequireLayout=false` lifts the guard for
-        // operator-behavior specs over synthetic sorted input.
-        val completeMode =
-          agg.aggregateExpressions.headOption.exists(_.mode == Complete)
-        val requireLayout = spark.conf
-          .getOption(StreamingSortedAggregate.HYBRID_REQUIRE_LAYOUT_KEY)
-          .forall(v => scala.util.Try(v.toBoolean).getOrElse(true))
-        val headSafe = !requireLayout || prefixExprs.headOption
-          .flatMap(underlying)
-          .exists(a => prefixFromLayout(agg.child, a))
-        if (completeMode && !headSafe) agg
-        else RunHashAggregateExec(
-          agg.requiredChildDistributionExpressions,
+        RunHashAggregateExec(
           agg.groupingExpressions,
           prefixExprs,
           agg.aggregateExpressions,
-          agg.aggregateAttributes,
           agg.resultExpressions,
           ordering,
           maxRunRows,
@@ -792,9 +704,5 @@ object StreamingSortedAggregate {
   val KEY = "spark.graft.streamingSortedAgg"
   val HYBRID_KEY = "spark.graft.streamingSortedAgg.hybrid"
   val HYBRID_MIN_KEY = "spark.graft.streamingSortedAgg.hybridMinBytes"
-  val HYBRID_COMPLETE_MIN_KEY =
-    "spark.graft.streamingSortedAgg.hybridCompleteMinBytes"
   val HYBRID_MAX_RUN_KEY = "spark.graft.streamingSortedAgg.hybridMaxRunRows"
-  val HYBRID_REQUIRE_LAYOUT_KEY =
-    "spark.graft.streamingSortedAgg.hybridCompleteRequireLayout"
 }

@@ -7,222 +7,6 @@ import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.types.{BooleanType, IntegerType}
-
-/** Fuse a UNION ALL of structurally-identical aggregates over the SAME
-  * relation — branches differing only in their filter predicate and in
-  * constant "channel" output columns — into ONE scan.
-  *
-  * The multi-channel shape (TPC-DS q33/q71/q5; ds03 here) is written as
-  * one CTE per channel:
-  *
-  *   SELECT k, agg(x), 'c1' FROM R WHERE p1 GROUP BY k
-  *   UNION ALL SELECT k, agg(x), 'c2' FROM R WHERE p2 GROUP BY k ...
-  *
-  * and plans n full scans of R. Rewritten: one scan, filtered to
-  * p1 ∨ … ∨ pn (pushable), EXPANDed one copy per branch (tag i, keep_i =
-  * p_i), filtered on keep, aggregated by (G, tag) — the grouping-sets
-  * execution shape, reused for channels. The reference reads the fact
-  * once per channel too; at 100 TB one fact read instead of n is the
-  * dominant win, and on the sf30 soak the three lineitem decodes collapse
-  * into one.
-  *
-  * Exactness: a branch's aggregate sees exactly the rows passing its
-  * predicate — post-Expand copy i holds keep_i = p_i(row) (NULL drops,
-  * matching Filter semantics), so group (g, i) aggregates precisely the
-  * branch-i rows; rows passing several predicates contribute one copy
-  * per branch, exactly as n scans would. The fusion never decomposes an
-  * aggregate call, so ANY aggregate (distinct, percentile, collect) is
-  * eligible. The output multiset equals the union's, so it is safe under
-  * a downstream Distinct (UNION) as well.
-  *
-  * Guards (all must hold, else untouched): every branch is
-  * Aggregate → [attribute-only Projects] → [one Filter] → LogicalRelation,
-  * relations canonical-equal, groupings and output expressions
-  * semantically equal after remapping onto branch 0's attributes, and
-  * every mismatching output position is a constant in ALL branches (the
-  * channel tags, re-emitted as CASE over the branch id).
-  * `spark.graft.fuseUnionScans=false` disables.
-  */
-class FuseUnionAggregates(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  /** DEFAULT-OFF: interleaved sf30 A/Bs measured the fusion LOSING ~15%
-    * single-box on the ds03 target (ON 8.7 s vs OFF 7.6 s median, after
-    * the precomputed-boolean fix; bench/BENCH_sf30_r10_ds03_fuse_ab.json)
-    * — n·rows Expand copies cost more than the n−1 parquet decodes they
-    * save when the fixture sits in the page cache. Against remote object
-    * storage the trade reverses (one fact read instead of n IS the
-    * dominant term at 100 TB), so the rule ships as a cluster opt-in,
-    * exactness-spec'd and corpus-swept. */
-  private def enabled: Boolean =
-    spark.conf.getOption(FuseUnionAggregates.KEY).exists(_.toBoolean)
-
-  /** Bytes-based per-plan gate (round 11, the same posture as
-    * EagerAggregation.genericMinSavedFrac): with the tier enabled
-    * cluster-wide, fuse only when the shared relation's size estimate
-    * clears this floor — the n−1 scans the fusion saves only dominate
-    * the n·rows Expand copies when the fact is big enough that reading
-    * it is I/O-bound (remote object storage at 100 TB), while a
-    * page-cache-sized fixture re-decodes cheaper than it copies
-    * (the measured sf30 ds03 loss). 0 restores unconditional fusion. */
-  private def minBytes: BigInt =
-    BigInt(spark.conf.getOption(FuseUnionAggregates.MIN_BYTES_KEY)
-      .map(_.toLong).getOrElse(8L << 30))
-
-  private case class Branch(agg: Aggregate, cond: Option[Expression],
-      rel: LogicalRelation)
-
-  /** Aggregate → attr-only Projects → optional single Filter → relation. */
-  private def dissect(p: LogicalPlan): Option[Branch] = p match {
-    case agg @ Aggregate(_, _, input, _) =>
-      def peel(q: LogicalPlan, cond: Option[Expression]): Option[Branch] =
-        q match {
-          case Project(pl, c) if pl.forall(_.isInstanceOf[Attribute]) =>
-            peel(c, cond)
-          case Filter(f, c) if cond.isEmpty && f.deterministic &&
-              !f.exists(_.isInstanceOf[PlanExpression[_]]) =>
-            peel(c, Some(f))
-          case lr: LogicalRelation => Some(Branch(agg, cond, lr))
-          case _ => None
-        }
-      peel(input, None)
-    case _ => None
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
-    if (!plan.exists { case u: Union => u.children.length >= 2; case _ => false })
-      return plan
-    plan.transformDown {
-      case u @ Union(children, false, false) if children.length >= 2 &&
-          u.resolved =>
-        fuse(u).getOrElse(u)
-    }
-  }
-
-  private def fuse(u: Union): Option[LogicalPlan] = {
-    val branches = u.children.map(dissect)
-    if (branches.exists(_.isEmpty)) return None
-    val bs = branches.flatten
-    val b0 = bs.head
-    // same relation everywhere (schema included — canonical equality)
-    if (!bs.tail.forall(_.rel.canonicalized == b0.rel.canonicalized))
-      return None
-    if (b0.rel.stats.sizeInBytes < minBytes) return None
-    if (!bs.forall(b => b.agg.aggregateExpressions.forall(_.deterministic) &&
-      b.agg.groupingExpressions.forall(_.deterministic))) return None
-    // grouping sets (Expand below) would not dissect to a relation, so
-    // plain groupings only reach here
-
-    // remap every branch onto branch 0's attribute ids (positional — the
-    // relations canonicalize equal, so outputs align)
-    def remapper(b: Branch): Expression => Expression = {
-      val m: Map[ExprId, Attribute] =
-        b.rel.output.map(_.exprId).zip(b0.rel.output).toMap
-      e => e.transformUp {
-        case a: AttributeReference => m.getOrElse(a.exprId, a)
-      }
-    }
-    val remaps = bs.map(remapper)
-
-    // groupings must agree (as semantic sets)
-    val g0 = b0.agg.groupingExpressions
-    val sameGroups = bs.zip(remaps).forall { case (b, rm) =>
-      val gi = b.agg.groupingExpressions.map(rm)
-      gi.length == g0.length &&
-        gi.forall(g => g0.exists(_.semanticEquals(g))) &&
-        g0.forall(g => gi.exists(_.semanticEquals(g)))
-    }
-    if (!sameGroups) return None
-
-    // per output position: shared expression, or all-constant (tag)
-    val arity = b0.agg.aggregateExpressions.length
-    if (bs.exists(_.agg.aggregateExpressions.length != arity)) return None
-    def body(ne: NamedExpression): Expression = ne match {
-      case Alias(c, _) => c
-      case other => other
-    }
-    val tagValues = Array.ofDim[Option[Seq[Literal]]](arity)
-    for (j <- 0 until arity) {
-      val exprs = bs.zip(remaps).map { case (b, rm) =>
-        rm(body(b.agg.aggregateExpressions(j)))
-      }
-      val e0 = exprs.head
-      if (exprs.tail.forall(_.semanticEquals(e0))) tagValues(j) = None
-      else {
-        val lits = exprs.map {
-          case l: Literal => l
-          case _ => return None
-        }
-        // the union already type-coerced branch outputs; differing literal
-        // types would not have survived analysis
-        if (lits.map(_.dataType).distinct.length != 1) return None
-        tagValues(j) = Some(lits)
-      }
-    }
-    val conds = bs.zip(remaps).map { case (b, rm) =>
-      b.cond.map(rm).getOrElse(Literal.TrueLiteral)
-    }
-    if (tagValues.forall(_.isEmpty) &&
-      conds.tail.forall(_.semanticEquals(conds.head))) {
-      // nothing distinguishes the branches — leave duplicate-row unions
-      // (rare, intentional) alone
-      return None
-    }
-    val branchAttr = AttributeReference(
-      "_fuse_branch", IntegerType, nullable = false)()
-    val keepAttr = AttributeReference(
-      "_fuse_keep", BooleanType, nullable = true)()
-
-    // prune the shared scan to what the fused operators need; the OR of
-    // the raw predicates sits directly on the relation so the pushable
-    // parts reach the source stats
-    val needed = AttributeSet(
-      b0.agg.references ++ conds.flatMap(_.references))
-    val pruned = b0.rel.output.filter(needed.contains)
-    val filtered: LogicalPlan =
-      if (conds.exists(_ == Literal.TrueLiteral)) b0.rel
-      else Filter(conds.reduce(Or), b0.rel)
-    // evaluate each branch predicate ONCE per row here — whole-stage
-    // codegen's subexpression elimination shares common subtrees (e.g.
-    // one month(shipdate) feeding three range tests); the Expand copies
-    // below then carry a precomputed boolean instead of re-evaluating
-    // the predicate per copy (first cut cost n·rows evaluations and
-    // measured SLOWER than the n scans it replaced)
-    val keepAliases = conds.map(c => Alias(c, "_fuse_keep_in")())
-    val withKeeps = Project(pruned ++ keepAliases, filtered)
-
-    val expand = Expand(
-      keepAliases.zipWithIndex.map { case (k, i) =>
-        (pruned :+ Literal(i)) :+ k.toAttribute
-      },
-      (pruned :+ branchAttr) :+ keepAttr,
-      withKeeps)
-    val kept = Filter(keepAttr, expand)
-
-    val outAggExprs = b0.agg.aggregateExpressions.zipWithIndex.map {
-      case (ne, j) =>
-        tagValues(j) match {
-          case Some(lits) =>
-            val cases = lits.zipWithIndex.map { case (l, i) =>
-              (EqualTo(branchAttr, Literal(i)): Expression, l: Expression)
-            }
-            val name = ne.name
-            Alias(CaseWhen(cases.init, cases.last._2), name)(
-              exprId = ne.exprId, qualifier = ne.qualifier)
-          case None => ne
-        }
-    }
-    // output ids = branch 0's = the Union's own output ids, so parents
-    // re-bind without a shim Project
-    Some(Aggregate(g0 :+ branchAttr, outAggExprs, kept))
-  }
-}
-
-object FuseUnionAggregates {
-  val KEY = "spark.graft.fuseUnionScans"
-  val MIN_BYTES_KEY = "spark.graft.fuseUnionScans.minBytes"
-}
 
 /** Fuse a condition-less join tree of GLOBAL (single-row) aggregates over
   * the same relation — the TPC-DS q88 shape, one scalar subquery per time
@@ -232,9 +16,8 @@ object FuseUnionAggregates {
   *   (SELECT count(*) FROM R WHERE p1) s1, (SELECT count(*) FROM R WHERE p2) s2, …
   *   ⇒ SELECT count(*) FILTER (WHERE p1), count(*) FILTER (WHERE p2), … FROM R [WHERE p1 ∨ …]
   *
-  * Unlike the Expand-based union fusion this has NO row blowup — one pass,
-  * each branch's predicate becomes its aggregates' FILTER — so it is
-  * default-ON: n scans collapse to 1 with strictly less work (measured
+  * There is NO row blowup — one pass, each branch's predicate becomes its
+  * aggregates' FILTER — so it is default-ON: n scans collapse to 1 with strictly less work (measured
   * sf30 ds06: 4.4 s → sub-second). Exact for EVERY aggregate function
   * (a FILTERed aggregate sees precisely the branch's rows; a global
   * aggregate emits exactly one row on empty input either way), including

@@ -1206,7 +1206,7 @@ object TpcDsShapes {
     FROM w WHERE CAST(rev AS DOUBLE) > 0.5 * brand_rev
     ORDER BY brand, typ"""
 
-  // DS q65 shape: suppliers whose revenue is below half the average
+  // DS q65 shape: suppliers whose revenue is below 80% of the average
   // supplier revenue (agg + scalar AVG subquery + dim join back).
   private val DS65 = """
     WITH srev AS (
@@ -1217,7 +1217,7 @@ object TpcDsShapes {
     FROM srev JOIN supplier ON sk = s_suppkey
     JOIN nation ON s_nationkey = n_nationkey
     WHERE CAST(rev AS DOUBLE) <
-      0.5 * (SELECT avg(CAST(rev AS DOUBLE)) FROM srev)
+      0.8 * (SELECT avg(CAST(rev AS DOUBLE)) FROM srev)
     ORDER BY rev, s_name"""
 
   // DS q54 shape: Q1-1997 buyers' Q2 spend-change buckets.

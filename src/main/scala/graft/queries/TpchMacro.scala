@@ -237,8 +237,7 @@ object TpchMacro {
       // invisible (without runtime narrowing the full fact table shuffles
       // first — measured at sf30: 180 M rows / 6.2 GB shuffled to keep
       // 0.4%); the engine's DynamicSemiJoinPrune rule inlines the probed
-      // part keys as an InSet scan filter at plan time — round 7's
-      // hand-wired semiJoinPrune call, now on the canonical SQL path.
+      // part keys as an InSet scan filter at plan time.
       both("h02_min_cost_supplier", """
         SELECT s_acctbal, s_name, n_name, p_partkey, p_name, ps_supplycost
         FROM (
@@ -284,8 +283,8 @@ object TpchMacro {
       // lineitem BEFORE the window: group membership is decided per
       // partkey, so the per-group min is unchanged. The prune runs as a
       // DYNAMIC FILTER: at the soak scales '%red%' keeps ~13% of part
-      // (771 k keys at sf30) — over the IN-list tier, so semiJoinPrune
-      // picks the broadcast-semi tier and the 180 M-row fact never
+      // (771 k keys at sf30) — over the IN-list tier, so
+      // DynamicSemiJoinPrune picks the broadcast-semi tier and the 180 M-row fact never
       // shuffles for the semi join (only the 23 M surviving rows shuffle,
       // for the window). Oracle keeps the IN-subquery form.
       both("h09_product_profit", """

@@ -176,106 +176,6 @@ class EagerAggregationSpec extends AnyFunSuite {
     assert(rows(spark.sql(outerSide)) == expect)
   }
 
-  private val GENERIC_SQL =
-    """SELECT dk, dtag,
-      |  sum(fv) AS s, count(fv) AS c, min(fv) AS mn, max(fv) AS mx
-      |FROM ea_dim JOIN ea_fact ON dk = fk
-      |GROUP BY dk, dtag""".stripMargin
-
-  test("generic eager push (variant 3, no twin): size-floor gated, exact when it fires") {
-    // tiny parquet fact is below the 256 MB default floor: untouched
-    assert(!fired(spark.sql(GENERIC_SQL)))
-    val expect = withConf(
-      EagerAggregationReuse.GENERIC_KEY -> "false",
-      EagerAggregationReuse.GENERIC_MIN_BYTES_KEY -> "0") {
-      val off = spark.sql(GENERIC_SQL)
-      assert(!fired(off))
-      rows(off)
-    }
-    // opted in with the floor dropped: fires without any twin subquery,
-    // exact under duplicate dim keys (dk=1 twice) and NULL fact values
-    withConf(EagerAggregationReuse.GENERIC_KEY -> "true",
-      EagerAggregationReuse.GENERIC_MIN_BYTES_KEY -> "0",
-      EagerAggregationReuse.GENERIC_MIN_SAVED_KEY -> "0") {
-      val df = spark.sql(GENERIC_SQL)
-      assert(fired(df), df.queryExecution.optimizedPlan.toString.take(1500))
-      assert(rows(df) == expect)
-    }
-  }
-
-  test("generic eager push: relaxed shapes (extra A-side group col, no key pin) stay exact") {
-    // grouping on a second fact-side column: the generic pre groups by
-    // (ftag, fk) — exact under dim-key duplication
-    val pairGrouped =
-      """SELECT fk, ftag, sum(fv) AS s, count(fv) AS c
-        |FROM ea_dim JOIN ea_fact ON dk = fk
-        |GROUP BY fk, ftag""".stripMargin
-    // grouping without the join key at all: sum-of-sums needs no key pin
-    val noKey =
-      """SELECT dtag, sum(fv) AS s, count(fv) AS c, max(fv) AS mx
-        |FROM ea_dim JOIN ea_fact ON dk = fk
-        |GROUP BY dtag""".stripMargin
-    for (sql <- Seq(pairGrouped, noKey)) {
-      val expect = withConf(EagerAggregationReuse.GENERIC_KEY -> "false") {
-        val off = spark.sql(sql)
-        assert(!fired(off))
-        rows(off)
-      }
-      withConf(EagerAggregationReuse.GENERIC_KEY -> "true",
-        EagerAggregationReuse.GENERIC_MIN_BYTES_KEY -> "0",
-        EagerAggregationReuse.GENERIC_MIN_SAVED_KEY -> "0") {
-        val df = spark.sql(sql)
-        assert(fired(df), df.queryExecution.optimizedPlan.toString.take(1500))
-        assert(rows(df) == expect)
-      }
-    }
-  }
-
-  test("generic cost gate: off on a pruned narrow shuffle, on under stats-proven reduction") {
-    // The round-10 sf30 losses (q22/h10) shuffle an already-pruned
-    // key+measure projection: nothing for the pre-aggregate to save, so
-    // even with the tier globally enabled the bytes gate must keep it
-    // OFF — a cluster can set spark.graft.eagerAgg.generic=true once
-    // without per-query flags.
-    withConf(EagerAggregationReuse.GENERIC_KEY -> "true",
-      EagerAggregationReuse.GENERIC_MIN_BYTES_KEY -> "0") {
-      assert(!fired(spark.sql(GENERIC_SQL)))
-    }
-    // With column statistics (ANALYZE TABLE ... FOR COLUMNS + CBO, the
-    // cluster posture) the key's distinct count proves the row
-    // reduction, and the gate admits the push — exact vs the rule-off run.
-    import spark.implicits._
-    spark.sql("DROP TABLE IF EXISTS ea_fact_stats")
-    (0 until 400).map(i => (i % 4L, i.toLong, s"t$i"))
-      .toDF("fk", "fv", "ftag")
-      .write.mode("overwrite").saveAsTable("ea_fact_stats")
-    spark.sql("ANALYZE TABLE ea_fact_stats COMPUTE STATISTICS FOR COLUMNS fk")
-    val sql =
-      """SELECT dk, dtag, sum(fv) AS s, count(fv) AS c
-        |FROM ea_dim JOIN ea_fact_stats ON dk = fk
-        |GROUP BY dk, dtag""".stripMargin
-    val expect = withConf(EagerAggregationReuse.GENERIC_KEY -> "false",
-      "spark.sql.cbo.enabled" -> "true") {
-      val off = spark.sql(sql)
-      assert(!fired(off))
-      rows(off)
-    }
-    withConf(EagerAggregationReuse.GENERIC_KEY -> "true",
-      EagerAggregationReuse.GENERIC_MIN_BYTES_KEY -> "0",
-      "spark.sql.cbo.enabled" -> "true") {
-      val df = spark.sql(sql)
-      assert(fired(df), df.queryExecution.optimizedPlan.toString.take(1500))
-      assert(rows(df) == expect)
-    }
-    spark.sql("DROP TABLE IF EXISTS ea_fact_stats")
-  }
-
-  test("generic eager push is default-off (opt-in only)") {
-    withConf(EagerAggregationReuse.GENERIC_MIN_BYTES_KEY -> "0") {
-      assert(!fired(spark.sql(GENERIC_SQL)))
-    }
-  }
-
   test("h18 canonical SQL takes the push and matches the rule-off result") {
     val h18 =
       """SELECT c_name, c_custkey, o_orderkey, o_orderdate,

@@ -170,23 +170,6 @@ class GraftOptimizationsSpec extends AnyFunSuite {
     }
   }
 
-  test("join variant: key overflow + countable domain => broadcast semi on the fact") {
-    val sql =
-      """SELECT p_size, count(*) AS n FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE p_size = 15 GROUP BY p_size""".stripMargin
-    val expect = baseline(sql)
-    // MAX_IN forces the literal tier to overflow; the exact key-count
-    // probe then admits the broadcast-semi tier
-    withConf(FACT_MIN_KEY -> "1", RATIO_KEY -> "0", MAX_IN_KEY -> "1",
-      MAX_BCAST_KEYS_KEY -> "1000000") {
-      val df = spark.sql(sql)
-      val phys = df.queryExecution.executedPlan.toString
-      assert(phys.contains("LeftSemi"), phys.take(1500))
-      assert(rows(df) == expect)
-    }
-  }
-
   test("join variant: join-shaped dim falls back to the key's branch") {
     // dim = part JOIN supplier-ish shape: the join node's multiplicative
     // stats would flunk every size guard, but the selective part branch

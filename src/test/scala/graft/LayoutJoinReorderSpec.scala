@@ -112,13 +112,9 @@ class LayoutJoinReorderSpec extends AnyFunSuite {
     }
   }
 
-  /** Round-15 filtered-dim size tier (opt-in, default OFF after the sf30
-    * A/B measured the reordered h05 a wash — bench/AB_sf30_h05_dimtier*):
-    * with the tier ON, a TINY filtered dim >= 2 join hops from the layout
-    * pair (the Q5 region shape) no longer bails the chain; a filtered dim
-    * DIRECTLY joined to the pair (the Q3 customer) still does. */
-  test("filtered-dim tier: opt-in reorders the region-filtered Q5 chain; " +
-      "default leaves it textual; Q3 stays textual either way") {
+  /** A filtered dim anywhere in the chain bails the reorder, even one
+    * two join hops from the layout pair (the Q5 region shape). */
+  test("region-filtered Q5 chain keeps its textual order") {
     withLayout { _ =>
       Tables.t(spark, sf, "supplier").createOrReplaceTempView("supplier")
       Tables.t(spark, sf, "region").createOrReplaceTempView("region")
@@ -134,32 +130,8 @@ class LayoutJoinReorderSpec extends AnyFunSuite {
           AND o_orderdate >= TIMESTAMP '1996-01-01'
           AND o_orderdate < TIMESTAMP '1997-01-01'
         GROUP BY n_name"""
-      // default: the filtered region bails the chain — textual order
-      val defOrder = leafOrder(spark.sql(q5)).take(3)
-      assert(defOrder.take(2) == Seq("customer", "orders"), s"got $defOrder")
-      spark.conf.set("spark.graft.joinReorder.filteredDimTier", "true")
-      try {
-        val on = leafOrder(spark.sql(q5)).take(2)
-        assert(on == Seq("orders", "lineitem"), s"tier-on got $on")
-        // Q3's directly-joined filtered customer still pins the order
-        val q3 = """
-          SELECT l_orderkey, sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS revenue
-          FROM customer
-          JOIN orders ON c_custkey = o_custkey
-          JOIN lineitem ON l_orderkey = o_orderkey
-          WHERE c_mktsegment = 'BUILDING'
-            AND o_orderdate < TIMESTAMP '1997-03-15'
-            AND l_shipdate > TIMESTAMP '1997-03-15'
-          GROUP BY l_orderkey"""
-        val q3Order = leafOrder(spark.sql(q3))
-        assert(q3Order == Seq("customer", "orders", "lineitem"), s"got $q3Order")
-        // and the reordered Q5 returns the same rows
-        val onRows = spark.sql(q5).collect().map(_.toString).sorted.toSeq
-        spark.conf.unset("spark.graft.joinReorder.filteredDimTier")
-        val offRows = spark.sql(q5).collect().map(_.toString).sorted.toSeq
-        assert(onRows == offRows)
-      } finally
-        spark.conf.unset("spark.graft.joinReorder.filteredDimTier")
+      val order = leafOrder(spark.sql(q5)).take(2)
+      assert(order == Seq("customer", "orders"), s"got $order")
     }
   }
 

@@ -57,10 +57,9 @@ class PlanSpec extends AnyFunSuite {
     // exchange — not a groupBy + shuffled join back on the same keys
     assert(plan.contains("Window"), plan.take(1200))
     assert(plan.contains("windowspecdefinition(l_partkey"), plan.take(1200))
-    // the part predicate prunes lineitem BEFORE the shuffle — as a dynamic
-    // filter (DynamicFilters.semiJoinPrune): tier 1 inlines the keys as a
-    // scan-level INSET at this scale; the broadcast-semi tier (LeftSemi)
-    // takes over when the key domain outgrows the IN cap (sf10+)
+    // the part predicate prunes lineitem BEFORE the shuffle — as a semi
+    // join at this scale, or as DynamicSemiJoinPrune's scan-level IN/INSET
+    // once lineitem clears the rule's fact-size floor
     assert(plan.contains("INSET") || plan.contains(" IN ") ||
       plan.contains("LeftSemi"), plan.take(1200))
     // exactly one hash-partitioned exchange on the supply keys, and no

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * EXTEND the child's sort prefix aggregate through a per-run hash flushed
   * at prefix-run boundaries — the strict-prefix hybrid the round-13
   * verdict asked for (serves plain single-key-sorted layouts without the
-  * extended-sort rewrite; the reference's segmented aggregation path). */
+  * extended-sort rewrite; the reference's segmented aggregation path).
+  * The operator runs the PARTIAL aggregate below the exchange, so every
+  * input here is sorted within partitions without a repartition. */
 class RunHashAggregateSpec extends AnyFunSuite {
   import TestSession._
 
@@ -18,20 +20,11 @@ class RunHashAggregateSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.EliminateSorts")
     spark.conf.set(HYBRID, on.toString)
-    // test fixtures are far below the production size floor, and the
-    // synthetic repartition+sortWithinPartitions shapes here are not
-    // layout scans — lift the Complete-mode layout guard (it has its own
-    // test below) to exercise the operator itself
+    // test fixtures are far below the production size floor
     spark.conf.set(plans.StreamingSortedAggregate.HYBRID_MIN_KEY, "0")
-    spark.conf.set(plans.StreamingSortedAggregate.HYBRID_COMPLETE_MIN_KEY, "0")
-    spark.conf.set(
-      plans.StreamingSortedAggregate.HYBRID_REQUIRE_LAYOUT_KEY, "false")
     try f finally {
       spark.conf.set(HYBRID, "true")
       spark.conf.unset(plans.StreamingSortedAggregate.HYBRID_MIN_KEY)
-      spark.conf.unset(plans.StreamingSortedAggregate.HYBRID_COMPLETE_MIN_KEY)
-      spark.conf.unset(
-        plans.StreamingSortedAggregate.HYBRID_REQUIRE_LAYOUT_KEY)
       spark.conf.unset("spark.sql.optimizer.excludedRules")
     }
   }
@@ -55,13 +48,12 @@ class RunHashAggregateSpec extends AnyFunSuite {
     * (l_orderkey, l_suppkey), input sorted by l_orderkey only. */
   private def h21Shape: DataFrame =
     Tables.t(spark, sf, "lineitem")
-      .repartition(col("l_orderkey"))
       .sortWithinPartitions("l_orderkey")
       .groupBy("l_orderkey", "l_suppkey")
       .agg(sum(col("l_quantity")).as("sq"), count(lit(1)).as("cnt"),
         avg(col("l_extendedprice")).as("ap"))
 
-  test("complete-mode fire on grouping keys extending the sort prefix, " +
+  test("fires on grouping keys extending the sort prefix, " +
       "inside whole-stage codegen, result-identical") {
     checkIdentical(h21Shape)
     val plan = withRule(on = true) {
@@ -95,7 +87,6 @@ class RunHashAggregateSpec extends AnyFunSuite {
       "decimal sums stay exact") {
     checkIdentical {
       Tables.t(spark, sf, "lineitem")
-        .repartition(col("l_orderkey"))
         .sortWithinPartitions("l_orderkey")
         .groupBy("l_orderkey", "l_returnflag")
         .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("sq"),
@@ -111,7 +102,6 @@ class RunHashAggregateSpec extends AnyFunSuite {
         (Double.NaN, 1, 40), (Double.NaN, 1, 50),
         (null, 2, 60), (null, 2, 70), (2.0, 3, 80))
         .toDF("k", "e", "v")
-        .repartition(col("k"))
         .sortWithinPartitions("k")
         .groupBy("k", "e")
         .agg(sum(col("v")).as("sv"), count(lit(1)).as("c"))
@@ -124,13 +114,11 @@ class RunHashAggregateSpec extends AnyFunSuite {
       Seq(
         // full cover → StreamingSortedAggregate, not the hybrid
         Tables.t(spark, sf, "lineitem")
-          .repartition(col("l_orderkey"))
           .sortWithinPartitions("l_orderkey")
           .groupBy("l_orderkey")
           .agg(sum(col("l_quantity")).as("sq")),
         // sorted on a non-grouping column → neither fires
         Tables.t(spark, sf, "lineitem")
-          .repartition(col("l_orderkey"))
           .sortWithinPartitions("l_shipdate")
           .groupBy("l_orderkey", "l_suppkey")
           .agg(sum(col("l_quantity")).as("sq"))
@@ -145,7 +133,6 @@ class RunHashAggregateSpec extends AnyFunSuite {
   test("does NOT fire on var-width aggregation buffers (max over string)") {
     val plan = withRule(on = true) {
       Tables.t(spark, sf, "lineitem")
-        .repartition(col("l_orderkey"))
         .sortWithinPartitions("l_orderkey")
         .groupBy("l_orderkey", "l_suppkey")
         .agg(max(col("l_returnflag")).as("mc"))
@@ -172,7 +159,6 @@ class RunHashAggregateSpec extends AnyFunSuite {
     val empty = withRule(on = true) {
       Tables.t(spark, sf, "lineitem")
         .where(col("l_quantity") < -1)
-        .repartition(col("l_orderkey"))
         .sortWithinPartitions("l_orderkey")
         .groupBy("l_orderkey", "l_suppkey")
         .agg(sum(col("l_quantity")).as("sq"))
@@ -181,7 +167,6 @@ class RunHashAggregateSpec extends AnyFunSuite {
     assert(empty.isEmpty)
     checkIdentical {
       (1 to 4000).map(i => (1L, i % 97, i)).toDF("k", "e", "v")
-        .repartition(col("k"))
         .sortWithinPartitions("k")
         .groupBy("k", "e")
         .agg(sum(col("v")).as("sv"), count(lit(1)).as("c"))
@@ -218,60 +203,6 @@ class RunHashAggregateSpec extends AnyFunSuite {
         spark.conf.unset(plans.StreamingSortedAggregate.HYBRID_MAX_RUN_KEY)
         spark.conf.unset("spark.sql.codegen.wholeStage")
       }
-    }
-  }
-
-  /** Complete-mode layout guard (round-14 ADVICE): with the default
-    * `hybridCompleteRequireLayout=true`, a Complete-mode hybrid whose
-    * prefix order comes from a synthetic sort (not a bucketed/sorted
-    * layout scan) must NOT fire — Complete mode has no mid-run escape, so
-    * only a layout bucket key (high-cardinality by construction) may
-    * select it. Over a REAL persisted layout it still fires. */
-  test("complete-mode requires a layout-origin prefix by default") {
-    spark.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.EliminateSorts")
-    spark.conf.set(plans.StreamingSortedAggregate.HYBRID_MIN_KEY, "0")
-    spark.conf.set(plans.StreamingSortedAggregate.HYBRID_COMPLETE_MIN_KEY, "0")
-    try {
-      // default guard ON: synthetic sorted input → no hybrid
-      val plan = h21Shape.queryExecution.executedPlan.toString
-      assert(!plan.contains("RunHashAggregate"), plan)
-
-      // a real bucketed layout: persist, redirect, same shape fires
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-hybridguard").toString
-      operators.Bucketing.persistBucketed(spark,
-        Tables.t(spark, sf, "lineitem"), dir, "lineitem", "l_orderkey", 4)
-      spark.conf.set("spark.graft.bucketedDir", dir)
-      spark.conf.set("spark.graft.bucketedSortedScan", "true")
-      try {
-        val df = Tables.t(spark, sf, "lineitem")
-          .groupBy("l_orderkey", "l_suppkey")
-          .agg(sum(col("l_quantity")).as("sq"), count(lit(1)).as("cnt"))
-        val layoutPlan = df.queryExecution.executedPlan.toString
-        assert(layoutPlan.contains("RunHashAggregate"), layoutPlan)
-        val rows = sortedRows(df)
-        spark.conf.unset("spark.graft.bucketedDir")
-        spark.conf.unset("spark.graft.bucketedSortedScan")
-        spark.conf.set(
-          "spark.sql.legacy.bucketedTableScan.outputOrdering", "false")
-        val flat = sortedRows(Tables.t(spark, sf, "lineitem")
-          .groupBy("l_orderkey", "l_suppkey")
-          .agg(sum(col("l_quantity")).as("sq"), count(lit(1)).as("cnt")))
-        assert(rows == flat)
-      } finally {
-        spark.conf.unset("spark.graft.bucketedDir")
-        spark.conf.unset("spark.graft.bucketedSortedScan")
-        spark.conf.set(
-          "spark.sql.legacy.bucketedTableScan.outputOrdering", "false")
-        // the redirect registered a catalog table — drop it, other suites
-        // assert on the catalog listing
-        spark.sql("DROP TABLE IF EXISTS graft_bucketed_lineitem")
-      }
-    } finally {
-      spark.conf.unset(plans.StreamingSortedAggregate.HYBRID_MIN_KEY)
-      spark.conf.unset(plans.StreamingSortedAggregate.HYBRID_COMPLETE_MIN_KEY)
-      spark.conf.unset("spark.sql.optimizer.excludedRules")
     }
   }
 }

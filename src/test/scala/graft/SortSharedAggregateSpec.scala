@@ -74,27 +74,18 @@ class SortSharedAggregateSpec extends AnyFunSuite {
     assert(!plan.contains("SortAggregate"), plan)
   }
 
-  test("in-place shape (no exchange eliminated) is opt-in and exact") {
+  test("does not fire on a co-partitioned Complete aggregate (no exchange to drop)") {
     // pre-partitioning by the window key makes the aggregate single-stage
-    // Complete (CollapseSingleStageAggregate) — the sf30 soak shape; the
-    // in-place hash→sort swap measured losing single-box, so it must NOT
-    // fire by default and must stay exact when opted in
-    def q = Tables.t(spark, sf, "lineitem")
+    // Complete (CollapseSingleStageAggregate): nothing to eliminate, so the
+    // hash aggregate stays
+    val plan = Tables.t(spark, sf, "lineitem")
       .repartition(col("l_orderkey"))
       .groupBy(col("l_orderkey"), col("l_suppkey"))
       .agg(max(col("l_quantity")).as("mx"))
       .withColumn("n_supp", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("l_orderkey"))))
-    val defPlan = q.queryExecution.executedPlan.toString
-    assert(!defPlan.contains("SortAggregate"), defPlan)
-    val defRows = q.collect().map(_.toSeq).toSet
-    spark.conf.set(plans.SortSharedAggregate.IN_PLACE_KEY, "true")
-    try {
-      val onPlan = q.queryExecution.executedPlan.toString
-      assert(onPlan.contains("SortAggregate") ||
-        onPlan.contains("StreamingSortedAggregate"), onPlan)
-      assert(q.collect().map(_.toSeq).toSet == defRows)
-    } finally spark.conf.unset(plans.SortSharedAggregate.IN_PLACE_KEY)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("SortAggregate"), plan)
   }
 
   test("fires on the bare groupBy+window prefix shape and matches hash plan") {
