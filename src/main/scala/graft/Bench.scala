@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs the headline query set on SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract). Protocol mirrors the reference's
@@ -11,30 +11,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // engine rules (dynamic semi-join pruning, scaled-long sums) run on
-      // the bench path exactly as on any user session — no hand-wiring
-      .withExtensions(new GraftPlannerExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // partitioned hash join + 4 MB local broadcast cutoff — see
-      // GraftSession.local for the measured rationale of both
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.shuffledHashJoinFactor", "1")
-      .config("spark.sql.autoBroadcastJoinThreshold", "4m")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        "536870912")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    GraftSession.localExchangeConf(builder)
-    // ad-hoc config sweeps: SPARK_GRAFT_CONF="k=v,k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // the shared local posture (partitioned hash join, 4 MB broadcast
+    // cutoff, tmpfs exchange, SPARK_GRAFT_CONF sweeps) — the same session
+    // graft.Verify checks results on
+    val spark = GraftSession.local(cpus)
 
     def time(fn: => Unit): Double = {
       val t0 = System.nanoTime(); fn; (System.nanoTime() - t0) / 1e9
@@ -48,7 +29,7 @@ object Bench {
           time(q.fn(spark, sfDir).count()) // prewarm (plans + file listing + JIT)
           val runs = Seq.fill(3)(time(q.fn(spark, sfDir).count()))
           name -> runs.min
-        } catch { case _: Throwable => name -> -1.0 }
+        } catch { case NonFatal(_) => name -> -1.0 }
       }
     }
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }

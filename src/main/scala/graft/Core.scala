@@ -93,7 +93,9 @@ object Tables {
 }
 
 /** Session factory used by mains and tests: AQE on, shuffle partitions sized
-  * for local[32] (a cluster deployment would leave these to spark-submit).
+  * to the local core count (a cluster deployment would leave these to
+  * spark-submit). `graft.Bench`, `graft.Verify` and the tools all build their
+  * session here, so the correctness gate runs the benchmarked posture.
   */
 object GraftSession {
   /** Single-node exchange posture, the local analogue of the reference's
@@ -106,15 +108,72 @@ object GraftSession {
     * shuffle crosses a network) — which is exactly what happens, since
     * these are only applied by this local[] factory, never by
     * GraftExtensions. */
-  def localExchangeConf(builder: SparkSession.Builder): SparkSession.Builder = {
+  private def localExchangeConf: Seq[(String, String)] = {
     val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
-      builder.config("spark.local.dir",
-        java.nio.file.Files.createDirectories(shm.resolve("graft-shuffle")).toString)
-    builder
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
+    val scratch =
+      if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
+        Seq("spark.local.dir" ->
+          java.nio.file.Files.createDirectories(shm.resolve("graft-shuffle")).toString)
+      else Nil
+    scratch ++ Seq(
+      "spark.shuffle.compress" -> "false",
+      "spark.shuffle.spill.compress" -> "false")
   }
+
+  /** The local posture as the (key, value) pairs `local` applies, in order.
+    * Spark's runtime bloom-filter injection keeps its shipped 10 GiB
+    * application-side floor: the SCALE.md A/B that lowered it to fire at
+    * the soak scales REGRESSED the join headliners (date predicates keep
+    * most join keys, so the bloom build+probe outweighs rows saved);
+    * selective domains are covered by DynamicSemiJoinPrune's
+    * InSet/broadcast tiers instead, and at 100 TB the default floor fires
+    * exactly where it belongs. */
+  def localConf(cpus: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    // AQE coalescing keeps Spark's shipped parallelism-first default:
+    // sub-advisory shuffles still spread across all cores (an earlier
+    // advisory-size-first override serialized mid-query stages whose
+    // shuffles were far below 64 MB — measured 18.6→11.1 s across the
+    // sf1 suite when reverted; minPartitionSize still floors tiny tasks)
+    // Partitioned HASH join over sort-merge when the build side fits a
+    // per-partition map — the reference's execution model (LookupJoin =
+    // partitioned hash join; HashBuilderOperator builds, never sorts).
+    // canBuildLocalHashMap (autoBroadcastJoinThreshold × shuffle
+    // partitions) still bounds the build side, AQE still handles skew,
+    // and SMJ remains the fallback for oversized builds — so the choice
+    // holds on a 1000-executor cluster, where per-partition build sides
+    // stay bounded by the same guard. factor=1 lets comparable-size
+    // sides hash-join (Spark's default demands a 3× imbalance; Presto
+    // hash-joins regardless and just picks the build side).
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    "spark.sql.shuffledHashJoinFactor" -> "1",
+    // AQE runtime SMJ→SHJ conversion (default 0 = off): when a build
+    // side outgrows the STATIC canBuildLocalHashMap bound (threshold ×
+    // partitions), the planner falls back to sort-merge — at the sf30
+    // soak that sorted a 180 M-row probe side under h05/q22/h18.
+    // 512 MB bounds the RUNTIME per-partition build (32 tasks × 512 MB
+    // within the 128 GiB heap; actual builds are far smaller), keeping
+    // the reference's hash-join-always execution model at runtime too:
+    // sf30 TPC-H-10 69.2 → 55.8 s, sf10 18.6 → 16.5 s (SCALE.md).
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "536870912",
+    // 4 MB broadcast cutoff in LOCAL mode: the driver builds a broadcast
+    // HashedRelation single-threaded, so a 1-2 M-row dim (part/customer
+    // at the sf10 soak) costs 1-2 s serialized build while the 32-way
+    // partitioned hash join builds the same table in parallel — measured
+    // 29.9 → 17.7 s across the six join-heavy sf10 headliners (SCALE.md).
+    // A real cluster keeps the shipped 10 MB default via spark-submit:
+    // there the broadcast eliminates a fact-side network shuffle, which
+    // dominates the one-time build. Truly small dims (nation, region,
+    // filtered lookups) stay under 4 MB and still broadcast everywhere.
+    "spark.sql.autoBroadcastJoinThreshold" -> "4m",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false") ++
+    localExchangeConf ++
+    // ad-hoc config sweeps for tools (Explain/Bench A/B): "k=v,k=v"
+    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(",")).map { kv =>
+      val Array(k, v) = kv.split("=", 2); k -> v
+    }
 
   def local(cpus: Int = 32): SparkSession = {
     val builder = SparkSession.builder()
@@ -122,65 +181,14 @@ object GraftSession {
       .appName("graft")
       // engine planner surface on every session: custom strategies + the
       // graft optimizer rules (dynamic semi-join pruning, scaled-long
-      // decimal sums). Function NAMES stay per-Engine-session (Presto
-      // `map`/`split`/… deliberately differ from the Spark builtins —
-      // see GraftExtensions vs GraftPlannerExtensions).
+      // decimal sums). Function NAMES and the dialect's analyzer rules
+      // stay per-Engine-session (Presto `map`/`split`/… deliberately
+      // differ from the Spark builtins — see GraftExtensions vs
+      // GraftPlannerExtensions).
       .withExtensions(new GraftPlannerExtensions)
-      // Spark's runtime bloom-filter injection keeps its shipped 10 GiB
-      // application-side floor: the SCALE.md A/B that lowered it to fire
-      // at the soak scales REGRESSED the join headliners (date predicates
-      // keep most join keys, so the bloom build+probe outweighs rows
-      // saved); selective domains are covered by DynamicSemiJoinPrune's
-      // InSet/broadcast tiers instead, and at 100 TB the default floor
-      // fires exactly where it belongs.
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing keeps Spark's shipped parallelism-first default:
-      // sub-advisory shuffles still spread across all cores (an earlier
-      // advisory-size-first override serialized mid-query stages whose
-      // shuffles were far below 64 MB — measured 18.6→11.1 s across the
-      // sf1 suite when reverted; minPartitionSize still floors tiny tasks)
-      // Partitioned HASH join over sort-merge when the build side fits a
-      // per-partition map — the reference's execution model (LookupJoin =
-      // partitioned hash join; HashBuilderOperator builds, never sorts).
-      // canBuildLocalHashMap (autoBroadcastJoinThreshold × shuffle
-      // partitions) still bounds the build side, AQE still handles skew,
-      // and SMJ remains the fallback for oversized builds — so the choice
-      // holds on a 1000-executor cluster, where per-partition build sides
-      // stay bounded by the same guard. factor=1 lets comparable-size
-      // sides hash-join (Spark's default demands a 3× imbalance; Presto
-      // hash-joins regardless and just picks the build side).
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.shuffledHashJoinFactor", "1")
-      // AQE runtime SMJ→SHJ conversion (default 0 = off): when a build
-      // side outgrows the STATIC canBuildLocalHashMap bound (threshold ×
-      // partitions), the planner falls back to sort-merge — at the sf30
-      // soak that sorted a 180 M-row probe side under h05/q22/h18.
-      // 512 MB bounds the RUNTIME per-partition build (32 tasks × 512 MB
-      // within the 128 GiB heap; actual builds are far smaller), keeping
-      // the reference's hash-join-always execution model at runtime too:
-      // sf30 TPC-H-10 69.2 → 55.8 s, sf10 18.6 → 16.5 s (SCALE.md).
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        "536870912")
-      // 4 MB broadcast cutoff in LOCAL mode: the driver builds a broadcast
-      // HashedRelation single-threaded, so a 1-2 M-row dim (part/customer
-      // at the sf10 soak) costs 1-2 s serialized build while the 32-way
-      // partitioned hash join builds the same table in parallel — measured
-      // 29.9 → 17.7 s across the six join-heavy sf10 headliners (SCALE.md).
-      // A real cluster keeps the shipped 10 MB default via spark-submit:
-      // there the broadcast eliminates a fact-side network shuffle, which
-      // dominates the one-time build. Truly small dims (nation, region,
-      // filtered lookups) stay under 4 MB and still broadcast everywhere.
-      .config("spark.sql.autoBroadcastJoinThreshold", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    localExchangeConf(builder)
-    // ad-hoc config sweeps for tools (Explain/Bench A/B): "k=v,k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    })
-    val spark2 = builder.getOrCreate()
-    spark2.sparkContext.setLogLevel("WARN")
-    spark2
+    localConf(cpus).foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

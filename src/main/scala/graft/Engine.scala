@@ -14,12 +14,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 class Engine(parent: SparkSession) {
 
   /** Isolated session (shared SparkContext, own temp-view + function
-    * registry): the Presto-semantics names (e.g. literal-delimiter `split`,
-    * heap `max_by`) must not shadow Spark builtins for DataFrame-API code
-    * running on the parent session — `functions.split` & co. resolve BY NAME
-    * through the session's registry on Spark 4, so registering compat names
-    * on a shared session silently changes unrelated plans. */
-  val spark: SparkSession = parent.newSession()
+    * registry, own extension set): the Presto-semantics names (e.g.
+    * literal-delimiter `split`, heap `max_by`) must not shadow Spark
+    * builtins for DataFrame-API code running on the parent session —
+    * `functions.split` & co. resolve BY NAME through the session's registry
+    * on Spark 4, so registering compat names on a shared session silently
+    * changes unrelated plans. The same holds for the dialect's analyzer
+    * rules (PrestoDialect), installed on this session only. */
+  val spark: SparkSession = org.apache.spark.sql.classic.GraftPlanBridge
+    .newSession(parent, PrestoDialect.install)
 
   // Presto is strict: division by zero, invalid casts, and out-of-bounds
   // subscripts THROW (SURVEY §7 risk register). ANSI mode is the matching
@@ -404,756 +407,9 @@ class Engine(parent: SparkSession) {
         InformationSchema.register(this)
         InformationSchema.repoint(query)
       } else query
+    // the Presto dialect fixes run inside this analysis (PrestoDialect)
     val text = PrestoSql.rewrite(query1)
-    val df =
-      try preRewrites(text).getOrElse(spark.sql(text))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("requires window to be ordered") =>
-          try arbitraryWindowOrder(text)
-          catch {
-            // the unordered window may sit in the ORDER BY clause — the
-            // order fix exposes the window-in-Sort condition
-            case e2: org.apache.spark.sql.AnalysisException
-                if String.valueOf(e2.getMessage)
-                  .contains("UNSUPPORTED_EXPR_FOR_OPERATOR") =>
-              windowInOrderBy(text, e2)
-          }
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("FILTER_NOT_BOOLEAN") =>
-          nullFilterAsBoolean(text)
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("INVALID_INLINE_TABLE") =>
-          inlineTableAsUnion(text)
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("MISSING_GROUP_BY") =>
-          windowScalarAggHoist(text, e)
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("STAR_GROUP_BY_POS") =>
-          starGroupByOrdinal(text, e)
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("INVALID_ORDERING_TYPE") =>
-          mapEquality(text, e)
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("CAST_WITHOUT_SUGGESTION") =>
-          try castTimestampToTime(text, e)
-          catch { case _: Throwable => tstzMismatch(text, e) }
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("UNSUPPORTED_GROUPING_EXPRESSION") =>
-          groupingAsZero(text, e)
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("UNSUPPORTED_EXPR_FOR_OPERATOR") =>
-          windowInOrderBy(text, e)
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage)
-              .contains("UNSUPPORTED_SUBQUERY_EXPRESSION_CATEGORY") =>
-          decorrelateRetry(text, e)
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("UNRESOLVED_COLUMN") =>
-          try sortSourceToAlias(text, e)
-          catch {
-            // grouping() in ORDER BY referencing a renamed grouping
-            // column resolves in the aggregate scope, not via aliasing
-            case _: Throwable =>
-              try sortGroupingHoist(text, e)
-              catch {
-                // the unresolved name may be an outer reference crossing
-                // a trivial derived table inside a subquery expression —
-                // the decorrelation rewrites close that shape
-                case _: Throwable => decorrelateRetry(text, e)
-              }
-          }
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("ARRAY_FUNCTION_DIFF_TYPES") =>
-          structPositionalContains(text, e)
-        // LAST: the generic tstz retry — any remaining DATATYPE_MISMATCH
-        // may be a zone-carrying timestamp in a zone-less slot (the
-        // specific error subclasses above keep their own handlers)
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("DATATYPE_MISMATCH") =>
-          tstzMismatch(text, e)
-      }
-    oneBasedSubscripts(df, text)
-  }
-
-  /** Presto CAST(timestamp AS TIME) keeps the time-of-day
-    * (DateTimeOperators.castToTime); Spark 4.1's TIME type has no
-    * timestamp→time cast. Retry path: analyze without final checks, then
-    * route the cast through the formatted time-of-day string. */
-  private def castTimestampToTime(text: String, orig: Throwable): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, DateFormatClass, Literal}
-    import org.apache.spark.sql.types.{TimeType, TimestampType}
-    val analyzed =
-      try org.apache.spark.sql.classic.GraftPlanBridge.analyze(spark,
-        org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text))
-      catch { case _: Throwable => throw orig }
-    var changed = false
-    val fixed = analyzed.transformAllExpressions {
-      case Cast(ch, t: TimeType, tz, ev)
-          if ch.resolved && ch.dataType == TimestampType =>
-        changed = true
-        Cast(DateFormatClass(ch, Literal("HH:mm:ss.SSSSSS")), t, tz, ev)
-    }
-    if (!changed) throw orig
-    org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, fixed)
-  }
-
-  /** TIMESTAMP WITH TIME ZONE flowing into an expression that only accepts
-    * zone-less datetimes (functions/Tstz.scala struct representation): the
-    * reference dispatches *FromTimestampWithTimeZone overloads
-    * (DateTimeFunctions.java) — field extractors read the WALL time in the
-    * value's zone; casts to timestamp/date take the instant/wall view
-    * (session zone is UTC, where legacy cast and instant coincide). Spark
-    * reports DATATYPE_MISMATCH; retry path: analyze without final checks,
-    * rewrite the mismatched nodes, re-plan. */
-  private def tstzMismatch(text: String, orig: Throwable): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.types.{DateType, TimestampType}
-    import graft.functions.Tstz
-    val analyzed =
-      try org.apache.spark.sql.classic.GraftPlanBridge.analyze(spark,
-        org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text))
-      catch { case _: Throwable => throw orig }
-    var changed = false
-    def isT(e: Expression): Boolean = e.resolved && Tstz.isTstz(e.dataType)
-    def isTt(e: Expression): Boolean =
-      e.resolved && graft.functions.Ttz.isTtz(e.dataType)
-    def wallWrap(e: Expression): Expression =
-      e.withNewChildren(e.children.map(c =>
-        if (isT(c)) { changed = true; Tstz.wall(c) }
-        else if (isTt(c)) { changed = true; graft.functions.TtzToTimestamp(c) }
-        else c))
-    // the retry runs in a catch block where the PARENT session may be
-    // active — Tstz.wall/unwall capture the session zone via SQLConf.get,
-    // so the rewrite must see THIS engine's session conf
-    val prevActive = org.apache.spark.sql.SparkSession.getActiveSession
-    org.apache.spark.sql.SparkSession.setActiveSession(spark)
-    val fixed = try analyzed.transformAllExpressions {
-      // ── IPADDRESS (functions/IpAddress.scala) ──
-      // struct-tagged ip → varbinary is the raw 16 bytes (Spark refuses
-      // struct→binary casts at analysis, so the rewrite lives on this
-      // retry path)
-      case Cast(child, org.apache.spark.sql.types.BinaryType, _, _)
-          if child.resolved && graft.functions.IpAddr.isIp(child.dataType) =>
-        changed = true
-        graft.functions.IpAddr.bytes(child)
-      // ── TIME WITH TIME ZONE (functions/Ttz.scala) ──
-      // ttz − ttz → interval day-time on millisUtc
-      case Subtract(l, r, _) if isTt(l) && isTt(r) =>
-        changed = true
-        graft.functions.TtzSubtract(l, r)
-      // non-legacy casts: → time / → timestamp take the WALL clock in the
-      // value's zone
-      case Cast(child, _: org.apache.spark.sql.types.TimeType, _, _)
-          if isTt(child) =>
-        changed = true
-        graft.functions.TtzToTime(child)
-      case Cast(child, TimestampType, _, _) if isTt(child) =>
-        changed = true
-        graft.functions.TtzToTimestamp(child)
-      // ttz vs plain TIME comparison: the zone-less side coerces at the
-      // session zone, both compare on millisUtc
-      // (TimeWithTimeZoneOperators; the ttz = ttz case needs no retry —
-      // the tstz pass strips both sides to millis)
-      case cmp: BinaryComparison if isTt(cmp.left) || isTt(cmp.right) =>
-        changed = true
-        def side(e: Expression): Expression =
-          if (isTt(e)) graft.functions.Ttz.millis(e)
-          else e.dataType match {
-            case _: org.apache.spark.sql.types.TimeType =>
-              graft.functions.Ttz.millis(graft.functions.TimeToTtz(e))
-            case _ => e
-          }
-        cmp.withNewChildren(Seq(side(cmp.left), side(cmp.right)))
-
-      case c @ Cast(child, TimestampType, _, _) if isT(child) =>
-        changed = true
-        Tstz.instant(child)
-      case Cast(child, DateType, tz, ev) if isT(child) =>
-        changed = true
-        Cast(Tstz.wall(child), DateType, tz, ev)
-      // tstz vs zone-less timestamp comparison: instants
-      case cmp: BinaryComparison if isT(cmp.left) || isT(cmp.right) =>
-        changed = true
-        cmp.withNewChildren(Seq(
-          if (isT(cmp.left)) Tstz.instant(cmp.left) else cmp.left,
-          if (isT(cmp.right)) Tstz.instant(cmp.right) else cmp.right))
-      // date_trunc keeps the TYPE: truncate the wall time in the value's
-      // zone, reinterpret there, keep the zone (the reference's
-      // truncateTimestampWithTimeZone returns timestamp with time zone)
-      case TruncTimestamp(fmt, ts, _) if isT(ts) =>
-        changed = true
-        // UTC-pinned round trip (TruncTimestamp is not NTZ-native — an NTZ
-        // input would coerce back through the session zone's wall clock,
-        // the DST-gap bug this path avoids): truncate the UTC-rendered
-        // value-zone wall, reinterpret in the value's zone, keep the zone
-        val z = Tstz.zone(ts)
-        Tstz.make(
-          ToUTCTimestamp(
-            TruncTimestamp(fmt, Tstz.utcWall(Tstz.instant(ts), z), Some("UTC")),
-            z),
-          z)
-      // date_add keeps the TYPE and the zone (the reference's
-      // addFieldValueTimestampWithTimeZone shifts via the zone's
-      // chronology and repacks the same zone key —
-      // MAIN/scalar/DateTimeFunctions.java): time units shift the
-      // INSTANT; calendar units (day and up) add on the WALL time in the
-      // value's zone (DST-aware), then reinterpret there
-      case ta: TimestampAdd if isT(ta.timestamp) =>
-        changed = true
-        val z = Tstz.zone(ta.timestamp)
-        if (Engine.instantShiftUnits(ta.unit.toUpperCase))
-          Tstz.make(ta.copy(timestamp = Tstz.instant(ta.timestamp)), z)
-        else
-          Tstz.make(
-            Tstz.unwall(ta.copy(timestamp = Tstz.wall(ta.timestamp)), z), z)
-      // date_diff over tstz: time units diff instants; calendar units
-      // count in the first tstz operand's zone calendar (the reference
-      // diffs through getChronology(leftZoneKey))
-      case td: TimestampDiff
-          if isT(td.startTimestamp) || isT(td.endTimestamp) =>
-        changed = true
-        if (Engine.instantShiftUnits(td.unit.toUpperCase))
-          td.copy(
-            startTimestamp =
-              if (isT(td.startTimestamp)) Tstz.instant(td.startTimestamp)
-              else td.startTimestamp,
-            endTimestamp =
-              if (isT(td.endTimestamp)) Tstz.instant(td.endTimestamp)
-              else td.endTimestamp)
-        else {
-          val z =
-            if (isT(td.startTimestamp)) Tstz.zone(td.startTimestamp)
-            else Tstz.zone(td.endTimestamp)
-          def wallIn(e: Expression): Expression =
-            if (isT(e)) Tstz.wall(e) else Tstz.wallAt(e, z)
-          td.copy(startTimestamp = wallIn(td.startTimestamp),
-            endTimestamp = wallIn(td.endTimestamp))
-        }
-      // date_format over tstz: format the UTC-rendered value-zone wall with
-      // the formatter PINNED to UTC (DateFormatClass is not NTZ-native — an
-      // NTZ wall would coerce back through the session zone's wall clock)
-      case DateFormatClass(ts, fmt, _) if isT(ts) =>
-        changed = true
-        DateFormatClass(
-          Tstz.utcWall(Tstz.instant(ts), Tstz.zone(ts)), fmt, Some("UTC"))
-      // field extractors / formatters: the wall-time view in the value's
-      // zone (whitelist — conditional/struct expressions must NOT unwrap).
-      // The tstz wall view is a TIMESTAMP_NTZ: hour/minute/second are
-      // NTZ-native, the date-field family casts NTZ→DATE zone-free.
-      case e @ (_: Hour | _: Minute | _: Second | _: DayOfMonth |
-                _: DayOfWeek | _: WeekDay | _: DayOfYear | _: Month |
-                _: Year | _: Quarter | _: WeekOfYear |
-                _: DateFormatClass | _: MonthName | _: DayName)
-          if e.children.exists(c => isT(c) || isTt(c)) =>
-        wallWrap(e)
-      case e: UnixTimestamp if e.children.exists(isT) =>
-        // epoch is zone-independent: the instant view
-        e.withNewChildren(e.children.map(c =>
-          if (isT(c)) { changed = true; Tstz.instant(c) } else c))
-    } finally {
-      // restore EXACTLY the pre-retry state: when no session was active,
-      // clear — leaving the engine's session active would leak it to
-      // unrelated code on this thread
-      prevActive match {
-        case Some(s) => org.apache.spark.sql.SparkSession.setActiveSession(s)
-        case None => org.apache.spark.sql.SparkSession.clearActiveSession()
-      }
-    }
-    if (!changed) throw orig
-    org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, fixed)
-  }
-
-  /** Presto compares MAPs with `=`/`!=` (MapOperators.java equals — key
-    * multisets match and every key's values are equal); Spark rejects maps
-    * as unorderable (INVALID_ORDERING_TYPE). Retry path: analyze without
-    * the final checks, then rewrite map equalities to
-    * size+sorted-keys+per-key-value comparison. 3VL: a NULL value
-    * comparison propagates through AND like the reference's indeterminate
-    * entries. */
-  private def mapEquality(text: String, orig: Throwable): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{And, ArrayForAll, EqualTo, Expression, GetMapValue, In, LambdaFunction, Literal, MapKeys, Or, Size, SortArray, UnresolvedNamedLambdaVariable}
-    import org.apache.spark.sql.types.MapType
-    // `m IN (VALUES ...)` parses as InSubquery over an inline table and
-    // dies DURING analysis (the In coercion checks orderability), so the
-    // one-column inline list is expanded to OR-of-equalities on the PARSED
-    // plan — 3VL-identical to IN — letting the EqualTo rewrite below catch
-    // the map comparisons after analysis.
-    val parsed = {
-      import org.apache.spark.sql.catalyst.analysis.{UnresolvedInlineTable, UnresolvedStar}
-      import org.apache.spark.sql.catalyst.expressions.{InSubquery, ListQuery}
-      import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
-      // PrestoSql.inValues spells the list as SELECT * FROM (VALUES ...) —
-      // peel projections/aliases down to the single-column inline table
-      def inlineRows(p: LogicalPlan): Option[Seq[Expression]] = p match {
-        case t: UnresolvedInlineTable =>
-          if (t.rows.forall(_.length == 1)) Some(t.rows.map(_.head)) else None
-        case Project(Seq(_: UnresolvedStar), child) => inlineRows(child)
-        case s: SubqueryAlias => inlineRows(s.child)
-        case _ => None
-      }
-      org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text)
-        .transformAllExpressions {
-          case InSubquery(Seq(v), q: ListQuery)
-              if inlineRows(q.plan).isDefined =>
-            inlineRows(q.plan).get
-              .map(r => EqualTo(v, r))
-              .reduceLeft[Expression]((a, b) => Or(a, b))
-        }
-    }
-    val analyzed =
-      try org.apache.spark.sql.classic.GraftPlanBridge.analyze(spark, parsed)
-      catch { case _: Throwable => throw orig }
-    var changed = false
-    def mapEq(l: Expression, r: Expression): Expression = {
-      val k = UnresolvedNamedLambdaVariable(Seq("meq_k"))
-      And(And(
-        EqualTo(Size(l), Size(r)),
-        EqualTo(SortArray(MapKeys(l), Literal(true)),
-          SortArray(MapKeys(r), Literal(true)))),
-        ArrayForAll(MapKeys(l),
-          LambdaFunction(EqualTo(GetMapValue(l, k), GetMapValue(r, k)), Seq(k))))
-    }
-    val fixed = analyzed.transformAllExpressions {
-      case EqualTo(l, r)
-          if l.resolved && r.resolved && l.dataType.isInstanceOf[MapType] =>
-        changed = true
-        mapEq(l, r)
-      // `m IN (m1, m2, ...)` over maps (MapOperators equality through the
-      // IN list) — same per-element semantics, OR-chained
-      case In(v, list)
-          if v.resolved && list.forall(_.resolved) &&
-            v.dataType.isInstanceOf[MapType] =>
-        changed = true
-        list.map(x => mapEq(v, x)).reduceLeft[Expression]((a, b) => Or(a, b))
-    }
-    if (!changed) throw orig
-    org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, fixed)
-  }
-
-  /** Presto resolves ORDER BY expressions against the output scope FIRST,
-    * then falls back to the SOURCE scope (Analyzer legacy ordering —
-    * AbstractTestQueries testOrderByWithOutputColumnReference:
-    * `SELECT a AS foo ... GROUP BY GROUPING SETS ((a), (a, b)) ORDER BY
-    * -a`). Spark's Sort over an Aggregate exposes only the output columns,
-    * so the bare source name fails UNRESOLVED_COLUMN. Retry path: when a
-    * sort key references a source column that the SELECT list aliases AS
-    * a bare rename (`src AS alias`), substituting the alias is exact —
-    * the alias denotes precisely that source column. */
-  /** Subquery shapes Presto plans from any expression context but Spark's
-    * analyzer refuses (SubqueryPlanner.java:69 / PlanNodeDecorrelator) —
-    * inline no-FROM subqueries, collapse trivial subrelations, hoist
-    * ORDER BY subqueries into a hidden projection, and turn inner-join ON
-    * subqueries into filters. See graft.Decorrelate. */
-  private def decorrelateRetry(text: String, orig: Throwable): DataFrame = {
-    val rewritten =
-      try Decorrelate(
-        org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text))
-      catch { case _: Throwable => throw orig }
-    val df =
-      try org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, rewritten)
-      catch { case _: Throwable => throw orig }
-    df
-  }
-
-  /** Pre-analysis plan rewrites, applied only when a cheap textual gate
-    * matches and only when they actually change the parsed plan:
-    *
-    *  - qualified star over a USING join → `q.* EXCEPT (using cols)`
-    *    (Presto's star expansion excludes the using columns —
-    *    StatementAnalyzer; AbstractTestQueries
-    *    testQualifiedWildcardFromJoin — Spark silently includes them);
-    *  - the graft.Decorrelate subquery-shape rewrites. These must run
-    *    BEFORE analysis: the join-condition case surfaces from the
-    *    OPTIMIZER (RewritePredicateSubquery), after Engine.sql's
-    *    analysis-time retries have already passed.
-    *
-    * Any failure falls back to the plain spark.sql path (None), so the
-    * existing analysis-retry chain still sees the original error. */
-  private def preRewrites(text: String): Option[DataFrame] = {
-    val mask = PrestoSql.maskLiterals(text)
-    val subqHint =
-      java.util.regex.Pattern.compile("(?i)\\(\\s*SELECT\\b").matcher(mask).find()
-    val usingHint =
-      java.util.regex.Pattern.compile("(?i)\\bUSING\\s*\\(").matcher(mask).find() &&
-      java.util.regex.Pattern.compile("\\w\\s*\\.\\s*\\*").matcher(mask).find()
-    if (!subqHint && !usingHint) return None
-    try {
-      val parsed =
-        org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text)
-      var plan = parsed
-      if (usingHint) plan = Decorrelate.usingStarExcept(plan).getOrElse(plan)
-      if (subqHint) plan = Decorrelate(plan)
-      if (plan eq parsed) None
-      else Some(org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, plan))
-    } catch { case _: Throwable => None }
-  }
-
-  private def sortSourceToAlias(text: String, orig: Throwable): DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression, SortOrder}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project, Sort}
-    val parsed =
-      org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text)
-    def outputList(p: LogicalPlan): Seq[NamedExpression] = p match {
-      case Project(list, _) => list
-      case Aggregate(_, list, _, _) => list
-      case h: org.apache.spark.sql.catalyst.analysis.UnresolvedHaving =>
-        outputList(h.child)
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        outputList(f.child)
-      case _ => Seq.empty
-    }
-    var changed = false
-    val fixed = parsed.transform {
-      case s @ Sort(order, global, child, hint) =>
-        val list = outputList(child)
-        val outNames = list.collect {
-          case a: Alias => a.name.toLowerCase
-          case u: UnresolvedAttribute => u.nameParts.last.toLowerCase
-        }.toSet
-        // src -> alias, only for bare renames whose source name is NOT
-        // itself an output name (those resolve without help)
-        val aliasMap = list.collect {
-          case a @ Alias(u: UnresolvedAttribute, _)
-              if u.nameParts.length == 1 &&
-                !outNames.contains(u.nameParts.head.toLowerCase) =>
-            u.nameParts.head.toLowerCase -> a.name
-        }.toMap
-        if (aliasMap.isEmpty) s
-        else {
-          // grouping()/grouping_id() arguments must stay SOURCE columns
-          // (Spark matches them against the grouping expressions)
-          def inGrouping(so: SortOrder, u: UnresolvedAttribute): Boolean =
-            so.exists {
-              case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-                  if Set("grouping", "grouping_id")(
-                    f.nameParts.last.toLowerCase) =>
-                f.arguments.exists(_.exists(_ eq u))
-              case _ => false
-            }
-          val newOrder = order.map { so =>
-            so.transform {
-              case u: UnresolvedAttribute
-                  if u.nameParts.length == 1 &&
-                    aliasMap.contains(u.nameParts.head.toLowerCase) &&
-                    !inGrouping(so, u) =>
-                changed = true
-                UnresolvedAttribute(Seq(aliasMap(u.nameParts.head.toLowerCase)))
-            }.asInstanceOf[SortOrder]
-          }
-          Sort(newOrder, global, child, hint)
-        }
-    }
-    if (!changed) throw orig
-    org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, fixed)
-  }
-
-  /** `ORDER BY grouping(b)` where the SELECT list renames the grouping
-    * column away (AbstractTestQueries :1213 — `SELECT a, b AS t, ...
-    * GROUP BY GROUPING SETS ((a),(b)) ORDER BY grouping(b)`): Presto
-    * resolves grouping() in ORDER BY against the SOURCE scope
-    * (GroupingOperationRewriter), while Spark's Sort sees only the
-    * aggregate output, where `b` no longer exists. Retry path: hoist
-    * each grouping-bearing sort expression INTO the aggregate's select
-    * list under a hidden alias (that scope still sees the source
-    * columns), sort on the alias, and project the helpers away. */
-  private def sortGroupingHoist(text: String, orig: Throwable): DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedStarExceptOrReplace}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, NamedExpression}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project, Sort}
-    val parsed =
-      try org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text)
-      catch { case _: Throwable => throw orig }
-    def hasGrouping(e: Expression): Boolean = e.exists {
-      case f: UnresolvedFunction =>
-        Set("grouping", "grouping_id")(f.nameParts.last.toLowerCase)
-      case _ => false
-    }
-    var counter = 0
-    var changed = false
-    def hoist(order: Seq[org.apache.spark.sql.catalyst.expressions.SortOrder],
-        global: Boolean, agg: Aggregate,
-        rebuild: Aggregate => LogicalPlan): LogicalPlan = {
-      changed = true
-      val helpers = scala.collection.mutable.ArrayBuffer.empty[NamedExpression]
-      val newOrder = order.map { o =>
-        if (hasGrouping(o.child)) {
-          val nm = s"__graft_gord_$counter"; counter += 1
-          helpers += Alias(o.child, nm)()
-          o.copy(child = UnresolvedAttribute(Seq(nm)))
-        } else o
-      }
-      Project(
-        Seq(UnresolvedStarExceptOrReplace(None,
-          helpers.map(h => Seq(h.name)).toSeq, None)),
-        Sort(newOrder, global, rebuild(agg.copy(
-          aggregateExpressions = agg.aggregateExpressions ++ helpers))))
-    }
-    val fixed = parsed.transformUp {
-      case Sort(order, global, agg: Aggregate, _)
-          if order.exists(o => hasGrouping(o.child)) =>
-        hoist(order, global, agg, identity)
-      case Sort(order, global,
-          h @ org.apache.spark.sql.catalyst.analysis.UnresolvedHaving(_, agg: Aggregate), _)
-          if order.exists(o => hasGrouping(o.child)) =>
-        hoist(order, global, agg, a => h.copy(child = a))
-    }
-    if (!changed) throw orig
-    try org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, fixed)
-    catch { case _: Throwable => throw orig }
-  }
-
-  /** Presto permits window functions in ORDER BY
-    * (AbstractTestQueries testOrderByWithOutputColumnReference —
-    * `ORDER BY -row_number() OVER ()`); Spark's CheckAnalysis rejects
-    * window expressions outside Project/Aggregate
-    * (UNSUPPORTED_EXPR_FOR_OPERATOR on the Sort). Retry path: analyze
-    * without the final checks, then hoist each Sort-embedded window
-    * expression into a Window node below the sort (one node per distinct
-    * window spec — the same grouping ExtractWindowExpressions does for
-    * SELECT-level windows), sort on the hoisted attribute, and project
-    * the original output back out. */
-  private def windowInOrderBy(text: String, orig: Throwable): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, NamedExpression, SortOrder, WindowExpression}
-    import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort, Window}
-    val analyzed =
-      try org.apache.spark.sql.classic.GraftPlanBridge.analyze(spark,
-        // unordered ranking windows in the sort keys get the same constant
-        // sort order the top-level retry gives them (RowNumberOperator)
-        arbitraryWindowOrderPlan(
-          org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text)))
-      catch { case _: Throwable => throw orig }
-    var changed = false
-    val fixed = analyzed.transform {
-      case s @ Sort(order, global, child, hint)
-          if order.exists(_.exists(_.isInstanceOf[WindowExpression])) =>
-        changed = true
-        // alias every distinct window expression appearing in the sort keys
-        val winExprs = order.flatMap(_.collect { case w: WindowExpression => w })
-          .foldLeft(Seq.empty[WindowExpression])((acc, w) =>
-            if (acc.exists(_.semanticEquals(w))) acc else acc :+ w)
-        val aliases: Seq[(WindowExpression, Alias)] =
-          winExprs.zipWithIndex.map { case (w, i) =>
-            w -> Alias(w, s"__graft_ord_$i")()
-          }
-        // one Window node per distinct (partition, order) spec
-        val bySpec = aliases.groupBy { case (w, _) =>
-          (w.windowSpec.partitionSpec, w.windowSpec.orderSpec)
-        }
-        val withWindows = bySpec.foldLeft(child) {
-          case (p, ((part, ord), as)) =>
-            Window(as.map(_._2), part, ord, p)
-        }
-        val newOrder = order.map(_.transform {
-          case w: WindowExpression =>
-            aliases.find(_._1.semanticEquals(w)).get._2.toAttribute: Expression
-        }.asInstanceOf[SortOrder])
-        Project(child.output.map(a => a: NamedExpression),
-          Sort(newOrder, global, withWindows, hint))
-    }
-    if (!changed) throw orig
-    org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, fixed)
-  }
-
-  /** Presto allows grouping(...) over a PLAIN GROUP BY — every flag is 0
-    * (GroupingOperationRewriter: without grouping sets the arguments are
-    * always grouped); Spark rejects grouping()/grouping_id() outside
-    * grouping sets. Retry path: analyze without the final checks, then
-    * replace the surviving Grouping/GroupingID nodes with typed zeros —
-    * grouping-set aggregates rewrite theirs to gid attributes during
-    * analysis, so any that survive are exactly the plain-GROUP-BY ones. */
-  private def groupingAsZero(text: String, orig: Throwable): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Grouping, GroupingID, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    val analyzed =
-      try org.apache.spark.sql.classic.GraftPlanBridge.analyze(spark,
-        org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text))
-      catch { case _: Throwable => throw orig }
-    var changed = false
-    // Presto's GroupingOperationRewriter precondition: every grouping()
-    // argument must BE a grouping expression of the enclosing aggregation
-    // ("arguments must be grouping expressions") — substituting 0 for a
-    // non-key argument would silently succeed where the reference errors.
-    val fixed = analyzed.transform {
-      case a: Aggregate =>
-        def isKey(e: Expression): Boolean =
-          a.groupingExpressions.exists(_.semanticEquals(e))
-        a.transformExpressions {
-          case g: Grouping if isKey(g.child) =>
-            changed = true; Cast(Literal(0), g.dataType)
-          case g: GroupingID if g.groupByExprs.forall(isKey) =>
-            changed = true; Cast(Literal(0), g.dataType)
-        }
-    }
-    val leftover = fixed.collectFirst {
-      case p if p.expressions.exists(_.exists {
-            case _: Grouping | _: GroupingID => true; case _ => false
-          }) => p
-    }
-    if (!changed || leftover.isDefined) throw orig
-    org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, fixed)
-  }
-
-  /** Presto ROW values compare POSITIONALLY (RowType equality ignores
-    * field names); Spark's array_contains demands identical struct types,
-    * so `contains(array_agg(ROW(a, b)), ROW(1, 2))` fails on the field
-    * names alone (named_struct(a, b) vs struct(col1, col2)). Retry path:
-    * cast the needle to the array's element type when the shapes are
-    * positionally compatible. */
-  private def structPositionalContains(text: String, orig: Throwable): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{ArrayContains, Cast}
-    import org.apache.spark.sql.types.{ArrayType, StructType}
-    val analyzed =
-      try org.apache.spark.sql.classic.GraftPlanBridge.analyze(spark,
-        org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text))
-      catch { case _: Throwable => throw orig }
-    var changed = false
-    val fixed = analyzed.transformAllExpressions {
-      case ac @ ArrayContains(arr, elem)
-          if arr.resolved && elem.resolved && {
-            (arr.dataType, elem.dataType) match {
-              case (ArrayType(et: StructType, _), nt: StructType) =>
-                et != nt && et.length == nt.length
-              case _ => false
-            }
-          } =>
-        changed = true
-        val et = arr.dataType.asInstanceOf[ArrayType].elementType
-        ArrayContains(arr, Cast(elem, et))
-    }
-    if (!changed) throw orig
-    org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, fixed)
-  }
-
-  /** Presto expands `SELECT *, rank() OVER (...) ... GROUP BY 1` by
-    * resolving the star BEFORE checking the ordinals
-    * (AbstractTestQueries.java:3813 testWindowFunctionWithGroupBy); Spark
-    * rejects the combination outright (STAR_GROUP_BY_POS). The statement
-    * is Presto-legal only when the grouping ordinals cover the ENTIRE star
-    * expansion (any bare non-window column raises Presto's
-    * MUST_BE_AGGREGATE_OR_GROUP_BY), in which case the aggregate is
-    * exactly DISTINCT over the child's output. Retry path: rewrite the
-    * ordinal-grouped star aggregate to a projection (windows included)
-    * over Distinct(child). */
-  private def starGroupByOrdinal(text: String, orig: Throwable): DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedOrdinal, UnresolvedStar}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Project}
-    val parsed = org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text)
-    var changed = false
-    val fixed = parsed.transform {
-      case a: Aggregate
-          if a.aggregateExpressions.exists(_.isInstanceOf[UnresolvedStar]) &&
-            a.groupingExpressions.nonEmpty &&
-            a.groupingExpressions.forall(_.isInstanceOf[UnresolvedOrdinal]) =>
-        changed = true
-        Project(a.aggregateExpressions, Distinct(a.child))
-    }
-    if (!changed) throw orig
-    // the projected windows may themselves need the unordered-ranking fix
-    org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark,
-      arbitraryWindowOrderPlan(fixed))
-  }
-
-  /** Presto runs map_agg / multimap_agg / geometric_mean as window
-    * functions (MAIN/operator/WindowOperator + the aggregate-function
-    * window adapters); the compat builders wrap a Spark aggregate in a
-    * scalar expression (MapFromEntries / Exp), which cannot sit inside a
-    * WindowExpression — the analyzer reinterprets the inner aggregate as a
-    * grouping aggregate and raises MISSING_GROUP_BY. Retry path: hoist the
-    * scalar wrapper ABOVE the window at parse level, leaving a plain
-    * collect_list / avg window aggregate inside. */
-  private def windowScalarAggHoist(text: String, orig: Throwable): DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-    import org.apache.spark.sql.catalyst.expressions.{CreateStruct, WindowExpression}
-    def fn(name: String, args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
-      UnresolvedFunction(Seq(name), args, isDistinct = false)
-    val parsed = org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text)
-    var changed = false
-    val fixed = parsed.transformAllExpressions {
-      case we @ WindowExpression(f: UnresolvedFunction, spec) =>
-        f.nameParts.last.toLowerCase(java.util.Locale.ROOT) match {
-          case "map_agg" =>
-            changed = true
-            fn("map_from_entries",
-              Seq(WindowExpression(fn("collect_list",
-                Seq(CreateStruct(f.arguments))), spec)))
-          case "multimap_agg" =>
-            changed = true
-            fn("multimap_from_entries",
-              Seq(WindowExpression(fn("collect_list",
-                Seq(CreateStruct(f.arguments))), spec)))
-          case "geometric_mean" =>
-            changed = true
-            fn("exp", Seq(WindowExpression(
-              fn("avg", Seq(fn("ln", f.arguments))), spec)))
-          case _ => we
-        }
-    }
-    if (!changed) throw orig
-    org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, fixed)
-  }
-
-  /** Presto's WindowOperator/RowNumberOperator run ranking functions over
-    * UNORDERED windows (`row_number() OVER (PARTITION BY a)` — arbitrary
-    * order, MAIN/operator/RowNumberOperator.java); Spark's analyzer insists
-    * on an ORDER BY. Retry path: give exactly those windows a constant sort
-    * (SortOrder(1) — every row equal, i.e. arbitrary order, no extra
-    * exchange). Aggregate windows are left alone — adding an order would
-    * silently shrink their default frame to RANGE ... CURRENT ROW. */
-  private def arbitraryWindowOrder(text: String): DataFrame =
-    org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark,
-      arbitraryWindowOrderPlan(org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text)))
-
-  private def arbitraryWindowOrderPlan(
-      parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, Literal, SortOrder, WindowExpression, WindowSpecDefinition}
-    val needsOrder = Set("row_number", "rank", "dense_rank", "percent_rank",
-      "cume_dist", "ntile", "lag", "lead")
-    parsed.transformAllExpressions {
-      case WindowExpression(f: UnresolvedFunction, spec: WindowSpecDefinition)
-          if spec.orderSpec.isEmpty &&
-            needsOrder(f.nameParts.last.toLowerCase(java.util.Locale.ROOT)) =>
-        WindowExpression(f,
-          spec.copy(orderSpec = Seq(SortOrder(Literal(1), Ascending))))
-    }
-  }
-
-  /** Presto evaluates an untyped NULL predicate as UNKNOWN (no rows) —
-    * `WHERE NULL` is legal (AbstractTestAggregations testCountWithNull
-    * Predicate); Spark rejects the VOID filter. Retry with the null
-    * predicate cast to BOOLEAN. */
-  private def nullFilterAsBoolean(text: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical.Filter
-    import org.apache.spark.sql.types.{BooleanType, NullType}
-    val parsed = org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text)
-    val fixed = parsed.transformUp {
-      case Filter(l @ Literal(null, NullType), child) =>
-        Filter(Cast(l, BooleanType), child)
-    }
-    org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, fixed)
-  }
-
-  /** Presto VALUES rows may hold any expression; Spark's inline tables
-    * reject lambdas/HOFs (INVALID_INLINE_TABLE). Retry with the inline
-    * table lowered to a UNION ALL of one-row projections — same rows, same
-    * cross-branch type coercion. */
-  private def inlineTableAsUnion(text: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedInlineTable
-    import org.apache.spark.sql.catalyst.expressions.Alias
-    import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project, Union}
-    val parsed = org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text)
-    val fixed = parsed.transformUpWithSubqueries {
-      case UnresolvedInlineTable(names, rows) =>
-        rows.map { r =>
-          Project(r.zip(names).map { case (e, nm) => Alias(e, nm)() },
-            OneRowRelation()): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-        }.reduce(Union(_, _))
-    }
-    org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, fixed)
+    oneBasedSubscripts(spark.sql(text), text)
   }
 
   /** Post-analysis expression-semantics pass (these rewrites need resolved
@@ -1764,8 +1020,8 @@ class Engine(parent: SparkSession) {
           // only the engine's temp-view-backed tables need the
           // reconstructed DDL; permanent tables/views keep Spark's
           // native SHOW CREATE TABLE rendering
-          if (try spark.catalog.getTable(name).isTemporary
-              catch { case _: Throwable => false }) =>
+          if spark.catalog.tableExists(name) &&
+            spark.catalog.getTable(name).isTemporary =>
         accessControl.checkTable(name, "SELECT")
         Some(planDf(showCreateTable(name))
           .withColumnRenamed("Query Plan", "Create Table"))
@@ -1780,9 +1036,7 @@ class Engine(parent: SparkSession) {
             Some(planDf(s"CREATE VIEW $name AS\n${text.trim}")
               .withColumnRenamed("Query Plan", "Create View"))
           case None =>
-            val isTable =
-              try { spark.table(name); true } catch { case _: Throwable => false }
-            if (isTable) throw new IllegalArgumentException(
+            if (spark.catalog.tableExists(name)) throw new IllegalArgumentException(
               s"Relation '$name' is a table, not a view")
             throw new IllegalArgumentException(s"View '$name' does not exist")
         }
@@ -2149,11 +1403,6 @@ class Engine(parent: SparkSession) {
 
 object Engine {
   def apply(spark: SparkSession): Engine = new Engine(spark)
-
-  /** date_add/date_diff units that shift the INSTANT of a tstz; calendar
-    * units (day and up) operate on the wall time in the value's zone. */
-  private[graft] val instantShiftUnits: Set[String] =
-    Set("MICROSECOND", "MILLISECOND", "SECOND", "MINUTE", "HOUR")
 
   private[graft] def deleteDir(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteDir)

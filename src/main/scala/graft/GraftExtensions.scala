@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Planner-only extensions: custom strategies + the graft optimizer rules,
-  * with NO function-name overrides. Safe on ANY session — including ones
+  * with NO function-name overrides and none of the dialect's analyzer rules
+  * (PrestoDialect). Safe on ANY session — including ones
   * running plain Spark DataFrame code, because several Presto names (`map`,
   * `split`, `max_by`, …) deliberately differ from the Spark builtins and
   * Spark 4's `functions.*` API resolves BY NAME through the session
@@ -84,7 +85,9 @@ class GraftPlannerExtensions extends (SparkSessionExtensions => Unit) {
   * production path for a Presto-dialect deployment (the per-session
   * `Engine` constructor covers embedded/mixed use, where the compat names
   * must not shadow Spark builtins for DataFrame-API code). Equivalent role
-  * to the reference's Plugin.getFunctions (SPI/Plugin.java:53).
+  * to the reference's Plugin.getFunctions (SPI/Plugin.java:53). The
+  * dialect's analyzer rules (PrestoDialect) come with it, as on an
+  * `Engine` session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -94,6 +97,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft.functions.PrestoFunctions", name),
         (args: Seq[Expression]) => builder(args)))
     }
+    PrestoDialect.install(ext)
     new GraftPlannerExtensions()(ext)
   }
 }

@@ -1,7 +1,8 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.DecimalType
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -25,30 +26,18 @@ object Verify {
     // optional: names after the first two args restrict the dump (fast
     // local iteration; the driver always runs the full set)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.localExchangeConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same engine rules as every other session (GraftExtensions): the
-      // correctness gate exercises the scaled-sum rewrite on every money
-      // query, and the dynamic-filter tiers explicitly via the
-      // q64_dynfilter_* entries (which lower the scale-sized fact floor
-      // on an isolated child session)
-      .withExtensions(new GraftPlannerExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // partitioned hash join posture — see GraftSession.local
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.shuffledHashJoinFactor", "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the benchmarked posture (GraftSession.local): the gate checks the
+    // plans graft.Bench times, including the q64_dynfilter_* entries'
+    // dynamic-filter tiers (they lower the scale-sized fact floor on an
+    // isolated child session)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       try normalize(fn(spark, sfDir)).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

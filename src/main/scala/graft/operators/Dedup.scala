@@ -91,7 +91,8 @@ object Dedup {
       .cast("long")
 
   /** 64-bit SimHash of a token-array column: per-bit majority vote of token
-    * xxhash64 values. Pure codegen'd expression tree (nested HOFs), no UDF.
+    * xxhash64 values. A built-in expression tree, no UDF — but the nested
+    * aggregate/transform lambdas are evaluated interpretively, per row.
     * `tokensCol` is the name of an array<string> column in scope. */
   def simhash(tokensCol: String): Column = expr(s"""
     aggregate(

@@ -25,7 +25,7 @@ object Windows {
     // Aggregate-typed window functions whose compat builders wrap a Spark
     // aggregate in a scalar (map_agg → MapFromEntries(collect_list),
     // geometric_mean → Exp(Avg(Ln))): Presto's WindowOperator runs any
-    // aggregate over a window, so Engine.windowScalarAggHoist lifts the
+    // aggregate over a window, so PrestoDialect.WindowAggregateHoist lifts the
     // scalar wrapper above the WindowExpression at parse level. Keys are
     // o_orderkey within a custkey partition — globally unique, so the map
     // build is deterministic (the synthetic lineitem fixture repeats

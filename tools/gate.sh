@@ -18,10 +18,6 @@ case "$POSTURE" in
   flat) unset SPARK_GRAFT_CONF ;;
   off)
     export SPARK_GRAFT_CONF="spark.graft.eagerAgg=false,spark.graft.dynamicFilter.enabled=false,spark.graft.scaledLongSum=false,spark.graft.cascadeGroupingSets=false,spark.graft.fuseScalarAggs=false,spark.graft.dynamicFrameJoin=false,spark.graft.singleStageAgg=false,spark.graft.sortSharedAgg=false,spark.graft.streamingSortedAgg=false,spark.graft.streamingSortedAgg.hybrid=false,spark.graft.joinReorder=false,spark.graft.layoutPick=false"
-    # graft.Verify builds its own session and does not read
-    # SPARK_GRAFT_CONF; Spark loads spark.* JVM system properties into every
-    # session's conf, so pass the same keys as -D options too
-    export JAVA_TOOL_OPTIONS="${JAVA_TOOL_OPTIONS:-} $(echo "$SPARK_GRAFT_CONF" | tr ',' '\n' | sed 's/^/-D/' | tr '\n' ' ')"
     ;;
   *) echo "unknown posture: $POSTURE (flat|off)" >&2; exit 2 ;;
 esac
