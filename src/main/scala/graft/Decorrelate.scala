@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFu
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
+import scala.util.control.NonFatal
 
 /** Front-end decorrelation for the subquery shapes Presto's planner accepts
   * but Spark's analyzer refuses (reference: presto-main
@@ -196,7 +197,7 @@ object Decorrelate {
             }
             val nm =
               try org.apache.spark.sql.catalyst.util.toPrettySQL(raw)
-              catch { case _: Throwable => s"__graft_prj_$i" }
+              catch { case NonFatal(_) => s"__graft_prj_$i" }
             Alias(raw, nm)()
         }
         // the outer star ranges over the WIDENED inner projection, so it

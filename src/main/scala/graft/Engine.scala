@@ -19,8 +19,8 @@ class Engine(parent: SparkSession) {
     * builtins for DataFrame-API code running on the parent session —
     * `functions.split` & co. resolve BY NAME through the session's registry
     * on Spark 4, so registering compat names on a shared session silently
-    * changes unrelated plans. The same holds for the dialect's analyzer
-    * rules (PrestoDialect), installed on this session only. */
+    * changes unrelated plans. The same holds for the dialect's parser and
+    * analyzer rules (PrestoDialect), installed on this session only. */
   val spark: SparkSession = org.apache.spark.sql.classic.GraftPlanBridge
     .newSession(parent, PrestoDialect.install)
 
@@ -271,7 +271,7 @@ class Engine(parent: SparkSession) {
   }
 
   private def rebindView(name: String): Unit =
-    try spark.sql(PrestoSql.rewrite(viewTexts(name))).createOrReplaceTempView(name)
+    try spark.sql(viewTexts(name)).createOrReplaceTempView(name)
     catch { case _: org.apache.spark.sql.AnalysisException =>
       // base table gone / incompatibly changed: the view is STALE — drop
       // the binding so only queries that touch it fail (with NOT_FOUND)
@@ -407,429 +407,9 @@ class Engine(parent: SparkSession) {
         InformationSchema.register(this)
         InformationSchema.repoint(query)
       } else query
-    // the Presto dialect fixes run inside this analysis (PrestoDialect)
-    val text = PrestoSql.rewrite(query1)
-    oneBasedSubscripts(spark.sql(text), text)
-  }
-
-  /** Post-analysis expression-semantics pass (these rewrites need resolved
-    * types, so they run on the ANALYZED plan, descending into subqueries):
-    *
-    *  - Presto array subscripts are 1-based and the SQL `[i]` form is the
-    *    idiomatic spelling (SPI/type/ArrayType — "SQL array indices start
-    *    at 1"); Spark's parser resolves the same form 0-based. Every
-    *    GetArrayItem ordinal shifts by -1 (map subscripts resolve to
-    *    GetMapValue and pass through untouched). ANSI mode keeps Presto's
-    *    out-of-bounds/zero-index errors.
-    *  - Presto CAST(double/real AS integral) rounds halves AWAY FROM ZERO
-    *    (DoubleOperators.castToLong → DoubleMath.roundToLong(v, HALF_UP);
-    *    the narrower widths go through MathFunctions.round, which is
-    *    -Math.round(-x) for negatives): CAST(-2.5 AS BIGINT) = -3.
-    *    CAST(decimal AS integral) is HALF_UP away from zero (DecimalCasts).
-    *    Spark truncates toward zero, so the exact rounding lands before the
-    *    cast; TRY_CAST shares the Cast node and follows.
-    *  - Presto `/` between integral types is TRUNCATED integer division
-    *    (BigintOperators.divide `left / right` on Java longs: 7/2=3,
-    *    -7/2=-3); Spark (and DuckDB) widen to double. Coercion-inserted
-    *    casts are distinguished from user-written `CAST(x AS DOUBLE)` by
-    *    Cast.USER_SPECIFIED_CAST, so `CAST(a AS DOUBLE) / b` keeps double
-    *    division while `a / b` truncates. ANSI IntegralDivide keeps
-    *    Presto's division-by-zero error.
-    */
-  private def oneBasedSubscripts(df: DataFrame, text: String = ""): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{And, BinaryComparison, CaseWhen, Cast, Divide, EqualNullSafe, EqualTo, Exists, Expression, Floor, GetArrayItem, Greatest, In, InSubquery, IntegralDivide, IsNull, Length, ListQuery, Literal, NamedExpression, Round, StringRPad, StringTrimRight, Subtract, SubqueryExpression}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
-    import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType}
-    def isIntegral(t: DataType): Boolean =
-      t == LongType || t == IntegerType || t == ShortType || t == ByteType
-    // (Presto's NULLS LAST default ordering is applied per sort item in the
-    // PrestoSql front-end — literal-aware, coexists with explicit NULLS
-    // FIRST/LAST in the same query.)
-    var changed = false
-    var retyped = false
-    // A division operand that is integral in the USER's query: either the
-    // analyzer's coercion cast to double over an integral child (a
-    // user-written CAST(x AS DOUBLE) carries USER_SPECIFIED_CAST and is
-    // excluded), or the integral result of a nested rewrite (chained a/b/c,
-    // visited bottom-up).
-    object IntegralOperand {
-      def unapply(e: Expression): Option[Expression] = e match {
-        case c @ Cast(ch, DoubleType, _, _)
-            if isIntegral(ch.dataType) &&
-              c.getTagValue(Cast.USER_SPECIFIED_CAST).isEmpty => Some(ch)
-        case _ if isIntegral(e.dataType) => Some(e)
-        case _ => None
-      }
-    }
-    // One rewritten CASE per canonicalized IN-subquery: a GROUP BY key and
-    // its projection copy must stay STRUCTURALLY identical (same new
-    // ExprIds) or re-analysis rejects the aggregate.
-    val inCache = scala.collection.mutable.Map.empty[Expression, Expression]
-    lazy val basic: PartialFunction[Expression, Expression] = {
-      case g: GetArrayItem =>
-        changed = true
-        GetArrayItem(g.child,
-          Subtract(g.ordinal, Cast(Literal(1), g.ordinal.dataType)),
-          g.failOnError)
-      case c @ Cast(child, LongType | IntegerType | ShortType | ByteType, _, _)
-          if (child.dataType == DoubleType || child.dataType == FloatType) &&
-            !child.isInstanceOf[CaseWhen] =>
-        changed = true
-        // Half away from zero: floor(x+0.5) for x>=0, ceil(x-0.5) for x<0.
-        val d = Cast(child, DoubleType)
-        c.copy(child = CaseWhen(Seq((
-          org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual(
-            d, Literal(0d)),
-          Floor(org.apache.spark.sql.catalyst.expressions.Add(d, Literal(0.5d))))),
-          Some(org.apache.spark.sql.catalyst.expressions.Ceil(
-            org.apache.spark.sql.catalyst.expressions.Subtract(d, Literal(0.5d))))))
-      case c @ Cast(child, LongType | IntegerType | ShortType | ByteType, _, _)
-          if child.dataType.isInstanceOf[DecimalType] &&
-            !child.isInstanceOf[Round] =>
-        changed = true
-        c.copy(child = Round(child, Literal(0)))
-      // Presto renders intervals as "%d %02d:%02d:%02d.%03d" / "%d-%d"
-      // (IntervalDayTime.formatMillis, IntervalYearMonth.formatMonths);
-      // Spark casts them to its own INTERVAL literal syntax. StaticInvoke
-      // receives the physical value (micros / months) and keeps codegen.
-      case Cast(child, st: org.apache.spark.sql.types.StringType, _, _)
-          if child.resolved &&
-            (child.dataType.isInstanceOf[org.apache.spark.sql.types.DayTimeIntervalType] ||
-              child.dataType.isInstanceOf[org.apache.spark.sql.types.YearMonthIntervalType]) =>
-        changed = true
-        val dayTime =
-          child.dataType.isInstanceOf[org.apache.spark.sql.types.DayTimeIntervalType]
-        org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
-          Class.forName("graft.functions.ScalarOps"), st,
-          if (dayTime) "formatIntervalDayTime" else "formatIntervalYearMonth",
-          Seq(child), Seq(child.dataType),
-          propagateNull = true, returnNullable = false)
-      // Presto's common supertype of REAL and DECIMAL is REAL
-      // (TypeRegistry.java:509 — decimal coerces to real, real only widens
-      // to double), so `real_expr = decimal_expr` compares at FLOAT
-      // precision: CAST(1.2 AS REAL) = DECIMAL '1.2' is TRUE. Spark widens
-      // both to double, where the float's excess mantissa garbage breaks
-      // equality. Retype the comparison to float when one side is a real
-      // under a coercion cast and the other a decimal.
-      case cmp: org.apache.spark.sql.catalyst.expressions.BinaryComparison
-          if {
-            def floatUnderCoercion(e: Expression) = e match {
-              case c @ Cast(f, DoubleType, _, _) =>
-                f.dataType == FloatType &&
-                  c.getTagValue(Cast.USER_SPECIFIED_CAST).isEmpty
-              case _ => false
-            }
-            def decimalUnderCoercion(e: Expression) = e match {
-              case c @ Cast(d, DoubleType, _, _) =>
-                d.dataType.isInstanceOf[DecimalType] &&
-                  c.getTagValue(Cast.USER_SPECIFIED_CAST).isEmpty
-              case _ => false
-            }
-            (floatUnderCoercion(cmp.left) && decimalUnderCoercion(cmp.right)) ||
-              (decimalUnderCoercion(cmp.left) && floatUnderCoercion(cmp.right))
-          } =>
-        changed = true
-        val Seq(l, r) = Seq(cmp.left, cmp.right).map {
-          case Cast(f, DoubleType, _, _) if f.dataType == FloatType => f
-          case Cast(d, DoubleType, _, _) => Cast(d, FloatType)
-        }
-        cmp.withNewChildren(Seq(l, r))
-      case Divide(IntegralOperand(le), IntegralOperand(re), ctx) =>
-        changed = true; retyped = true
-        val wide = Seq(le.dataType, re.dataType)
-          .maxBy(t => t.defaultSize) // Byte < Short < Int < Long
-        val q = IntegralDivide(Cast(le, LongType), Cast(re, LongType))
-        val typed = if (wide == LongType) q else Cast(q, wide)
-        // IntegralDivide has no TRY mode — try_divide(int, int) keeps its
-        // NULL-on-zero contract via a TryEval wrapper instead.
-        if (ctx.evalMode == org.apache.spark.sql.catalyst.expressions.EvalMode.TRY)
-          org.apache.spark.sql.catalyst.expressions.TryEval(typed)
-        else typed
-      // Double division is IEEE in Presto (DoubleOperators.divide —
-      // x/0 → ±Infinity, 0/0 → NaN); Spark's Divide NULLs (legacy) or
-      // throws (ANSI) on a zero divisor. StaticInvoke keeps codegen.
-      case d @ Divide(l, r, _)
-          if d.dataType == DoubleType &&
-            l.dataType == DoubleType && r.dataType == DoubleType =>
-        changed = true
-        org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
-          Class.forName("graft.functions.ScalarOps"), DoubleType,
-          "ieeeDivide", Seq(l, r), Seq(DoubleType, DoubleType),
-          propagateNull = true, returnNullable = false)
-      case s: SubqueryExpression => s.withNewPlan(shift(s.plan))
-    }
-    // Presto's IN keeps three-valued logic when PROJECTED as a value
-    // (SemiJoinOperator emits NULL for a null probe or a null-bearing build
-    // side); Spark plans ExistenceJoin, which collapses those cases to
-    // FALSE. Outside filter/join conditions (where NULL ≡ FALSE anyway) a
-    // projected `v IN (subq)` becomes
-    //   CASE WHEN v IN (subq) THEN TRUE
-    //        WHEN v IS NULL AND EXISTS (subq) THEN NULL
-    //        WHEN EXISTS (subq WHERE col IS NULL) THEN NULL
-    //        ELSE FALSE END.
-    lazy val projectedIn: PartialFunction[Expression, Expression] = {
-      case in @ InSubquery(Seq(v), l: ListQuery) if l.plan.output.length == 1 =>
-        changed = true
-        inCache.getOrElseUpdate(in.canonicalized, {
-          val nullB = Literal(null, BooleanType)
-          CaseWhen(Seq(
-            (in, Literal(true)),
-            (And(IsNull(v),
-              Exists(l.plan, l.outerAttrs, NamedExpression.newExprId)), nullB),
-            (Exists(Filter(IsNull(l.plan.output.head), l.plan),
-              l.outerAttrs, NamedExpression.newExprId), nullB)),
-            Some(Literal(false)))
-        })
-    }
-    def shift(plan: LogicalPlan): LogicalPlan = plan.transformUp { node =>
-      node match {
-        case _: Filter | _: Join => node.transformExpressionsUp(basic)
-        case _ => node.transformExpressionsUp(basic.orElse(projectedIn))
-      }
-    }
-    // The integer-division rewrite changes an output TYPE (double →
-    // integral); any AttributeReference downstream of the defining Alias
-    // still carries the stale double, and the analyzer's old coercion casts
-    // around those references bake in the stale promotion (q + 1 must be
-    // integral again, not double). Refresh to a fixpoint: update stale refs
-    // from the alias types seen so far (CTERelationRef keeps an output
-    // snapshot — refresh it too), and STRIP untagged numeric coercion casts
-    // over integral children — re-analysis in ofRows re-inserts exactly the
-    // coercion the new types need, matching Presto's own promotion rules.
-    def refreshTypes(plan: LogicalPlan): LogicalPlan = {
-      import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
-      import org.apache.spark.sql.catalyst.plans.logical.CTERelationRef
-      val types = scala.collection.mutable.Map.empty[
-        org.apache.spark.sql.catalyst.expressions.ExprId, DataType]
-      var cur = plan
-      var dirty = true
-      var iters = 0
-      while (dirty && iters < 8) {
-        dirty = false; iters += 1
-        cur = cur.transformUpWithSubqueries { case node0 =>
-          val node = node0 match {
-            case r: CTERelationRef if r.output.exists(a =>
-                types.get(a.exprId).exists(_ != a.dataType)) =>
-              dirty = true
-              r.copy(output = r.output.map {
-                case a: AttributeReference
-                    if types.get(a.exprId).exists(_ != a.dataType) =>
-                  a.copy(dataType = types(a.exprId))(a.exprId, a.qualifier)
-                case a => a
-              })
-            case n => n
-          }
-          node.transformExpressionsUp {
-            case a: AttributeReference
-                if types.get(a.exprId).exists(_ != a.dataType) =>
-              dirty = true
-              a.copy(dataType = types(a.exprId))(a.exprId, a.qualifier)
-            case c @ Cast(ch, DoubleType | FloatType | _: DecimalType, _, _)
-                if isIntegral(ch.dataType) &&
-                  c.getTagValue(Cast.USER_SPECIFIED_CAST).isEmpty =>
-              dirty = true
-              ch
-            case al: Alias =>
-              types(al.exprId) = al.dataType; al
-          }
-        }
-      }
-      cur
-    }
-    // Presto CHAR comparisons are PAD-INSENSITIVE across lengths
-    // (Chars.compareChars logically pads the shorter operand with spaces;
-    // CharOperators.equal compares trimmed values). The rpad representation
-    // already matches for equal-length chars; comparisons with a
-    // CharMark-tagged operand lower to trim (equality) or
-    // trim+pad-to-common-length (ordering — exact compareChars semantics,
-    // including sub-space bytes like '\0' sorting before the pad). Marks
-    // are stripped afterwards and never execute.
-    def charPass(plan: LogicalPlan): LogicalPlan = {
-      import graft.functions.CharMark
-      def strip(e: Expression): Expression = e match {
-        case CharMark(c) => c
-        case other => other
-      }
-      def marked(e: Expression): Boolean = e.isInstanceOf[CharMark]
-      def trimmed(e: Expression): Expression = StringTrimRight(strip(e))
-      val cmpFixed = plan.transformUpWithSubqueries { case node =>
-        node.transformExpressionsUp {
-          case cmp: BinaryComparison if marked(cmp.left) || marked(cmp.right) =>
-            changed = true
-            val l = trimmed(cmp.left)
-            val r = trimmed(cmp.right)
-            cmp match {
-              case _: EqualTo => EqualTo(l, r)
-              case _: EqualNullSafe => EqualNullSafe(l, r)
-              case _ =>
-                val g = Greatest(Seq(Length(l), Length(r)))
-                cmp.withNewChildren(Seq(
-                  StringRPad(l, g, Literal(" ")),
-                  StringRPad(r, g, Literal(" "))))
-            }
-          case In(v, list) if (v +: list).exists(marked) =>
-            changed = true
-            In(trimmed(v), list.map(trimmed))
-        }
-      }
-      cmpFixed.transformUpWithSubqueries { case node =>
-        node.transformExpressionsUp {
-          case m: CharMark => changed = true; m.child
-        }
-      }
-    }
-    // TIMESTAMP WITH TIME ZONE semantics that analyze fine but differ
-    // (functions/Tstz.scala): comparisons use the INSTANT only
-    // (DateTimeOperators — equal instants in different zones are equal),
-    // and CAST(tstz AS VARCHAR) renders Joda 'yyyy-MM-dd HH:mm:ss.SSS ZZZ'
-    // instead of Spark's struct rendering.
-    def tstzPass(plan: LogicalPlan): LogicalPlan = {
-      import graft.functions.{Tstz, TstzToString}
-      import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
-      import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, First}
-      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Sort}
-      def hasTstz(e: Expression): Boolean =
-        e.resolved && Tstz.containsTstz(e.dataType)
-      // replace occurrences of a tstz grouping expression OUTSIDE aggregate
-      // functions with first(g): the instant is the group key, the rendered
-      // value is a per-group representative — the reference's hashtable
-      // keeps an arbitrary representative the same way
-      // (TimestampWithTimeZoneType equality/hash read only the millis)
-      def firstify(e: Expression, groups: Seq[Expression]): Expression = e match {
-        case ae: AggregateExpression => ae
-        case g if groups.exists(_.semanticEquals(g)) =>
-          changed = true
-          First(g, ignoreNulls = false).toAggregateExpression()
-        case other => other.mapChildren(c => firstify(c, groups))
-      }
-      def instantGroups(agg: Aggregate): Aggregate = {
-        val tstzGroups = agg.groupingExpressions.filter(hasTstz)
-        val newGroups = agg.groupingExpressions.map(g =>
-          if (hasTstz(g)) { changed = true; Tstz.stripZones(g) } else g)
-        val newAggs = agg.aggregateExpressions.map { ne =>
-          firstify(ne, tstzGroups) match {
-            case ae: AggregateExpression =>
-              // a bare grouping attribute became first(attr): keep the
-              // original name AND exprId so downstream references hold
-              Alias(ae, ne.name)(ne.exprId, ne.asInstanceOf[NamedExpression].qualifier)
-            case other => other.asInstanceOf[NamedExpression]
-          }
-        }
-        agg.copy(groupingExpressions = newGroups, aggregateExpressions = newAggs)
-      }
-      plan.transformUpWithSubqueries { case node0 =>
-        // GROUP BY / DISTINCT / ORDER BY over tstz use the INSTANT only
-        // (TimestampWithTimeZoneType.java — equality, hash and comparison
-        // all read the packed millis; the zone is display metadata)
-        val node = node0 match {
-          case agg: Aggregate
-              if agg.resolved && agg.groupingExpressions.exists(hasTstz) &&
-                !agg.child.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Expand] =>
-            instantGroups(agg)
-          case d @ Distinct(child)
-              if d.resolved && child.output.exists(a => hasTstz(a)) =>
-            changed = true
-            instantGroups(Aggregate(
-              child.output, child.output.toIndexedSeq, child))
-          case s: Sort if s.resolved && s.order.exists(o => hasTstz(o.child)) =>
-            changed = true
-            s.copy(order = s.order.map(o =>
-              if (hasTstz(o.child)) o.copy(child = Tstz.stripZones(o.child)) else o))
-          // window PARTITION BY / ORDER BY over tstz key on the INSTANT
-          // only, like GROUP BY: two renderings of the same instant are
-          // one window partition (TimestampWithTimeZoneType hash/compare
-          // read only the packed millis). Function ARGUMENTS keep the
-          // full (instant, zone) value. The spec copies inside each
-          // WindowExpression are rewritten in step so frame evaluation
-          // sees the same keys the node partitions on.
-          case w: org.apache.spark.sql.catalyst.plans.logical.Window
-              if w.resolved && (w.partitionSpec.exists(hasTstz) ||
-                w.orderSpec.exists(o => hasTstz(o.child))) =>
-            changed = true
-            def strip(e: Expression): Expression =
-              if (hasTstz(e)) Tstz.stripZones(e) else e
-            w.copy(
-              windowExpressions = w.windowExpressions.map(_.transformUp {
-                case wsd: org.apache.spark.sql.catalyst.expressions.WindowSpecDefinition =>
-                  wsd.copy(
-                    partitionSpec = wsd.partitionSpec.map(strip(_)),
-                    orderSpec = wsd.orderSpec.map(o =>
-                      o.copy(child = strip(o.child))))
-              }.asInstanceOf[NamedExpression]),
-              partitionSpec = w.partitionSpec.map(strip(_)),
-              orderSpec = w.orderSpec.map(o => o.copy(child = strip(o.child))))
-          case n => n
-        }
-        node.transformExpressionsUp {
-          case c @ Cast(child, StringType, _, _)
-              if child.resolved && Tstz.isTstz(child.dataType) =>
-            changed = true
-            TstzToString(child)
-          // ttz renders 'HH:mm:ss.SSS <zone-as-stored>'
-          // (TIME_WITH_TIME_ZONE_FORMATTER)
-          case c @ Cast(child, StringType, _, _)
-              if child.resolved && graft.functions.Ttz.isTtz(child.dataType) =>
-            changed = true
-            graft.functions.TtzToString(child)
-          // plain TIME renders 'HH:mm:ss.SSS' — always 3 fractional digits
-          // (TimeOperators.castToSlice); Spark strips trailing zeros
-          case c @ Cast(child, StringType, _, _)
-              if child.resolved &&
-                child.dataType.isInstanceOf[org.apache.spark.sql.types.TimeType] =>
-            changed = true
-            graft.functions.TimeToString(child)
-          // ipaddress renders RFC 5952 canonical text; → varbinary is the
-          // raw 16 bytes (IpAddressOperators casts)
-          case c @ Cast(child, StringType, _, _)
-              if child.resolved && graft.functions.IpAddr.isIp(child.dataType) =>
-            changed = true
-            graft.functions.IpToString(child)
-          case c @ Cast(child, org.apache.spark.sql.types.BinaryType, _, _)
-              if child.resolved && graft.functions.IpAddr.isIp(child.dataType) =>
-            changed = true
-            graft.functions.IpAddr.bytes(child)
-          // instants only, including tstz NESTED in rows/arrays
-          // (RowOperators compares fields with the type's own operator)
-          case cmp: BinaryComparison
-              if cmp.left.resolved && cmp.right.resolved &&
-                (Tstz.containsTstz(cmp.left.dataType) ||
-                  Tstz.containsTstz(cmp.right.dataType)) =>
-            changed = true
-            cmp.withNewChildren(Seq(
-              Tstz.stripZones(cmp.left), Tstz.stripZones(cmp.right)))
-          case In(v, list)
-              if v.resolved && Tstz.containsTstz(v.dataType) &&
-                list.forall(_.resolved) =>
-            changed = true
-            In(Tstz.stripZones(v), list.map(Tstz.stripZones))
-          // DISTINCT aggregates (count(DISTINCT x), sum(DISTINCT x), …)
-          // dedup on the INSTANT: strip zones from the aggregated input
-          case ae: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-              if ae.isDistinct && ae.aggregateFunction.children.exists(c =>
-                c.resolved && Tstz.containsTstz(c.dataType)) &&
-                // only when the result type survives the strip: a
-                // collect-style aggregate (array_agg(DISTINCT x)) derives
-                // its type from the child — retyping it post-analysis
-                // would leave parent AttributeReferences stale
-                ae.aggregateFunction.withNewChildren(
-                  ae.aggregateFunction.children.map(c =>
-                    if (c.resolved && Tstz.containsTstz(c.dataType))
-                      Tstz.stripZones(c)
-                    else c)).dataType == ae.aggregateFunction.dataType =>
-            changed = true
-            ae.copy(aggregateFunction = ae.aggregateFunction
-              .withNewChildren(ae.aggregateFunction.children.map(c =>
-                if (c.resolved && Tstz.containsTstz(c.dataType))
-                  Tstz.stripZones(c)
-                else c)).asInstanceOf[
-                org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction])
-        }
-      }
-    }
-    val shifted0 = shift(tstzPass(charPass(df.queryExecution.analyzed)))
-    val shifted = if (retyped) refreshTypes(shifted0) else shifted0
-    if (!changed) df
-    else org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, shifted)
+    // the session's parser and analyzer do the Presto dialect
+    // (PrestoDialect): one parse, one analysis
+    spark.sql(query1)
   }
 
   /** GRANT <privileges> ON <table> TO <grantee> (SqlBase.g4:58-61). */
@@ -1294,7 +874,7 @@ class Engine(parent: SparkSession) {
   def describeInput(name: String): Seq[(Int, String)] = {
     val text = prepared.getOrElse(name,
       throw new IllegalArgumentException(s"Prepared statement $name not found"))
-    val parsed = org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text)
+    val parsed = spark.sessionState.sqlParser.parsePlan(text)
     val positions = scala.collection.mutable.SortedSet.empty[Int]
     def scan(e: org.apache.spark.sql.catalyst.expressions.Expression): Unit =
       e.foreach {
@@ -1323,11 +903,14 @@ class Engine(parent: SparkSession) {
     val text =
       if (markers == 0) text0
       else bindPositional(text0, Seq.fill(markers)("NULL"))
-    val parsed = org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, text)
-    val analyzed = spark.sessionState.analyzer.executeAndCheck(
-      parsed, new org.apache.spark.sql.catalyst.QueryPlanningTracker)
-    analyzed.output.map(a => a.name -> a.dataType.sql)
+    analyzeOnly(text).output.map(a => a.name -> a.dataType.sql)
   }
+
+  /** The analysed plan of a statement, which is never executed: eager
+    * command execution in spark.sql() would actually run a DDL/DML
+    * statement. */
+  private def analyzeOnly(text: String) =
+    spark.sessionState.executePlan(spark.sessionState.sqlParser.parsePlan(text)).analyzed
 
   /** EXPLAIN surface (Presto EXPLAIN [TYPE LOGICAL|DISTRIBUTED|VALIDATE] —
     * PARSER/tree/ExplainType.java:30-32): mode ∈ simple, extended, codegen,
@@ -1392,11 +975,7 @@ class Engine(parent: SparkSession) {
   /** Presto EXPLAIN (TYPE VALIDATE): analyze only, true if the query is
     * semantically valid against the catalog. */
   def validate(query: String): Boolean = {
-    // Parse + analyze WITHOUT spark.sql(): eager command execution would
-    // actually run a DDL/DML statement being validated.
-    val parsed = org.apache.spark.sql.classic.GraftPlanBridge.parsePlan(spark, query)
-    spark.sessionState.analyzer.executeAndCheck(
-      parsed, new org.apache.spark.sql.catalyst.QueryPlanningTracker)
+    analyzeOnly(query)
     true
   }
 }

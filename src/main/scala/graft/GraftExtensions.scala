@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Planner-only extensions: custom strategies + the graft optimizer rules,
-  * with NO function-name overrides and none of the dialect's analyzer rules
-  * (PrestoDialect). Safe on ANY session — including ones
+  * with NO function-name overrides and none of the dialect's parser and
+  * analyzer rules (PrestoDialect). Safe on ANY session — including ones
   * running plain Spark DataFrame code, because several Presto names (`map`,
   * `split`, `max_by`, …) deliberately differ from the Spark builtins and
   * Spark 4's `functions.*` API resolves BY NAME through the session
@@ -79,15 +79,22 @@ class GraftPlannerExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 /** Cluster-deployable registration: `--conf spark.sql.extensions=
-  * graft.GraftExtensions` installs the FULL Presto compatibility surface —
-  * the dialect function registry on top of everything in
-  * [[GraftPlannerExtensions]] — into every session on the cluster: the
-  * production path for a Presto-dialect deployment (the per-session
-  * `Engine` constructor covers embedded/mixed use, where the compat names
-  * must not shadow Spark builtins for DataFrame-API code). Equivalent role
-  * to the reference's Plugin.getFunctions (SPI/Plugin.java:53). The
-  * dialect's analyzer rules (PrestoDialect) come with it, as on an
-  * `Engine` session.
+  * graft.GraftExtensions` installs the Presto dialect — the function
+  * registry and [[PrestoDialect]] (the SQL parser plus its analyzer rules),
+  * on top of everything in [[GraftPlannerExtensions]] — into every session
+  * on the cluster: the production path for a Presto-dialect deployment (the
+  * per-session `Engine` constructor covers embedded/mixed use, where the
+  * compat names must not shadow Spark builtins for DataFrame-API code).
+  * Equivalent role to the reference's Plugin.getFunctions
+  * (SPI/Plugin.java:53).
+  *
+  * `Engine` also sets three session settings that an extension cannot; a
+  * cluster sets them itself (e.g. `--conf`) for the full Presto surface:
+  *  - `spark.sql.ansi.enabled=true` — division by zero, invalid casts and
+  *    out-of-bounds subscripts raise, as in Presto;
+  *  - `spark.sql.timeType.enabled=true` — the TIME type;
+  *  - `spark.sql.parser.escapedStringLiterals=true` — string literals
+  *    without escape processing (`'\d'` is a backslash and a d).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

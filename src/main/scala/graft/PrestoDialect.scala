@@ -2,24 +2,29 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.analysis.{ResolveInlineTables, UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving, UnresolvedInlineTable, UnresolvedOrdinal, UnresolvedStar, UnresolvedStarExceptOrReplace}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.analysis.{ResolveInlineTables, UnresolvedAttribute, UnresolvedExtractValue, UnresolvedFunction, UnresolvedHaving, UnresolvedInlineTable, UnresolvedOrdinal, UnresolvedStar, UnresolvedStarExceptOrReplace}
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, First}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern._
 import org.apache.spark.sql.types._
 
-import graft.functions.{IpAddr, TimeToTtz, Tstz, Ttz, TtzSubtract, TtzToTime, TtzToTimestamp}
+import graft.functions.{CharMark, IpAddr, TimeToTtz, Tstz, Ttz, TtzSubtract, TtzToTime, TtzToTimestamp}
 
-/** The Presto dialect rules, run INSIDE Spark's analyzer — the work
-  * Presto's StatementAnalyzer + ExpressionAnalyzer do in their one analysis
-  * pass (SURVEY §3 step 4). Each rule matches only a shape Spark's analyzer
-  * rejects and rewrites it to the Presto semantics; since every rule sees
-  * the same plan in the same analysis, fixes compose (an unordered
-  * `row_number()` and a `WHERE NULL` in one query both get fixed).
+/** The Presto dialect as one session extension — a parser plus analyzer
+  * rules — so a query takes one parse and one analysis, like Presto's
+  * SqlParser then StatementAnalyzer + ExpressionAnalyzer (SURVEY §3 step
+  * 4); every rule sees the same plan in that analysis, so fixes compose.
+  * Every SQL entry point of a session gets the same semantics; the
+  * DataFrame API (`expr()`, `selectExpr`, Column operators) keeps Spark's.
   *
-  * Two injection points:
+  * The parser ([[PrestoParser]]) applies the PrestoSql text shims, marks
+  * the subscripts and divisions written in the text, and wraps a query in
+  * [[SqlQuery]]. The analyzer rules work at three points:
   *  - parse-level rules run in the analyzer's "Hints" batch, on the
   *    unresolved plan before the Resolution batch: Spark rejects these
   *    shapes INSIDE Resolution (ResolveWindowOrder, ResolveReferences'
@@ -30,7 +35,12 @@ import graft.functions.{IpAddr, TimeToTtz, Tstz, Ttz, TtzSubtract, TtzToTime, Tt
   *    input types fail the check CheckAnalysis would report, and the
   *    operators above the repaired node resolve in the next iterations.
   *    (The post-hoc batch runs once after the fixed point, so operators
-  *    above a node repaired there would stay unresolved.)
+  *    above a node repaired there would stay unresolved.) The marks lower
+  *    there as soon as their operands resolve ([[LowerSqlOperators]]), so
+  *    an integral `/` has its final type before any parent resolves;
+  *  - the rewrites that keep a node's type apply once a [[SqlQuery]]'s
+  *    plan has resolved ([[SqlSemantics]]), once, and never to a view's
+  *    body or to a DataFrame built on the result.
   *
   * Installed by `Engine` on its isolated session and by `GraftExtensions`
   * on every session of a Presto-dialect cluster — never by
@@ -42,13 +52,414 @@ object PrestoDialect {
     StarBeforeOrdinals, SortSourceToAlias, SortGroupingHoist, HoldInlineTables)
 
   private val resolutionRules: Seq[Rule[LogicalPlan]] = Seq(
-    NullFilterAsBoolean, InlineTableAsUnion, StarOrdinalsRestore,
-    WindowInOrderBy, GroupingAsZero, TypeMismatchFixes)
+    LowerSqlOperators, NullFilterAsBoolean, InlineTableAsUnion,
+    StarOrdinalsRestore, WindowInOrderBy, GroupingAsZero, TypeMismatchFixes,
+    SqlSemantics)
 
   def install(ext: SparkSessionExtensions): Unit = {
+    ext.injectParser {
+      case (_, p: PrestoParser) => p // already layered under this session
+      case (session, delegate) => new PrestoParser(session, delegate)
+    }
     parseLevelRules.foreach(r => ext.injectHintResolutionRule(_ => r))
     resolutionRules.foreach(r => ext.injectResolutionRule(_ => r))
+    ext.injectPostHocResolutionRule(_ => DropSqlQuery)
   }
+
+  // ---------------------------------------------------------------------
+  // The parser
+  // ---------------------------------------------------------------------
+
+  /** The session's SQL parser: PrestoSql's text shims, then Spark's parser
+    * (reading this session's conf, e.g. escapedStringLiterals), then the
+    * SQL marks. Only the statement and query entry points change; every
+    * other method delegates, so expression strings and type strings keep
+    * Spark's dialect. */
+  private final class PrestoParser(session: SparkSession, delegate: ParserInterface)
+      extends ParserInterface {
+    override def parsePlan(sqlText: String): LogicalPlan =
+      statement(delegate.parsePlan(PrestoSql.rewrite(sqlText)))
+    override def parsePlanWithParameters(sqlText: String, params: ParameterContext): LogicalPlan =
+      statement(delegate.parsePlanWithParameters(PrestoSql.rewrite(sqlText), params))
+    override def parseQuery(sqlText: String): LogicalPlan =
+      statement(delegate.parseQuery(PrestoSql.rewrite(sqlText)))
+
+    override def parseExpression(sqlText: String): Expression = delegate.parseExpression(sqlText)
+    override def parseTableIdentifier(sqlText: String) = delegate.parseTableIdentifier(sqlText)
+    override def parseFunctionIdentifier(sqlText: String) = delegate.parseFunctionIdentifier(sqlText)
+    override def parseMultipartIdentifier(sqlText: String) = delegate.parseMultipartIdentifier(sqlText)
+    override def parseRoutineParam(sqlText: String): StructType = delegate.parseRoutineParam(sqlText)
+    override def parseTableSchema(sqlText: String): StructType = delegate.parseTableSchema(sqlText)
+    override def parseDataType(sqlText: String): DataType = delegate.parseDataType(sqlText)
+
+    /** Marks a parsed statement; a query (no command in it) is also wrapped
+      * in [[SqlQuery]]. Parsing runs with this session active, whoever
+      * calls the parser. */
+    private def statement(parse: => LogicalPlan): LogicalPlan = {
+      val prev = SparkSession.getActiveSession
+      SparkSession.setActiveSession(session)
+      val plan = try markOperators(parse)
+        finally prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+      if (plan.exists(p => p.isInstanceOf[Command] || p.isInstanceOf[ParsedStatement])) plan
+      else SqlQuery(plan)
+    }
+  }
+
+  /** A subscript, `/` or `try_divide` written in SQL text, held until both
+    * operands resolve ([[LowerSqlOperators]]). */
+  private case class SqlOperator(op: String, left: Expression, right: Expression)
+      extends BinaryExpression with Unevaluable {
+    override lazy val resolved: Boolean = false
+    override def dataType: DataType = NullType
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): SqlOperator =
+      copy(left = l, right = r)
+  }
+
+  /** Marks the SQL operators of a parsed plan, its subqueries and its WITH
+    * bodies. */
+  private def markOperators(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+    case w: UnresolvedWith =>
+      w.copy(cteRelations = w.cteRelations.map(r =>
+        r.copy(_2 = markOperators(r._2).asInstanceOf[SubqueryAlias])))
+    case p => p.transformExpressionsUp {
+      case UnresolvedExtractValue(base, index) => SqlOperator("[]", base, index)
+      case Divide(l, r, _) => SqlOperator("/", l, r)
+      case f: UnresolvedFunction if fnName(f) == "try_divide" && f.arguments.length == 2 &&
+          !f.isDistinct && f.filter.isEmpty =>
+        SqlOperator("try_divide", f.arguments(0), f.arguments(1))
+    }
+  }
+
+  /** The query a SQL statement parsed to, until its plan resolves and
+    * [[SqlSemantics]] applies. */
+  private case class SqlQuery(child: LogicalPlan) extends UnaryNode {
+    override def output: Seq[Attribute] = child.output
+    override protected def withNewChildInternal(c: LogicalPlan): SqlQuery = copy(child = c)
+  }
+
+  /** A lowered [[SqlOperator]]: Presto's semantics as the replacement,
+    * named as written, so an output column keeps the name Spark gives the
+    * SQL text. */
+  private case class PrestoOperator(op: String, left: Expression, right: Expression,
+      replacement: Expression) extends RuntimeReplaceable with InheritAnalysisRules {
+    override def parameters: Seq[Expression] = Seq(left, right)
+    override def makeSQLString(sql: Seq[String]): String =
+      if (op == "[]") s"${sql(0)}[${sql(1)}]" else sql.mkString("(", s" $op ", ")")
+    override protected def withNewChildInternal(c: Expression): PrestoOperator =
+      copy(replacement = c)
+  }
+
+  /** Lowers the [[SqlOperator]] marks once both operands resolve:
+    *  - Presto array subscripts are 1-based (SPI/type/ArrayType — "SQL
+    *    array indices start at 1"): the ordinal shifts by −1, and ANSI
+    *    mode keeps Presto's out-of-bounds and zero-index errors. Any other
+    *    subscript (map key, struct field) is Spark's own;
+    *  - Presto `/` between integral types TRUNCATES
+    *    (BigintOperators.divide `left / right` on Java longs: 7/2=3,
+    *    -7/2=-3), where Spark and DuckDB widen to double. ANSI
+    *    IntegralDivide of the widest operand type keeps Presto's
+    *    division-by-zero error; try_divide keeps its NULL-on-zero contract
+    *    through TryEval (IntegralDivide has no TRY mode). Other operands
+    *    keep Spark's division; [[SqlSemantics]] makes a double one IEEE.
+    *    A user-written `CAST(a AS DOUBLE) / b` is a double division. */
+  object LowerSqlOperators extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan =
+      if (plan.resolved) plan
+      else plan.resolveOperators { case p => p.transformExpressionsUp {
+        case SqlOperator("[]", a, i) if a.resolved && i.resolved =>
+          (a.dataType, i.dataType) match {
+            case (_: ArrayType, it) if isIntegral(it) =>
+              PrestoOperator("[]", a, i, GetArrayItem(a, Subtract(i, Cast(Literal(1), it))))
+            case _ => UnresolvedExtractValue(a, i)
+          }
+        case SqlOperator(op, l, r) if l.resolved && r.resolved =>
+          if (isIntegral(l.dataType) && isIntegral(r.dataType)) {
+            val wide = Seq(l.dataType, r.dataType).maxBy(_.defaultSize) // Byte < Short < Int < Long
+            val q = IntegralDivide(Cast(l, LongType), Cast(r, LongType))
+            val typed = if (wide == LongType) q else Cast(q, wide)
+            if (op == "/") PrestoOperator(op, l, r, typed) else TryDivide(l, r, TryEval(typed))
+          } else if (op == "/") Divide(l, r)
+          else UnresolvedFunction(Seq(op), Seq(l, r), isDistinct = false)
+      }}
+  }
+
+  /** Applies the Presto semantics that keep each node's type to a
+    * [[SqlQuery]] whose plan has resolved, then drops the marker. The
+    * rewrites see the types Spark's coercion settled on; the ones that
+    * build unresolved pieces (zone stripping over arrays) resolve in the
+    * next iterations of the fixed point. */
+  object SqlSemantics extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan =
+      if (!plan.exists(_.isInstanceOf[SqlQuery])) plan
+      else plan.resolveOperatorsDown {
+        case SqlQuery(child) if child.resolved =>
+          SqlPasses.valueSemantics(SqlPasses.tstz(SqlPasses.char(child)))
+      }
+  }
+
+  /** A query that only resolves after the fixed point (an unknown hint
+    * stays unresolved until Spark drops it) keeps Spark's semantics. */
+  private object DropSqlQuery extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan =
+      plan.resolveOperators { case SqlQuery(child) => child }
+  }
+
+  /** The type-keeping rewrites [[SqlSemantics]] applies, each a pass over
+    * the operators a SQL statement parsed to: bottom-up, into subqueries,
+    * but not into a view's body, which got them when the view was
+    * analysed (SQL text) or keeps Spark's semantics (DataFrame). */
+  private object SqlPasses {
+    private def transformSql(plan: LogicalPlan)(f: LogicalPlan => LogicalPlan): LogicalPlan =
+      plan match {
+        case v: View => v
+        case p => f(p.mapChildren(transformSql(_)(f)).transformExpressions {
+          case s: SubqueryExpression => s.withNewPlan(transformSql(s.plan)(f))
+        })
+      }
+
+    /** Cast rounding, interval rendering, REAL-versus-DECIMAL comparison
+      * and IEEE double division; IN projected as a value keeps
+      * three-valued logic. */
+    def valueSemantics(plan: LogicalPlan): LogicalPlan = {
+      // One rewritten CASE per canonicalized IN-subquery: a GROUP BY key
+      // and its projection copy must stay STRUCTURALLY identical (same new
+      // ExprIds) or the aggregate check rejects them.
+      val inCache = scala.collection.mutable.Map.empty[Expression, Expression]
+      val basic: PartialFunction[Expression, Expression] = {
+        // Presto CAST(double/real AS integral) rounds halves AWAY FROM ZERO
+        // (DoubleOperators.castToLong → DoubleMath.roundToLong(v, HALF_UP);
+        // the narrower widths go through MathFunctions.round, which is
+        // -Math.round(-x) for negatives): CAST(-2.5 AS BIGINT) = -3.
+        // Spark truncates toward zero, so the exact rounding lands before
+        // the cast: floor(x+0.5) for x>=0, ceil(x-0.5) for x<0. TRY_CAST
+        // shares the Cast node and follows.
+        case c @ Cast(child, LongType | IntegerType | ShortType | ByteType, _, _)
+            if child.dataType == DoubleType || child.dataType == FloatType =>
+          val d = Cast(child, DoubleType)
+          c.copy(child = CaseWhen(
+            Seq((GreaterThanOrEqual(d, Literal(0d)), Floor(Add(d, Literal(0.5d))))),
+            Some(Ceil(Subtract(d, Literal(0.5d))))))
+        // CAST(decimal AS integral) is HALF_UP away from zero (DecimalCasts)
+        case c @ Cast(child, LongType | IntegerType | ShortType | ByteType, _, _)
+            if child.dataType.isInstanceOf[DecimalType] =>
+          c.copy(child = Round(child, Literal(0)))
+        // Presto renders intervals as "%d %02d:%02d:%02d.%03d" / "%d-%d"
+        // (IntervalDayTime.formatMillis, IntervalYearMonth.formatMonths);
+        // Spark casts them to its own INTERVAL literal syntax. StaticInvoke
+        // receives the physical value (micros / months) and keeps codegen.
+        case Cast(child, st: StringType, _, _)
+            if child.dataType.isInstanceOf[DayTimeIntervalType] ||
+              child.dataType.isInstanceOf[YearMonthIntervalType] =>
+          val dayTime = child.dataType.isInstanceOf[DayTimeIntervalType]
+          StaticInvoke(Class.forName("graft.functions.ScalarOps"), st,
+            if (dayTime) "formatIntervalDayTime" else "formatIntervalYearMonth",
+            Seq(child), Seq(child.dataType), propagateNull = true, returnNullable = false)
+        // Presto's common supertype of REAL and DECIMAL is REAL
+        // (TypeRegistry.java:509 — decimal coerces to real, real only
+        // widens to double), so `real_expr = decimal_expr` compares at
+        // FLOAT precision: CAST(1.2 AS REAL) = DECIMAL '1.2' is TRUE. Spark
+        // widens both to double, where the float's excess mantissa garbage
+        // breaks equality. The comparison is retyped to float when one side
+        // is a real under a coercion cast and the other a decimal.
+        case cmp: BinaryComparison if {
+              def under(e: Expression, from: DataType => Boolean) = e match {
+                case c @ Cast(x, DoubleType, _, _) =>
+                  from(x.dataType) && c.getTagValue(Cast.USER_SPECIFIED_CAST).isEmpty
+                case _ => false
+              }
+              val real = (e: Expression) => under(e, _ == FloatType)
+              val dec = (e: Expression) => under(e, _.isInstanceOf[DecimalType])
+              (real(cmp.left) && dec(cmp.right)) || (dec(cmp.left) && real(cmp.right))
+            } =>
+          cmp.withNewChildren(Seq(cmp.left, cmp.right).map {
+            case Cast(f, DoubleType, _, _) if f.dataType == FloatType => f
+            case Cast(d, _, _, _) => Cast(d, FloatType)
+          })
+        // Double division is IEEE in Presto (DoubleOperators.divide —
+        // x/0 → ±Infinity, 0/0 → NaN); Spark's Divide NULLs (legacy) or
+        // throws (ANSI) on a zero divisor. StaticInvoke keeps codegen.
+        case d @ Divide(l, r, _)
+            if d.dataType == DoubleType && l.dataType == DoubleType && r.dataType == DoubleType =>
+          StaticInvoke(Class.forName("graft.functions.ScalarOps"), DoubleType,
+            "ieeeDivide", Seq(l, r), Seq(DoubleType, DoubleType),
+            propagateNull = true, returnNullable = false)
+      }
+      // Presto's IN keeps three-valued logic when PROJECTED as a value
+      // (SemiJoinOperator emits NULL for a null probe or a null-bearing
+      // build side); Spark plans ExistenceJoin, which collapses those cases
+      // to FALSE. Outside filter/join conditions (where NULL ≡ FALSE
+      // anyway) a projected `v IN (subq)` becomes
+      //   CASE WHEN v IN (subq) THEN TRUE
+      //        WHEN v IS NULL AND EXISTS (subq) THEN NULL
+      //        WHEN EXISTS (subq WHERE col IS NULL) THEN NULL
+      //        ELSE FALSE END.
+      val projectedIn: PartialFunction[Expression, Expression] = {
+        case in @ InSubquery(Seq(v), l: ListQuery) if l.plan.output.length == 1 =>
+          inCache.getOrElseUpdate(in.canonicalized, {
+            val nullB = Literal(null, BooleanType)
+            CaseWhen(Seq(
+              (in, Literal(true)),
+              (And(IsNull(v), Exists(l.plan, l.outerAttrs, NamedExpression.newExprId)), nullB),
+              (Exists(Filter(IsNull(l.plan.output.head), l.plan),
+                l.outerAttrs, NamedExpression.newExprId), nullB)),
+              Some(Literal(false)))
+          })
+      }
+      transformSql(plan) {
+        case node @ (_: Filter | _: Join) => node.transformExpressionsUp(basic)
+        case node => node.transformExpressionsUp(basic.orElse(projectedIn))
+      }
+    }
+
+    /** Presto CHAR comparisons are PAD-INSENSITIVE across lengths
+      * (Chars.compareChars logically pads the shorter operand with spaces;
+      * CharOperators.equal compares trimmed values). The rpad
+      * representation already matches for equal-length chars; comparisons
+      * with a CharMark-tagged operand lower to trim (equality) or
+      * trim+pad-to-common-length (ordering — exact compareChars semantics,
+      * including sub-space bytes like '\0' sorting before the pad). Marks
+      * are stripped afterwards and never execute. */
+    def char(plan: LogicalPlan): LogicalPlan = {
+      def marked(e: Expression): Boolean = e.isInstanceOf[CharMark]
+      def trimmed(e: Expression): Expression = StringTrimRight(e match {
+        case CharMark(c) => c
+        case other => other
+      })
+      val compared = transformSql(plan)(_.transformExpressionsUp {
+        case cmp: BinaryComparison if marked(cmp.left) || marked(cmp.right) =>
+          val l = trimmed(cmp.left)
+          val r = trimmed(cmp.right)
+          cmp match {
+            case _: EqualTo => EqualTo(l, r)
+            case _: EqualNullSafe => EqualNullSafe(l, r)
+            case _ =>
+              val g = Greatest(Seq(Length(l), Length(r)))
+              cmp.withNewChildren(Seq(
+                StringRPad(l, g, Literal(" ")), StringRPad(r, g, Literal(" "))))
+          }
+        case In(v, list) if (v +: list).exists(marked) =>
+          In(trimmed(v), list.map(trimmed))
+      })
+      transformSql(compared)(_.transformExpressionsUp { case m: CharMark => m.child })
+    }
+
+    /** TIMESTAMP WITH TIME ZONE semantics that analyze fine but differ
+      * (functions/Tstz.scala): comparisons, grouping, sorting and window
+      * keys use the INSTANT only (DateTimeOperators — equal instants in
+      * different zones are equal), and CAST(tstz AS VARCHAR) renders Joda
+      * 'yyyy-MM-dd HH:mm:ss.SSS ZZZ' instead of Spark's struct rendering;
+      * TIME WITH TIME ZONE, TIME and IPADDRESS casts render Presto's text. */
+    def tstz(plan: LogicalPlan): LogicalPlan = {
+      def hasTstz(e: Expression): Boolean =
+        e.resolved && Tstz.containsTstz(e.dataType)
+      def strip(e: Expression): Expression =
+        if (hasTstz(e)) Tstz.stripZones(e) else e
+      // replace occurrences of a tstz grouping expression OUTSIDE aggregate
+      // functions with first(g): the instant is the group key, the rendered
+      // value is a per-group representative — the reference's hashtable
+      // keeps an arbitrary representative the same way
+      // (TimestampWithTimeZoneType equality/hash read only the millis)
+      def firstify(e: Expression, groups: Seq[Expression]): Expression = e match {
+        case ae: AggregateExpression => ae
+        case g if groups.exists(_.semanticEquals(g)) =>
+          First(g, ignoreNulls = false).toAggregateExpression()
+        case other => other.mapChildren(c => firstify(c, groups))
+      }
+      def instantGroups(agg: Aggregate): Aggregate = {
+        val tstzGroups = agg.groupingExpressions.filter(hasTstz)
+        val newAggs = agg.aggregateExpressions.map { ne =>
+          firstify(ne, tstzGroups) match {
+            case ae: AggregateExpression =>
+              // a bare grouping attribute became first(attr): keep the
+              // original name AND exprId so downstream references hold
+              Alias(ae, ne.name)(ne.exprId, ne.qualifier)
+            case other => other.asInstanceOf[NamedExpression]
+          }
+        }
+        agg.copy(groupingExpressions = agg.groupingExpressions.map(strip),
+          aggregateExpressions = newAggs)
+      }
+      transformSql(plan) { node0 =>
+        // GROUP BY / DISTINCT / ORDER BY over tstz use the INSTANT only
+        // (TimestampWithTimeZoneType.java — equality, hash and comparison
+        // all read the packed millis; the zone is display metadata)
+        val node = node0 match {
+          case agg: Aggregate
+              if agg.resolved && agg.groupingExpressions.exists(hasTstz) &&
+                !agg.child.isInstanceOf[Expand] =>
+            instantGroups(agg)
+          case d @ Distinct(child) if d.resolved && child.output.exists(a => hasTstz(a)) =>
+            instantGroups(Aggregate(child.output, child.output.toIndexedSeq, child))
+          case s: Sort if s.resolved && s.order.exists(o => hasTstz(o.child)) =>
+            s.copy(order = s.order.map(o => o.copy(child = strip(o.child))))
+          // window PARTITION BY / ORDER BY over tstz key on the INSTANT
+          // only, like GROUP BY: two renderings of the same instant are
+          // one window partition (TimestampWithTimeZoneType hash/compare
+          // read only the packed millis). Function ARGUMENTS keep the
+          // full (instant, zone) value. The spec copies inside each
+          // WindowExpression are rewritten in step so frame evaluation
+          // sees the same keys the node partitions on.
+          case w: Window
+              if w.resolved && (w.partitionSpec.exists(hasTstz) ||
+                w.orderSpec.exists(o => hasTstz(o.child))) =>
+            w.copy(
+              windowExpressions = w.windowExpressions.map(_.transformUp {
+                case wsd: WindowSpecDefinition =>
+                  wsd.copy(
+                    partitionSpec = wsd.partitionSpec.map(strip),
+                    orderSpec = wsd.orderSpec.map(o => o.copy(child = strip(o.child))))
+              }.asInstanceOf[NamedExpression]),
+              partitionSpec = w.partitionSpec.map(strip),
+              orderSpec = w.orderSpec.map(o => o.copy(child = strip(o.child))))
+          case n => n
+        }
+        node.transformExpressionsUp {
+          case Cast(child, StringType, _, _) if child.resolved && Tstz.isTstz(child.dataType) =>
+            graft.functions.TstzToString(child)
+          // ttz renders 'HH:mm:ss.SSS <zone-as-stored>'
+          // (TIME_WITH_TIME_ZONE_FORMATTER)
+          case Cast(child, StringType, _, _) if child.resolved && Ttz.isTtz(child.dataType) =>
+            graft.functions.TtzToString(child)
+          // plain TIME renders 'HH:mm:ss.SSS' — always 3 fractional digits
+          // (TimeOperators.castToSlice); Spark strips trailing zeros
+          case Cast(child, StringType, _, _)
+              if child.resolved && child.dataType.isInstanceOf[TimeType] =>
+            graft.functions.TimeToString(child)
+          // ipaddress renders RFC 5952 canonical text; → varbinary is the
+          // raw 16 bytes (IpAddressOperators casts)
+          case Cast(child, StringType, _, _) if child.resolved && IpAddr.isIp(child.dataType) =>
+            graft.functions.IpToString(child)
+          case Cast(child, BinaryType, _, _) if child.resolved && IpAddr.isIp(child.dataType) =>
+            IpAddr.bytes(child)
+          // instants only, including tstz NESTED in rows/arrays
+          // (RowOperators compares fields with the type's own operator)
+          case cmp: BinaryComparison
+              if cmp.left.resolved && cmp.right.resolved &&
+                (Tstz.containsTstz(cmp.left.dataType) || Tstz.containsTstz(cmp.right.dataType)) =>
+            cmp.withNewChildren(Seq(Tstz.stripZones(cmp.left), Tstz.stripZones(cmp.right)))
+          case In(v, list) if hasTstz(v) && list.forall(_.resolved) =>
+            In(Tstz.stripZones(v), list.map(Tstz.stripZones))
+          // DISTINCT aggregates (count(DISTINCT x), sum(DISTINCT x), …)
+          // dedup on the INSTANT: strip zones from the aggregated input —
+          // only when the result type survives the strip: a collect-style
+          // aggregate (array_agg(DISTINCT x)) derives its type from the
+          // child, and retyping it would leave parent references stale
+          case ae: AggregateExpression if ae.isDistinct &&
+              ae.aggregateFunction.children.exists(hasTstz) && {
+                val f = ae.aggregateFunction.withNewChildren(
+                  ae.aggregateFunction.children.map(strip))
+                f.dataType == ae.aggregateFunction.dataType
+              } =>
+            ae.copy(aggregateFunction = ae.aggregateFunction
+              .withNewChildren(ae.aggregateFunction.children.map(strip))
+              .asInstanceOf[AggregateFunction])
+        }
+      }
+    }
+  }
+
+  private def isIntegral(t: DataType): Boolean =
+    t == LongType || t == IntegerType || t == ShortType || t == ByteType
 
   private def fnName(f: UnresolvedFunction): String =
     f.nameParts.last.toLowerCase(Locale.ROOT)

@@ -2,14 +2,16 @@ package graft
 
 /** Textual shims for the Presto grammar forms Spark's parser rejects
   * (PARSER/SqlBase.g4). Only purely-syntactic forms are handled here —
-  * anything semantic lives in the function registry or the post-analysis
-  * rewrites in Engine.sql.
+  * anything semantic lives in the function registry or the dialect's
+  * analyzer rules (PrestoDialect). The session parser
+  * (PrestoDialect.PrestoParser) runs `rewrite` on every SQL statement.
   *
   * `ARRAY[e1, e2]` (SqlBase.g4 primaryExpression #arrayConstructor) becomes
   * `array(e1, e2)`; the matching `]` is found with a bracket stack, so
   * nested constructors and subscripts inside the element list survive:
   * `ARRAY[ARRAY[1]][1][1]` → `array(array(1))[1][1]` (the trailing
-  * subscripts are Presto 1-based and are shifted post-analysis, not here).
+  * subscripts are Presto 1-based and are shifted by the analyzer rule
+  * PrestoDialect.LowerSqlOperators, not here).
   * Scanning is literal-aware: single-quoted strings (with '' escapes),
   * double-quoted identifiers, line/block comments pass through untouched.
   */
@@ -518,8 +520,8 @@ object PrestoSql {
     * result is always n, concat keeps the padding); Spark's char cast
     * neither pads nor counts the padding. Lower to rpad, wrapped in the
     * graft_char_mark identity so comparisons on CHAR operands get
-    * Presto's pad-insensitive semantics (Chars.compareChars) in the
-    * post-analysis pass. */
+    * Presto's pad-insensitive semantics (Chars.compareChars) from the
+    * PrestoDialect.SqlSemantics analyzer rule. */
   private def castChar(sql: String): String = {
     val mask = maskLiterals(sql)
     val m = java.util.regex.Pattern
@@ -1155,7 +1157,7 @@ object PrestoSql {
     * elements in place.
     * All pieces bind once via a single-element transform() so the window
     * expressions are not duplicated per use. The generated text contains no
-    * `[n]` subscripts (the 1-based post-analysis shift never fires on it)
+    * `[n]` subscripts (the 1-based subscript shift never fires on it)
     * and its ORDER BY items pick up the Presto NULLS LAST default from the
     * defaultNullOrdering pass that runs after this one.
     *

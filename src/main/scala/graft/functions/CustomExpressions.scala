@@ -565,10 +565,10 @@ case class PrestoTypeOf(child: Expression)
   * between equal-length chars — but Presto's comparisons are
   * PAD-INSENSITIVE across lengths (Chars.compareChars logically pads the
   * shorter operand with spaces; CharOperators.equal compares the trimmed
-  * values). This identity wrapper survives analysis so the post-analysis
-  * pass (Engine.oneBasedSubscripts) can see which comparison operands are
-  * CHAR-typed and lower them to trim/pad-normalized forms; it is stripped
-  * from the plan afterwards and never executes. */
+  * values). This identity wrapper survives resolution so the dialect's
+  * `PrestoDialect.SqlSemantics` analyzer rule can see which comparison
+  * operands are CHAR-typed and lower them to trim/pad-normalized forms; the
+  * rule strips it from the plan afterwards, so it never executes. */
 case class CharMark(child: Expression) extends UnaryExpression {
   override def dataType: DataType = child.dataType
   override def nullable: Boolean = child.nullable

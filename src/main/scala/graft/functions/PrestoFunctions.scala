@@ -266,8 +266,8 @@ object PrestoFunctions {
   /** name → builder. */
   val registry: Map[String, Seq[Expression] => Expression] = Map(
     // CHAR(n) type marker emitted by PrestoSql.castChar — identity value,
-    // consumed (and stripped) by Engine's post-analysis char-comparison
-    // lowering (Chars.compareChars pad-insensitivity).
+    // consumed (and stripped) by the PrestoDialect.SqlSemantics
+    // char-comparison lowering (Chars.compareChars pad-insensitivity).
     "graft_char_mark" -> (e => CharMark(e.head)),
     // --- string (StringFunctions.java) ---
     "strpos" -> (e => fn("locate", Seq(e(1), e(0)))),

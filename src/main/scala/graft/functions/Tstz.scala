@@ -21,17 +21,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `AT TIME ZONE` keeps the instant and swaps the zone
   *    (DesugarAtTimeZoneRewriter semantics);
   *  - comparisons use the INSTANT only (DateTimeOperators — equal instants
-  *    in different zones are equal; Engine's post-analysis pass lowers
-  *    them, like the CharMark pad-insensitivity pass);
+  *    in different zones are equal; the PrestoDialect.SqlSemantics
+  *    analyzer rule lowers them, like the CharMark pad-insensitivity);
   *  - `CAST(tstz AS VARCHAR)` renders Joda 'yyyy-MM-dd HH:mm:ss.SSS ZZZ'
   *    (util/DateTimeUtils.java TIMESTAMP_WITH_TIME_ZONE_FORMATTER): wall
   *    time in the value's zone + the zone id as stored;
   *  - field extractors (hour/day/…) view the WALL time via TstzWall;
   *    timezone_hour/minute expose the value's zone offset at the instant.
   *
-  *  - GROUP BY / DISTINCT / ORDER BY use the INSTANT only (Engine's
-  *    post-analysis pass strips zones from grouping/sort keys and keeps a
-  *    first() representative for display — TimestampWithTimeZoneType's
+  *  - GROUP BY / DISTINCT / ORDER BY use the INSTANT only (the
+  *    PrestoDialect.SqlSemantics rule strips zones from grouping/sort keys
+  *    and keeps a first() representative for display —
+  *    TimestampWithTimeZoneType's
   *    equality/hash/compare read only the packed millis);
   *  - date_trunc truncates the wall time in the value's zone and RETURNS
   *    timestamp with time zone in that zone

@@ -1,5 +1,6 @@
 package graft.tools
 import graft._
+import scala.util.control.NonFatal
 /** Sweep every entry's physical plan for join shapes that collapse at
   * scale: CartesianProduct and BroadcastNestedLoopJoin. Prints one line
   * per flagged entry (operator + entry name); constant-side cross joins
@@ -16,7 +17,7 @@ object PlanLint {
         val hits = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
           .filter(plan.contains)
         if (hits.nonEmpty) { flagged += 1; println(s"$name: ${hits.mkString(",")}") }
-      } catch { case e: Throwable => println(s"$name: PLAN-ERROR ${e.getClass.getSimpleName}") }
+      } catch { case NonFatal(e) => println(s"$name: PLAN-ERROR ${e.getClass.getSimpleName}") }
     }
     println(s"flagged=$flagged of ${SparkEntry.all.size}")
     spark.stop()

@@ -1,5 +1,6 @@
 package graft.tools
 import graft._
+import scala.util.control.NonFatal
 import org.apache.spark.sql.Row
 import scala.io.Source
 
@@ -39,7 +40,7 @@ object RefPairs {
         val (ga, gb) = (rows(a).sorted, rows(b).sorted)
         if (ga == gb) s"PASS\t${ga.length}"
         else s"DIFF\tactual=${ga.take(2).mkString(";").take(120)} expected=${gb.take(2).mkString(";").take(120)}"
-      } catch { case t: Throwable =>
+      } catch { case NonFatal(t) =>
         "ERR\t" + t.getClass.getSimpleName + " " +
           String.valueOf(t.getMessage).replace('\n', ' ').replace('\t', ' ').take(140) }
       println(s"$i\t$v")

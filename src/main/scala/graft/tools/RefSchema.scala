@@ -1,5 +1,6 @@
 package graft.tools
 import graft._
+import scala.util.control.NonFatal
 import scala.io.Source
 /** Corpus triage with schema: run each statement (one per line) through the
   * RefCorpus engine and print TAB-separated status / row count / column
@@ -16,7 +17,7 @@ object RefSchema {
         val types = df.schema.fields
           .map(f => f.dataType.simpleString).mkString(",")
         s"OK\t$n\t$types"
-      } catch { case t: Throwable =>
+      } catch { case NonFatal(t) =>
         "ERR\t" + t.getClass.getSimpleName + " " +
           String.valueOf(t.getMessage).replace('\n', ' ').replace('\t', ' ').take(160) }
       println(s"$i\t$v")

@@ -1,5 +1,6 @@
 package graft.tools
 import graft._
+import scala.util.control.NonFatal
 import scala.io.Source
 /** Corpus triage: run each full SQL statement (one per line) through the
   * RefCorpus engine (Presto-named tpch views) and print row counts or the
@@ -13,7 +14,7 @@ object RefSql {
       val v = try {
         val rows = e.sql(sql).collect()
         s"OK rows=${rows.length} head=${rows.headOption.getOrElse("")}"
-      } catch { case t: Throwable =>
+      } catch { case NonFatal(t) =>
         "ERROR:" + t.getClass.getSimpleName + " " +
           String.valueOf(t.getMessage).replace('\n', ' ').take(200) }
       println(s"$i\t$v")

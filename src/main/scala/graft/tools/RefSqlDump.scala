@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft._
+import scala.util.control.NonFatal
 import scala.io.Source
 
 /** Corpus triage companion to RefSql: for each input line (one SQL
@@ -25,7 +26,7 @@ object RefSqlDump {
               .sorted.mkString(";")
             s"OK\t$types\t$rows"
           } catch {
-            case t: Throwable =>
+            case NonFatal(t) =>
               "ERR\t" + t.getClass.getSimpleName + " " +
                 String.valueOf(t.getMessage).replace('\n', ' ').take(160)
           }

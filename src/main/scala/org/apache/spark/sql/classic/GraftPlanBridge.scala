@@ -11,14 +11,6 @@ object GraftPlanBridge {
   def ofRows(spark: ApiSession, plan: LogicalPlan): org.apache.spark.sql.DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 
-  /** Parse with THIS session active: parser behavior reads the
-    * thread-local SQLConf (escapedStringLiterals, ordinal handling, ...),
-    * which otherwise falls back to whatever session was last active on
-    * the thread. */
-  def parsePlan(spark: ApiSession, text: String): LogicalPlan =
-    spark.asInstanceOf[SparkSession].withActive(
-      spark.sessionState.sqlParser.parsePlan(text))
-
   /** `parent.newSession()` with its own extension set: every extension of
     * the parent plus the ones `install` injects. `newSession` shares the
     * parent's SparkSessionExtensions object, so rules injected there would

@@ -81,6 +81,9 @@ class DialectRulesSpec extends AnyFunSuite {
       "SELECT a, b AS t, grouping(b) FROM (VALUES ('h', 'j'), ('k', 'l')) v(a, b) " +
         "GROUP BY GROUPING SETS ((a), (b)) ORDER BY grouping(b), a, t",
       Seq(Seq(null, "j", 0), Seq(null, "l", 0), Seq("h", null, 1), Seq("k", null, 1))),
+    ("LowerSqlOperators under an unknown hint (Spark drops the hint after analysis)",
+      "SELECT /*+ NO_SUCH_HINT */ ARRAY[10, 20][1], 7 / 2",
+      Seq(Seq(10, 3))),
     ("StructPositionalContains",
       "SELECT contains(array_agg(ROW(a, b)), ROW(3, 4)) FROM (VALUES (1, 2), (3, 4)) t(a, b)",
       Seq(Seq(true))),
@@ -116,6 +119,77 @@ class DialectRulesSpec extends AnyFunSuite {
     test(s"raises: $what") {
       intercept[AnalysisException](engine.sql(query).collect())
     }
+  }
+
+  // Every SQL entry point gets Presto's result: the session's parser and
+  // analyzer rules do the dialect, not the entry point.
+  // (query, Presto's row)
+  private val prestoRows: Seq[(String, Seq[Any])] = Seq(
+    ("SELECT ARRAY[10,20,30][1], 7/2, CAST(2.5 AS BIGINT)", Seq(10, 3, 3L)),
+    ("SELECT CAST(-2.5 AS BIGINT)", Seq(-3L)),
+    ("SELECT 1e0/0e0", Seq(Double.PositiveInfinity)),
+    ("SELECT CAST(INTERVAL '2' DAY AS VARCHAR)", Seq("2 00:00:00.000")),
+    ("SELECT CAST('ab' AS CHAR(3)) = CAST('ab' AS CHAR(2))", Seq(true)))
+
+  /** A session of a Presto-dialect cluster (`spark.sql.extensions=
+    * graft.GraftExtensions`), sharing the test SparkContext. */
+  private lazy val clusterSession: org.apache.spark.sql.SparkSession = {
+    import org.apache.spark.sql.SparkSession
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    try {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+    } finally {
+      active.foreach(SparkSession.setActiveSession)
+      default.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
+  private def ctasDir(): String =
+    java.nio.file.Files.createTempDirectory("graft-dialect-ctas").toString + "/t"
+
+  // (entry point, query => its first row)
+  private val entryPoints: Seq[(String, String => Seq[Any])] = Seq(
+    ("Engine.sql", q => engine.sql(q).head.toSeq),
+    ("createView + spark.table", { q =>
+      engine.createView("entry_view", q)
+      engine.spark.table("entry_view").head.toSeq
+    }),
+    ("ctas", { q =>
+      engine.ctas("entry_ctas", q, ctasDir())
+      engine.spark.table("entry_ctas").head.toSeq
+    }),
+    ("prepare/execute", { q =>
+      engine.prepare("entry_prepared", q)
+      engine.execute("entry_prepared").head.toSeq
+    }),
+    ("GraftExtensions session", q => clusterSession.sql(q).head.toSeq))
+
+  for ((entry, run) <- entryPoints; (query, expected) <- prestoRows)
+    test(s"entry point $entry: $query") {
+      assert(run(query) == expected)
+    }
+
+  prestoRows.foreach { case (query, _) =>
+    test(s"entry point validate: $query") {
+      assert(engine.validate(query))
+    }
+  }
+
+  test("a view's subscripts shift once: a query over the view does not shift them again") {
+    engine.createView("v", "SELECT ARRAY[10,20,30] AS a, ARRAY[1,2][2] AS b")
+    assert(rows("SELECT a[1], b FROM v") == Seq(Seq(10, 2)))
+  }
+
+  test("the DataFrame API keeps Spark's dialect on an Engine session") {
+    import org.apache.spark.sql.functions.{array, col, lit}
+    val one = engine.spark.range(1)
+    assert(one.select(array(lit(10), lit(20))(0)).head.getInt(0) == 10)
+    assert(one.select(lit(7) / lit(2)).head.getDouble(0) == 3.5)
+    assert(engine.sql("SELECT ARRAY[10,20] AS arr").select(col("arr")(0))
+      .head.getInt(0) == 10)
   }
 
   test("CAST(TIMESTAMP_NTZ AS TIME) keeps the wall clock under a non-UTC session zone") {
