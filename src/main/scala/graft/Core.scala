@@ -175,6 +175,11 @@ object GraftSession {
       val Array(k, v) = kv.split("=", 2); k -> v
     }
 
+  /** This box's core count for the tools' sessions: `SPARK_GRAFT_CPUS`,
+    * else the JVM's available processors. */
+  def boxCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   def local(cpus: Int = 32): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -78,6 +79,152 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Expression = copy(left = l, right = r)
+}
+
+/** `bits`-bit SimHash of an array<bigint> of token hashes: bit b is set when
+  * more elements have bit b set than clear. One pass with an `int` vote
+  * counter per bit, bit-identical to the HOF form
+  * {{{
+  * aggregate(sequence(0, bits - 1), cast(0 as bigint), (acc, b) -> acc | IF(
+  *   aggregate(hashes, 0, (a, h) -> a + IF(((h >> b) & 1) = 1, 1, -1)) > 0,
+  *   shiftleft(cast(1 as bigint), b), cast(0 as bigint)))
+  * }}}
+  * which Spark evaluates as interpreted lambdas, once per element per bit.
+  * Like that form, a NULL element votes −1 on every bit and a NULL or empty
+  * array gives 0 (the per-bit `NULL > 0` test is false).
+  */
+case class SimHash(child: Expression, bits: Int)
+    extends UnaryExpression {
+  require(bits >= 1 && bits <= 64, s"simhash bits must be in 1..64, got $bits")
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(LongType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"simhash expects array<bigint>, got ${t.simpleString}")
+    }
+
+  override def eval(input: InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) 0L else ArrayKernels.simhash(v.asInstanceOf[ArrayData], bits)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      long ${ev.value} = ${c.isNull} ? 0L :
+        graft.functions.ArrayKernels.simhash(${c.value}, $bits);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "simhash"
+}
+
+/** Shannon entropy in bits of an array's element distribution,
+  * `0.0 - Σ p·log2(p)` over the distinct elements with p = count / size.
+  * One sort-and-count pass, bit-identical to the HOF form
+  * {{{
+  * 0.0 - aggregate(
+  *   transform(sort_array(array_distinct(xs)), c ->
+  *     (size(filter(xs, x -> x = c)) / n) * log2(size(filter(xs, x -> x = c)) / n)),
+  *   cast(0.0 as double), (a, p) -> a + p)          -- n = size(xs) as double
+  * }}}
+  * whose interpreted lambdas scan the array once per distinct element. The
+  * sum runs in the same (binary string) order with Spark's `Log2` formula,
+  * so the double rounding matches. A NULL element gives NULL, as there
+  * (its count is 0 and `log2(0)` is NULL).
+  */
+case class ArrayEntropy(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  // binary-collated strings only: the kernel sorts and counts by bytes
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(StringType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"array_entropy expects array<string>, got ${t.simpleString}")
+    }
+
+  override protected def nullSafeEval(v: Any): Any = {
+    val a = v.asInstanceOf[ArrayData]
+    if (ArrayKernels.anyNull(a)) null else ArrayKernels.entropy(a)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+      if (graft.functions.ArrayKernels.anyNull($c)) {
+        ${ev.isNull} = true;
+      } else {
+        ${ev.value} = graft.functions.ArrayKernels.entropy($c);
+      }""")
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "array_entropy"
+}
+
+/** Static entry points of [[SimHash]] and [[ArrayEntropy]] for whole-stage
+  * codegen (scalac emits forwarders on the paired ArrayKernels class). */
+object ArrayKernels {
+  def simhash(hashes: ArrayData, bits: Int): Long = {
+    val votes = new Array[Int](bits)
+    val n = hashes.numElements()
+    var i = 0
+    while (i < n) {
+      var b = 0
+      if (hashes.isNullAt(i)) {
+        while (b < bits) { votes(b) -= 1; b += 1 }
+      } else {
+        val h = hashes.getLong(i)
+        while (b < bits) {
+          votes(b) += (if (((h >> b) & 1L) == 1L) 1 else -1)
+          b += 1
+        }
+      }
+      i += 1
+    }
+    var sig = 0L
+    var b = 0
+    while (b < bits) {
+      if (votes(b) > 0) sig |= 1L << b
+      b += 1
+    }
+    sig
+  }
+
+  def anyNull(a: ArrayData): Boolean = {
+    val n = a.numElements()
+    var i = 0
+    while (i < n && !a.isNullAt(i)) i += 1
+    i < n
+  }
+
+  /** Entropy of a NULL-free array<string>. */
+  def entropy(a: ArrayData): Double = {
+    val n = a.numElements()
+    val xs = new Array[UTF8String](n)
+    var i = 0
+    while (i < n) { xs(i) = a.getUTF8String(i); i += 1 }
+    java.util.Arrays.sort(xs, (x: UTF8String, y: UTF8String) => x.binaryCompare(y))
+    val size = n.toDouble
+    var sum = 0.0
+    i = 0
+    while (i < n) {
+      var j = i + 1
+      while (j < n && xs(j) == xs(i)) j += 1
+      val p = (j - i) / size
+      sum += p * (StrictMath.log(p) / StrictMath.log(2))
+      i = j
+    }
+    0.0 - sum
+  }
 }
 
 /** Presto cardinality(x): arrays, maps, and HyperLogLog sketches

@@ -91,18 +91,12 @@ object Dedup {
       .cast("long")
 
   /** 64-bit SimHash of a token-array column: per-bit majority vote of token
-    * xxhash64 values. A built-in expression tree, no UDF — but the nested
-    * aggregate/transform lambdas are evaluated interpretively, per row.
-    * `tokensCol` is the name of an array<string> column in scope. */
-  def simhash(tokensCol: String): Column = expr(s"""
-    aggregate(
-      sequence(0, 63),
-      cast(0 as bigint),
-      (acc, b) -> acc | IF(
-        aggregate(transform($tokensCol, t -> xxhash64(t)), 0,
-          (a, h) -> a + IF(((h >> b) & 1) = 1, 1, -1)) > 0,
-        shiftleft(cast(1 as bigint), b),
-        cast(0 as bigint)))""")
+    * xxhash64 values. Each token is hashed once; the vote is one codegen'd
+    * pass over the hashes (graft.functions.SimHash, whose scaladoc gives the
+    * nested aggregate/transform form it replaces). `tokensCol` is the name
+    * of an array<string> column in scope. */
+  def simhash(tokensCol: String): Column =
+    cl(graft.functions.SimHash(ex(transform(col(tokensCol), t => xxhash64(t))), 64))
 
   private def docs(s: SparkSession, d: String) = Tables.t(s, d, "documents")
 
@@ -1106,21 +1100,13 @@ object Dedup {
 
     // SimHash signatures, hash-checked bit-for-bit: the query variant uses a
     // 32-bit md5-derived token hash both engines can compute (the library
-    // `simhash` API keeps xxhash64 — cheaper at scale, same algorithm).
-    // `hashes` is bound to a column before the per-bit aggregate (HOF lambda
-    // re-evaluates non-attribute subtrees per element).
+    // `simhash` API keeps xxhash64 — cheaper at scale, same algorithm). The
+    // per-bit vote is the SimHash kernel; the oracle replays its HOF form.
     "d05_simhash" -> Q(
       (s, d) => docs(s, d)
-        .select(col("doc_id"), col("source"),
-          split(normalize(col("text")), " ").as("toks"))
-        .select(col("doc_id"), col("source"),
-          expr("transform(toks, t -> cast(conv(substr(md5(t), 25, 8), 16, 10) as bigint))")
-            .as("hashes"))
-        .select(col("doc_id"), col("source"), expr("""
-          aggregate(sequence(0, 31), cast(0 as bigint), (acc, b) -> acc | IF(
-            aggregate(hashes, cast(0 as int),
-              (a, h) -> a + IF(((h >> b) & 1) = 1, 1, -1)) > 0,
-            shiftleft(cast(1 as bigint), b), cast(0 as bigint)))""").as("sig"))
+        .select(col("doc_id"), col("source"), cl(graft.functions.SimHash(ex(
+          transform(split(normalize(col("text")), " "),
+            t => conv(substring(md5(t), 25, 8), 16, 10).cast("long"))), 32)).as("sig"))
         .orderBy("doc_id"),
       Some("""
         WITH t AS (

@@ -355,22 +355,15 @@ object TextAnalysis {
 
     // Character-level Shannon entropy — a perplexity proxy for quality
     // filtering (gibberish/binary-noise docs score far from prose). The
-    // distinct-char list is sorted on BOTH sides so the double summation
-    // order is identical → hash-exact. chars/n are bound attributes (HOF
-    // lambdas re-evaluate non-attribute subtrees per element).
+    // ArrayEntropy kernel sums over the distinct chars in sorted order, and
+    // the oracle sorts its distinct-char list too, so the double summation
+    // order is identical → hash-exact.
     "t05_char_entropy" -> Q(
       (s, d) => docs(s, d)
         .select(col("doc_id"), split(col("text"), "").as("chars"))
-        .select(col("doc_id"), col("chars"),
-          sort_array(array_distinct(col("chars"))).as("dl"),
-          size(col("chars")).cast("double").as("n"))
-        .select(col("doc_id"), col("n").cast("long").as("n_chars"),
-          round(expr("""
-            0.0 - aggregate(
-              transform(dl, c ->
-                (size(filter(chars, x -> x = c)) / n) *
-                log2(size(filter(chars, x -> x = c)) / n)),
-              cast(0.0 as double), (a, p) -> a + p)"""), 6).as("entropy"))
+        .select(col("doc_id"), size(col("chars")).cast("long").as("n_chars"),
+          round(org.apache.spark.sql.GraftBridge.column(graft.functions.ArrayEntropy(
+            org.apache.spark.sql.GraftBridge.expression(col("chars")))), 6).as("entropy"))
         .orderBy("doc_id"),
       Some("""
         WITH c AS (

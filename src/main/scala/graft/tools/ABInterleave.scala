@@ -11,14 +11,17 @@ import graft._
   * every other pair (ON/OFF, OFF/ON, …) so any monotone warm-up or co-tenant
   * trend cancels across pairs instead of favoring one arm; prints one JSON
   * line with per-run seconds and the 1-minute load average sampled at each
-  * run so the judge can see the window was quiet. */
+  * run, so a reader can see the window was quiet. A run is the query's full
+  * evaluation through the `noop` sink, perfbench's definition: `count()`
+  * would let Catalyst prune the very projections an expression A/B is
+  * about. */
 object ABInterleave {
   def main(args: Array[String]): Unit = {
     val dir = args(0); val name = args(1); val key = args(2)
     val nPairs = if (args.length > 3) args(3).toInt else 4
     val (onV, offV) =
       if (args.length > 5) (args(4), args(5)) else ("true", "false")
-    val spark = GraftSession.local(32)
+    val spark = GraftSession.local(GraftSession.boxCpus)
     val q = SparkEntry.all(name)
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     def load: Double = os.getSystemLoadAverage
@@ -26,7 +29,8 @@ object ABInterleave {
       val v = if (on) onV else offV
       if (v == "__unset__") spark.conf.unset(key) else spark.conf.set(key, v)
       val l = load
-      val t0 = System.nanoTime(); q.fn(spark, dir).count()
+      val t0 = System.nanoTime()
+      q.fn(spark, dir).write.format("noop").mode("overwrite").save()
       ((System.nanoTime() - t0) / 1e9, l)
     }
     run(true); run(false) // prewarm both arms
@@ -45,7 +49,7 @@ object ABInterleave {
       s""""sf":"$dir","ts":"${java.time.Instant.now}"}""")
     spark.stop()
   }
-  private def median(xs: Seq[Double]): Double = {
+  private[tools] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted; val n = s.length
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
   }

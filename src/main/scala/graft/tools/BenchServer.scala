@@ -23,8 +23,7 @@ import graft._
 object BenchServer {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local(GraftSession.boxCpus)
     println("""{"ready":true}""")
     Console.flush()
     var done = false

@@ -6,7 +6,7 @@ object BenchSubset {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1)
-    val spark = GraftSession.local(32)
+    val spark = GraftSession.local(GraftSession.boxCpus)
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }

@@ -33,7 +33,7 @@ object Bucketize {
       }
       else Seq(("orders", "o_orderkey", ""),
         ("lineitem", "l_orderkey", ""))
-    val spark = GraftSession.local(32)
+    val spark = GraftSession.local(GraftSession.boxCpus)
     specs.foreach { case (table, key, srt) =>
       val t0 = System.nanoTime()
       Bucketing.persistBucketed(spark,

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions.col
 object ClusterBy {
   def main(args: Array[String]): Unit = {
     val Array(src, out, column, files) = args.take(4)
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = graft.GraftSession.local(graft.GraftSession.boxCpus)
     spark.read.parquet(src)
       .repartitionByRange(files.toInt, col(column))
       .sortWithinPartitions(column)

@@ -21,7 +21,7 @@ object DedupSoak {
     val cap = if (args.length > 1) args(1).toInt else 500
     val waveDocs = if (args.length > 2) args(2).toInt else 2000
     val copies = if (args.length > 3) args(3).toInt else 100
-    val spark = GraftSession.local(32)
+    val spark = GraftSession.local(GraftSession.boxCpus)
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f

@@ -10,8 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = graft.GraftSession.local(graft.GraftSession.boxCpus)
     val df = graft.SparkEntry.all(name).fn(spark, sfDir)
     df.explain("formatted")
     val t0 = System.nanoTime()
@@ -24,7 +23,7 @@ object Explain {
 /** Stagewise timing probe for the MinHash-LSH pipeline. */
 object ProbeLsh {
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.local(32)
+    val spark = graft.GraftSession.local(graft.GraftSession.boxCpus)
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     def time[T](tag: String)(f: => T): Unit = {
       val t0 = System.nanoTime(); f

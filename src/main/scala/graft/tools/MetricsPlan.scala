@@ -12,7 +12,7 @@ object MetricsPlan {
   def main(args: Array[String]): Unit = {
     val q = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local(GraftSession.boxCpus)
     val entry = SparkEntry.all(q)
     // warm once (catalog/IO), then measure the second run's metrics.
     // NOTE: execute through df.collect(), not df.count() — count() builds

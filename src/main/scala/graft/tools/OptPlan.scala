@@ -7,8 +7,7 @@ object OptPlan {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
+    val spark = GraftSession.local(GraftSession.boxCpus)
     if (args.length > 2) args(2).split(",").foreach { kv =>
       val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 /** Scratch: time the stages of the d04 pipeline at a given sf. */
 object TimeProbe {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(32)
+    val spark = GraftSession.local(GraftSession.boxCpus)
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val docs = Tables.t(spark, dir, "documents")
     def time(label: String)(f: => Unit): Unit = {

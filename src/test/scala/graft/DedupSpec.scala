@@ -148,6 +148,22 @@ class DedupSpec extends AnyFunSuite {
       assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"))
     }
 
+  // d05/t05 compute their per-row math with the SimHash and ArrayEntropy
+  // kernels. An aggregate or filter lambda here means the interpreted form
+  // (evaluated per element per bit, or per distinct char) came back; the one
+  // lambda left is d05's md5 token-hash transform.
+  for ((name, kernel, lambdas) <- Seq(
+      ("d05_simhash", "SimHash", Seq("ArrayTransform")),
+      ("t05_char_entropy", "ArrayEntropy", Nil)))
+    test(s"$name evaluates its per-row math as a kernel, not lambdas") {
+      import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+      val plan = SparkEntry.all(name).fn(spark, sf).queryExecution.optimizedPlan
+      val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      val hofs = exprs.collect { case h: HigherOrderFunction => h.getClass.getSimpleName }
+      assert(hofs == lambdas, plan.treeString.take(1200))
+      assert(exprs.exists(_.getClass.getSimpleName == kernel), plan.treeString.take(1200))
+    }
+
   // d12: the eval n-gram set must BROADCAST (the corpus side is the
   // 100 TB side — a shuffled join there would shuffle every corpus gram;
   // the broadcast keeps the corpus side one map pass + per-doc count).

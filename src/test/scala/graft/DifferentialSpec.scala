@@ -217,4 +217,97 @@ class DifferentialSpec extends AnyFunSuite {
         s"shingles diverged on ${t.map(_.toInt)}")
     }
   }
+
+  test("SimHash and ArrayEntropy kernels == the HOF forms they replaced, " +
+      "under whole-stage codegen and interpreted") {
+    // d05/t05 and Dedup.simhash once computed these as nested
+    // aggregate/transform/filter lambdas; the kernels must give the same
+    // bits. Cases the oracles' fixture text never reaches: NULL and empty
+    // arrays, NULL elements, negative and >= 2^32 hashes, 1/32/64-bit
+    // signatures, single-distinct arrays (entropy exactly 0.0), multi-byte
+    // and empty-string elements.
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types._
+    val genHash: Gen[java.lang.Long] = Gen.frequency(
+      1 -> Gen.const(null: java.lang.Long),
+      3 -> Gen.chooseNum(0L, 0xffffffffL).map(Long.box),
+      2 -> Gen.chooseNum(Long.MinValue, -1L).map(Long.box),
+      2 -> Gen.chooseNum(0x100000000L, Long.MaxValue).map(Long.box),
+      1 -> Gen.oneOf(0L, -1L, Long.MinValue, Long.MaxValue).map(Long.box))
+    val genStr: Gen[String] = Gen.frequency(
+      1 -> Gen.const(null: String),
+      8 -> Gen.oneOf("", "a", "b", "ab", "A", "ß", "中", "文", "Füße", "ΑΒ", "\uD83D\uDE00", " "))
+    def genArr[T](g: Gen[T]): Gen[Seq[T]] = Gen.frequency(
+      1 -> Gen.const(null: Seq[T]),
+      1 -> Gen.const(Seq.empty[T]),
+      8 -> Gen.chooseNum(1, 40).flatMap(n => Gen.listOfN(n, g)))
+    val params = Gen.Parameters.default
+    var seed = org.scalacheck.rng.Seed(11L)
+    def draw[T](g: Gen[T]): T = { val v = g(params, seed).get; seed = seed.next; v }
+    def l(v: Long): java.lang.Long = java.lang.Long.valueOf(v)
+    val hashArrays: Seq[Seq[java.lang.Long]] = (1 to 150).map(_ => draw(genArr(genHash))) ++
+      Seq[Seq[java.lang.Long]](null, Seq(), Seq(null), Seq(null, null, l(7)), Seq(l(-1)),
+        Seq(l(0x1ffffffffL), l(1)))
+    val strArrays: Seq[Seq[String]] = (1 to 150).map(_ => draw(genArr(genStr))) ++
+      Seq(null, Seq(), Seq(""), Seq("a", "a", "a"), Seq("中", "中"), Seq(null), Seq("a", null))
+    val n = math.max(hashArrays.length, strArrays.length)
+    def hAt(i: Int) = hashArrays(i % hashArrays.length)
+    def xsAt(i: Int) = strArrays(i % strArrays.length)
+    val rows = (0 until n).map(i => Row(i, hAt(i), xsAt(i)))
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("h", ArrayType(LongType)), StructField("xs", ArrayType(StringType))))
+    // an RDD source, not a local relation: the optimizer folds projections
+    // over local data at plan time, which would bypass the kernels' codegen
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    def kernel(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+      org.apache.spark.sql.GraftBridge.column(e)
+    def hcol = org.apache.spark.sql.GraftBridge.expression(col("h"))
+    def simhashHof(bits: Int): Column = expr(s"""
+      aggregate(sequence(0, ${bits - 1}), cast(0 as bigint), (acc, b) -> acc | IF(
+        aggregate(h, cast(0 as int), (a, x) -> a + IF(((x >> b) & 1) = 1, 1, -1)) > 0,
+        shiftleft(cast(1 as bigint), b), cast(0 as bigint)))""")
+    val entropyHof = expr("""
+      0.0 - aggregate(
+        transform(sort_array(array_distinct(xs)), c ->
+          (size(filter(xs, x -> x = c)) / cast(size(xs) as double)) *
+          log2(size(filter(xs, x -> x = c)) / cast(size(xs) as double))),
+        cast(0.0 as double), (a, p) -> a + p)""")
+    val bitsCases = Seq(1, 32, 64)
+    def q = df.select(col("id") +: (bitsCases.flatMap(b => Seq(
+        kernel(graft.functions.SimHash(hcol, b)), simhashHof(b))) ++ Seq(
+        kernel(graft.functions.ArrayEntropy(
+          org.apache.spark.sql.GraftBridge.expression(col("xs")))), entropyHof)): _*)
+    val modes = Seq(
+      true -> Seq("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      false -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((wscg, confs) <- modes) {
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        val qm = q
+        val out = qm.collect().sortBy(_.getInt(0))
+        assert(qm.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]) == wscg)
+        assert(out.length == rows.length)
+        var zeros = 0
+        out.foreach { r =>
+          val i = r.getInt(0)
+          bitsCases.indices.foreach { k =>
+            assert(r.get(1 + 2 * k) == r.get(2 + 2 * k),
+              s"simhash(${bitsCases(k)}) diverged (wscg=$wscg) on ${hAt(i)}")
+          }
+          val (e, e0) = (r.get(7), r.get(8))
+          assert(java.util.Objects.equals(e, e0),
+            s"entropy diverged (wscg=$wscg): $e vs $e0 on ${xsAt(i)}")
+          if (e == 0.0) zeros += 1
+        }
+        assert(zeros > 0, "no single-distinct array reached the entropy kernel")
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
 }

@@ -1985,7 +1985,7 @@ class RefCorpusPairsSpec extends org.scalatest.funsuite.AnyFunSuite {
     "SELECT * FROM VALUES (1, 2), (2, 1), (3, 1)")
 
   // --- ORDER BY source-column reference shadowed by an output alias
-  // (round 5: sortSourceToAlias retry) ---
+  // (PrestoDialect's SortSourceToAlias rule) ---
   ref("pair L918",
     "SELECT a AS foo FROM (values (1,2),(3,2)) t(a,b) GROUP BY GROUPING SETS ((a), (a, b)) HAVING b IS NOT NULL ORDER BY -a",
     "VALUES 3, 1")

@@ -610,10 +610,11 @@ class RefCorpusSpec extends AnyFunSuite {
     "VALUES 5")
 
   // --- testWindowFunctionWithGroupBy (:3813) — star select + ordinal
-  // GROUP BY + window fn. Spark raises STAR_GROUP_BY_POS;
-  // Engine.starGroupByOrdinal retries as a window projection over
-  // Distinct (legal in Presto only when the ordinals cover the whole star
-  // expansion, i.e. the aggregate IS distinct-over-child).
+  // GROUP BY + window fn. Spark rejects the pair (STAR_GROUP_BY_POS);
+  // PrestoDialect's StarBeforeOrdinals parks the ordinals until the star
+  // has expanded and StarOrdinalsRestore resolves them against the
+  // expanded list (legal in Presto only when the ordinals cover the whole
+  // star expansion, i.e. the aggregate IS distinct-over-child).
   ref("window function with star group by ordinal",
     "SELECT *, rank() OVER (PARTITION BY x)\nFROM (SELECT 'foo' x)\nGROUP BY 1",
     "SELECT 'foo', 1")
