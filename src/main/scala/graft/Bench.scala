@@ -35,11 +35,15 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    // a failed query is -1 in `queries` and left out of `total`; `failed`
+    // names it, so a short total cannot pass for a fast one
+    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
     // loadavg_start: the 1-min load BEFORE the suite ran (co-tenant noise
     // indicator — this box bursts to load-avg ~25; numbers recorded above
     // ~5 understate nothing on the Spark side but a reader should prefer a
     // quiet-window re-run). loadavg_end includes our own 32-thread burst.
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","loadavg_start":$loadStart%.2f,"loadavg_end":${os.getSystemLoadAverage}%.2f,"ts":"${java.time.Instant.now}"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","loadavg_start":$loadStart%.2f,"loadavg_end":${os.getSystemLoadAverage}%.2f,"ts":"${java.time.Instant.now}"}""")
     spark.stop()
   }
 }

@@ -167,6 +167,24 @@ object GraftSession {
     // dominates the one-time build. Truly small dims (nation, region,
     // filtered lookups) stay under 4 MB and still broadcast everywhere.
     "spark.sql.autoBroadcastJoinThreshold" -> "4m",
+    // Compiled-code cache sized to the working set, so a query that comes
+    // round again reuses its generated classes (Presto compiles each
+    // expression once: ExpressionCompiler's class cache). Spark's 100-entry
+    // LRU holds less than one loop over perfbench's olap_sf1 entries, and
+    // a loop over more classes than an LRU holds never hits: each olap_sf1
+    // execution recompiled (traced: 8-10 Janino compiles, about 0.1 s)
+    // and ran its fresh classes interpreted again. Working set = the
+    // distinct classes one pass compiles (tools.TimeOps with every entry
+    // listed twice in one JVM; the second pass compiles nothing but the 2
+    // classes of r16_ref_arrays that inline rand()'s per-query seed):
+    // olap_sf1 115, llm_ops 47, dialect_small 122, so mixed_2clients (the
+    // olap and dialect loops in one JVM) at most 237. 500 holds the
+    // largest twice.
+    // STATIC conf: CodeGenerator's static initializer reads it once per
+    // JVM (SQLConf.get at the first generated class), so it only takes
+    // effect when the session carrying it is active before the JVM's first
+    // codegen; spark.conf.set cannot change it later.
+    "spark.sql.codegen.cache.maxEntries" -> "500",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false") ++
     localExchangeConf ++
@@ -180,7 +198,7 @@ object GraftSession {
   def boxCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  def local(cpus: Int = 32): SparkSession = {
+  def local(cpus: Int): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")

@@ -997,9 +997,4 @@ object Engine {
     * time when uncached). */
   def cached(parent: SparkSession, dir: String): Engine =
     cache.computeIfAbsent((parent, dir), _ => new Engine(parent).loadCatalog(dir))
-
-  /** Engine over a local session + fixture catalog (test entry point —
-    * the LocalQueryRunner shape). */
-  def local(dir: String, cpus: Int = 32): Engine =
-    new Engine(GraftSession.local(cpus)).loadCatalog(dir)
 }

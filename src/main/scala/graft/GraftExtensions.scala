@@ -95,6 +95,13 @@ class GraftPlannerExtensions extends (SparkSessionExtensions => Unit) {
   *  - `spark.sql.timeType.enabled=true` — the TIME type;
   *  - `spark.sql.parser.escapedStringLiterals=true` — string literals
   *    without escape processing (`'\d'` is a backslash and a d).
+  *
+  * A fourth setting is for speed, not for the surface:
+  * `spark.sql.codegen.cache.maxEntries` sizes Spark's compiled-code cache
+  * (`GraftSession.localConf` explains the value it uses on one box). It is
+  * a static conf, read once per JVM when the first class is generated, so
+  * `spark.conf.set` cannot change it and neither can an extension; pass it
+  * at launch (`--conf`), sized from the cluster's own query mix.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

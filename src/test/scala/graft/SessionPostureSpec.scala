@@ -22,6 +22,7 @@ class SessionPostureSpec extends AnyFunSuite {
       "spark.sql.shuffledHashJoinFactor" -> "1",
       "spark.sql.autoBroadcastJoinThreshold" -> "4m",
       "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "536870912",
+      "spark.sql.codegen.cache.maxEntries" -> "500",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.shuffle.compress" -> "false",
       "spark.shuffle.spill.compress" -> "false") ++ localDir

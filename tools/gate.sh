@@ -17,7 +17,7 @@ cd "$(dirname "$0")/.."
 case "$POSTURE" in
   flat) unset SPARK_GRAFT_CONF ;;
   off)
-    export SPARK_GRAFT_CONF="spark.graft.eagerAgg=false,spark.graft.dynamicFilter.enabled=false,spark.graft.scaledLongSum=false,spark.graft.cascadeGroupingSets=false,spark.graft.fuseScalarAggs=false,spark.graft.dynamicFrameJoin=false,spark.graft.singleStageAgg=false,spark.graft.sortSharedAgg=false,spark.graft.streamingSortedAgg=false,spark.graft.streamingSortedAgg.hybrid=false,spark.graft.joinReorder=false,spark.graft.layoutPick=false"
+    export SPARK_GRAFT_CONF="spark.graft.eagerAgg=false,spark.graft.dynamicFilter.enabled=false,spark.graft.dynamicFilter.longSet=false,spark.graft.scaledLongSum=false,spark.graft.cascadeGroupingSets=false,spark.graft.fuseScalarAggs=false,spark.graft.dynamicFrameJoin=false,spark.graft.singleStageAgg=false,spark.graft.sortSharedAgg=false,spark.graft.streamingSortedAgg=false,spark.graft.streamingSortedAgg.hybrid=false,spark.graft.joinReorder=false,spark.graft.layoutPick=false"
     ;;
   *) echo "unknown posture: $POSTURE (flat|off)" >&2; exit 2 ;;
 esac
