@@ -29,7 +29,11 @@ object Bench {
           time(q.fn(spark, sfDir).count()) // prewarm (plans + file listing + JIT)
           val runs = Seq.fill(3)(time(q.fn(spark, sfDir).count()))
           name -> runs.min
-        } catch { case NonFatal(_) => name -> -1.0 }
+        } catch {
+          case NonFatal(e) =>
+            System.err.println(s"[bench] $name failed: $e")
+            name -> -1.0
+        }
       }
     }
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }

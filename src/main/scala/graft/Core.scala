@@ -39,8 +39,7 @@ object Tables {
     * so a session that opts into a layout never sees stale flat-parquet
     * entries (and vice versa). */
   private def layoutKey(spark: SparkSession): String =
-    try spark.conf.get("spark.graft.bucketedDir", "")
-    catch { case _: Exception => "" }
+    graft.operators.Bucketing.layoutDir(spark)
 
   /** Table-metadata cache: resolving a parquet table re-lists files and
     * re-reads footers; a real engine caches catalog metadata, so repeated

@@ -20,7 +20,7 @@ class GraftPlannerExtensions extends (SparkSessionExtensions => Unit) {
     // engine-level dynamic filtering + short-decimal long accumulation —
     // every query planned in the session gets them (graft.plans
     // .GraftOptimizations; the reference does this class of work in its
-    // optimizer: PickTableLayout/TupleDomain narrowing, PredicatePushDown
+    // optimizer: TupleDomain layout narrowing, PredicatePushDown
     // equality inference, DecimalSumAggregation long state)
     ext.injectOptimizerRule(session => new plans.DynamicSemiJoinPrune(session))
     ext.injectOptimizerRule(_ => plans.ScaledLongSum)
@@ -47,11 +47,6 @@ class GraftPlannerExtensions extends (SparkSessionExtensions => Unit) {
     // rewrites above (EagerAggregationReuse in particular — reordering
     // first was measured to break its h18 pattern match)
     ext.injectOptimizerRule(session => new plans.LayoutJoinReorder(session))
-    // per-query layout selection over MULTIPLE persisted layouts of one
-    // table (spark.graft.bucketedDir=dirA,dirB): swap a scan to the
-    // sibling layout whose bucket key matches the join keys when that
-    // makes the join co-located — the reference's PickTableLayout
-    ext.injectOptimizerRule(session => new plans.PickTableLayout(session))
     // an adjacent partial+final aggregate pair (child already partitioned
     // on the group keys) collapses to one complete-mode pass — runs as an
     // AQE stage-prep rule so it sees the post-replanning physical plan

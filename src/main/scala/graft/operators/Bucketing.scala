@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
 
 /** Bucketed (co-located) joins — the 100 TB fact⋈fact strategy.
   *
@@ -16,15 +15,6 @@ import graft.Tables
   */
 object Bucketing {
 
-  /** Write a DataFrame as a bucketed+sorted managed table. */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
-
   // ── Persisted bucketed layouts (grouped execution à la
   // presto-hive/.../HiveBucketing.java + SPI ConnectorTablePartitioning:
   // a table stored pre-hashed on its key executes joins/aggregations on
@@ -35,13 +25,23 @@ object Bucketing {
 
   private val MARKER = "_graft_bucketspec"
 
+  /** The session's layout directory (`spark.graft.bucketedDir`, "" when
+    * unset). One directory: each table has at most one layout. */
+  def layoutDir(spark: SparkSession): String = {
+    val dir = spark.conf.get("spark.graft.bucketedDir", "").trim
+    require(!dir.exists(c => c == ',' || c == ';'),
+      s"spark.graft.bucketedDir takes one directory, got '$dir'")
+    dir
+  }
+
   /** Persist `df` as an external bucketed layout at `layoutDir/name_b`.
     * `key` may be a comma-separated multi-column key.
     * `repartition(buckets, keys…)` first so each task holds exactly one
     * bucket (repartition and bucketBy share murmur3-pmod hashing):
     * one file per bucket, which also makes the sorted output ordering
-    * usable by the scan. */
-  /** `sortKey` (optional, defaults to the bucket key) orders files WITHIN
+    * usable by the scan.
+    *
+    * `sortKey` (optional, defaults to the bucket key) orders files WITHIN
     * each bucket on a longer key list — the bucket key must stay a PREFIX
     * so the sorted-scan contract (and every bucket-keyed join) still
     * holds; the extra sort columns let sorted-input aggregates on wider
@@ -66,82 +66,18 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(stage)
     spark.sql(s"DROP TABLE $stage") // external: files stay
-    // Content fingerprint: row count plus an ORDER-INDEPENDENT content
-    // hash (xor of per-row xxhash64 over all columns, column order fixed
-    // by name) of the just-written layout, one scan. Sibling layouts of
-    // one base table must hold identical rows — the redirect refuses to
-    // register a sibling whose count OR content hash disagrees, so a
-    // stale or partially rewritten layout can never silently change query
-    // results through a PickTableLayout swap. xor is commutative, so two
-    // layouts holding the same multiset of rows in different physical
-    // orders (the entire point of sibling layouts) hash identically.
-    val written = spark.read.parquet(loc)
-    val hashCols = written.columns.sorted.map(col).toSeq
-    val fp = written.agg(count(lit(1)), bit_xor(xxhash64(hashCols: _*)))
-      .head()
-    val (rows, xorHash) = (fp.getLong(0), if (fp.isNullAt(1)) 0L else fp.getLong(1))
-    val marker = java.nio.file.Paths.get(loc, MARKER)
-    java.nio.file.Files.write(marker,
-      (s"key=${keys.mkString(",")}\nbuckets=$buckets\n" +
-        s"sort=${sortKeys.mkString(",")}\nrows=$rows\nxor=$xorHash\n")
+    java.nio.file.Files.write(java.nio.file.Paths.get(loc, MARKER),
+      s"key=${keys.mkString(",")}\nbuckets=$buckets\nsort=${sortKeys.mkString(",")}\n"
         .getBytes("UTF-8"))
   }
 
-  /** One registered persisted layout of a base table: catalog table name,
-    * absolute location, bucket key columns, bucket count, the row count
-    * recorded at persist time (None for pre-round-15 markers), the
-    * within-bucket sort columns (bucket keys are always their prefix),
-    * and the order-independent content hash recorded at persist time
-    * (None for pre-round-16 markers). */
-  final case class LayoutInfo(base: String, table: String, location: String,
-      keys: Seq[String], buckets: Int, rows: Option[Long] = None,
-      sort: Seq[String] = Nil, contentHash: Option[Long] = None)
-
-  /** Per-session registry of EVERY layout registered for a base table —
-    * the catalog-metadata analogue of the reference's per-table layout
-    * list (SPI ConnectorTableLayout; MAIN/sql/planner/iterative/rule/
-    * PickTableLayout.java picks one per query). Populated by [[redirect]];
-    * read by plans.PickTableLayout to swap a scan to the sibling layout
-    * whose bucket key matches the query's join keys. */
-  // Weakly keyed by session: a driver that creates many short-lived
-  // sessions must not have each one (and its session state) pinned for the
-  // JVM lifetime by its layout registrations — entries vanish with the
-  // session. All access under the map's monitor (WeakHashMap is not
-  // thread-safe); values are immutable snapshots.
-  private val layoutRegistry =
-    new java.util.WeakHashMap[SparkSession, Map[String, Seq[LayoutInfo]]]()
-
-  private def registryPut(spark: SparkSession, name: String,
-      infos: Seq[LayoutInfo]): Unit = layoutRegistry.synchronized {
-    val cur = Option(layoutRegistry.get(spark)).getOrElse(Map.empty)
-    layoutRegistry.put(spark, cur + (name -> infos))
-  }
-
-  /** location → all sibling layouts of the same base table registered in
-    * this session. Empty unless SOME base has ≥ 2 layouts (the only case
-    * the pick rule has a decision to make) — single-layout tables are
-    * still listed then, because they can be the co-location PARTNER of a
-    * swapped side. */
-  def alternateLayouts(spark: SparkSession): Map[String, Seq[LayoutInfo]] = {
-    val mine = layoutRegistry.synchronized {
-      Option(layoutRegistry.get(spark)).getOrElse(Map.empty)
-    }
-    if (mine.values.exists(_.length >= 2))
-      mine.values.flatMap(infos => infos.map(i => i.location -> infos)).toMap
-    else Map.empty
-  }
-
   /** Re-register a persisted bucketed layout in THIS session's catalog
-    * (idempotent; schema read from the parquet footers). Returns the
-    * catalog table name, or None when no layout exists for `name`. */
+    * (idempotent per location; schema read from the parquet footers).
+    * Returns the catalog table name, or None when no layout exists for
+    * `name`. Markers written before the layout tier dropped its content
+    * fingerprint also carry `rows=`/`xor=` lines; they are ignored. */
   def registerBucketed(spark: SparkSession, layoutDir: String,
-      name: String): Option[String] =
-    registerBucketedAs(spark, layoutDir, name, "").map(_.table)
-
-  /** As [[registerBucketed]], under a suffixed catalog name (so several
-    * layouts of the same base table coexist in one session's catalog). */
-  def registerBucketedAs(spark: SparkSession, layoutDir: String,
-      name: String, suffix: String): Option[LayoutInfo] = {
+      name: String): Option[String] = {
     val loc = s"$layoutDir/${name}_b"
     val marker = java.nio.file.Paths.get(loc, MARKER)
     if (!java.nio.file.Files.isRegularFile(marker)) return None
@@ -151,10 +87,10 @@ object Bucketing {
       }.toMap
     val (key, buckets) = (props("key"), props("buckets").toInt)
     val sortCols = props.getOrElse("sort", key) // pre-round-13 markers: = key
-    val tbl = s"graft_bucketed_$name$suffix"
+    val tbl = s"graft_bucketed_$name"
     // idempotent PER LOCATION: a session that switches spark.graft
-    // .bucketedDir (layout A/Bs, multi-layout deployments) must not keep
-    // serving the first layout under the same catalog name
+    // .bucketedDir (layout A/Bs) must not keep serving the first layout
+    // under the same catalog name
     val existingLoc =
       if (!spark.catalog.tableExists(tbl)) None
       else try Some(spark.sessionState.catalog.getTableMetadata(
@@ -168,117 +104,30 @@ object Bucketing {
         CLUSTERED BY ($key) SORTED BY ($sortCols) INTO $buckets BUCKETS
         LOCATION '$loc'""") // key may be a comma-joined multi-column list
     }
-    Some(LayoutInfo(name, tbl, wantLoc,
-      key.split(",").map(_.trim).filter(_.nonEmpty).toSeq, buckets,
-      props.get("rows").flatMap(r => scala.util.Try(r.toLong).toOption),
-      sortCols.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-      props.get("xor").flatMap(x => scala.util.Try(x.toLong).toOption)))
+    Some(tbl)
   }
-
-  /** The registered layout serving `location` in this session, if any —
-    * regardless of whether sibling layouts exist (unlike
-    * [[alternateLayouts]], which only lists when a pick decision exists).
-    * Used by plans.PickTableLayout to recognise a scan as a sorted layout
-    * even in single-layout deployments. */
-  def layoutAt(spark: SparkSession, location: String): Option[LayoutInfo] =
-    layoutRegistry.synchronized {
-      Option(layoutRegistry.get(spark)).getOrElse(Map.empty)
-    }.values.flatten.find(_.location == location)
 
   /** Bucketed-layout redirect for [[graft.Tables]]: when the session sets
-    * `spark.graft.bucketedDir` (a single directory, or a comma-separated
-    * list for multi-layout deployments) and some directory holds a
-    * persisted layout for `name`, serve that bucketed catalog table
-    * instead of the flat parquet — every query keyed on the bucket column
-    * then plans its joins/aggregates exchange-free.
+    * `spark.graft.bucketedDir` to a directory holding a persisted layout
+    * for `name`, serve that bucketed catalog table instead of the flat
+    * parquet — every query keyed on the bucket column then plans its
+    * joins/aggregates exchange-free.
     *
-    * With a LIST, the FIRST directory holding the table is the default
-    * serving layout; every other directory's layout of the same table is
-    * also registered (suffixed catalog name) and recorded in the layout
-    * registry, where [[graft.plans.PickTableLayout]] swaps a scan
-    * per-query to the sibling whose bucket key matches the join keys —
-    * one session serves q3-shape queries from a custkey layout and
-    * orderkey-keyed queries from the orderkey layout with no conf flip.
-    * All layouts of a table must hold the SAME rows (they are alternate
-    * physical orders of one logical table — the deployment's contract,
-    * exactly as the reference's multiple ConnectorTableLayouts). */
+    * Serving a layout also turns on the sorted-bucket scan
+    * (`spark.sql.legacy.bucketedTableScan.outputOrdering`): the scan
+    * reports its within-bucket sort order, so the SMJ Sorts above a
+    * bucketed join vanish and sorted-input aggregates stream. The setting
+    * is session-global but sound for ANY bucketed table: Spark 4.1's
+    * FileSourceScanLike reports an ordering only when every bucket holds
+    * at most one file and buckets are not coalesced (BucketingSpec pins
+    * that guard), and graft layouts hold exactly one sorted file per
+    * bucket. */
   def redirect(spark: SparkSession, name: String): Option[DataFrame] = {
-    val layout =
-      try spark.conf.get("spark.graft.bucketedDir", "")
-      catch { case _: Exception => "" }
-    // list separator: comma or semicolon (the env-var conf channel
-    // SPARK_GRAFT_CONF splits on commas, so multi-dir values passed
-    // through it use ';')
-    val dirs = layout.split("[,;]").map(_.trim).filter(_.nonEmpty)
-    if (dirs.isEmpty) return None
-    val all = dirs.zipWithIndex.flatMap { case (d, i) =>
-      registerBucketedAs(spark, d, name, if (i == 0) "" else s"_l$i")
-    }
-    if (all.isEmpty) return None
-    // Sibling validation (content fingerprint): every layout of a base
-    // table must hold the same rows as the PRIMARY (first) layout. A
-    // sibling whose recorded row count disagrees — a stale copy, or a
-    // layout rebuilt mid-write — is dropped from the registry so the pick
-    // rule can never swap a scan onto it. Markers without a count
-    // (pre-round-15 layouts) keep the old deployment-contract trust.
-    val primary = all.head
-    val infos = primary +: all.tail.filter { s =>
-      val rowsOk = (primary.rows, s.rows) match {
-        case (Some(p), Some(r)) => p == r
-        case _ => true
-      }
-      // content hash: order-independent, so equal multisets of rows agree
-      // even across different physical orders; a same-count sibling whose
-      // CONTENT diverged (partial rewrite, stale copy) is refused here
-      val hashOk = (primary.contentHash, s.contentHash) match {
-        case (Some(p), Some(h)) => p == h
-        case _ => true
-      }
-      val ok = rowsOk && hashOk
-      if (!ok) System.err.println(
-        s"graft: dropping sibling layout ${s.location} of '$name' — " +
-          (if (!rowsOk) s"row count ${s.rows.get} != primary ${primary.rows.get} "
-           else s"content hash ${s.contentHash.get} != primary ${primary.contentHash.get} ") +
-          s"(${primary.location}); rebuild the layout")
-      ok
-    }
-    registryPut(spark, name, infos.toSeq)
-    // Opt-in sorted-bucket scans (spark.graft.bucketedSortedScan):
-    // graft layouts guarantee exactly ONE sorted file per bucket
-    // (persistBucketed's hash-aligned repartition), which is the
-    // regime where the legacy output-ordering conf is sound — the
-    // scan then reports its sort order and the SMJ Sorts above
-    // bucketed joins vanish (measured: h21 4.68→4.13 s at sf30).
-    // Session-global, so it stays default-OFF: enable only when every
-    // bucketed table in the session is a graft layout.
-    val sorted =
-      try spark.conf.get("spark.graft.bucketedSortedScan", "false").toBoolean
-      catch { case _: Exception => false }
-    if (sorted) spark.conf.set(
-      "spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    Some(spark.table(infos.head.table))
-  }
-
-  /** Stage orders+lineitem as co-bucketed tables (idempotent per session). */
-  def stageOrdersLineitem(spark: SparkSession, dir: String,
-      buckets: Int = 8): Unit = {
-    if (!spark.catalog.tableExists("orders_b")) {
-      writeBucketed(Tables.t(spark, dir, "orders"), "orders_b", "o_orderkey", buckets)
-      writeBucketed(Tables.t(spark, dir, "lineitem"), "lineitem_b", "l_orderkey", buckets)
+    val dir = layoutDir(spark)
+    if (dir.isEmpty) return None
+    registerBucketed(spark, dir, name).map { tbl =>
+      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+      spark.table(tbl)
     }
   }
-
-  /** The co-located join: revenue per order priority, joining on the bucket
-    * key — plans with no Exchange on either side. */
-  def colocatedRevenue(spark: SparkSession): DataFrame =
-    spark.table("orders_b")
-      .join(spark.table("lineitem_b"),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy("o_orderpriority")
-      .agg(
-        sum((col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(BigDecimal(1)).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-          .cast("decimal(18,4)")).cast("decimal(38,4)").as("revenue"),
-        count(lit(1)).as("n_items"))
-      .orderBy("o_orderpriority")
 }

@@ -16,8 +16,8 @@ import org.apache.spark.sql.types._
   * 1. [[DynamicSemiJoinPrune]] — runtime scan-domain narrowing for selective
   *    semi joins / IN subqueries / fact⋈dim equi-joins: the Spark-side
   *    analogue of the reference's planning-time TupleDomain narrowing
-  *    (SPI/predicate/TupleDomain.java:43 +
-  *    MAIN/sql/planner/iterative/rule/PickTableLayout.java) and its
+  *    (SPI/predicate/TupleDomain.java:43, applied through the table-layout
+  *    request of SPI ConnectorMetadata.getTableLayouts) and its
   *    equality-class predicate propagation
   *    (MAIN/sql/planner/optimizations/PredicatePushDown.java:91,
   *    EqualityInference.java).
@@ -66,7 +66,7 @@ object GraftOptimizations {
     * plus its leaf relations' (paths, schema, bytes), so it is safe to
     * share across sessions and invalidates itself when the data changes —
     * the same per-table-layout caching the reference does in its metadata
-    * path (MAIN/sql/planner/iterative/rule/PickTableLayout.java). */
+    * path (SPI ConnectorMetadata.getTableLayouts). */
   private[plans] val probeMemo: java.util.Map[(LogicalPlan, Seq[String], BigInt, Int), ProbeDecision] =
     java.util.Collections.synchronizedMap(
       // access-ordered LRU, size-bounded: a hot dashboard query's probe
@@ -157,8 +157,8 @@ class DynamicSemiJoinPrune(spark: SparkSession)
     * every freshly-built DataFrame of the same query re-paid the probe at
     * planning time (the round-8 h02 soak regression: n bench iterations =
     * n probes). The reference caches this class of work per table layout in
-    * the metadata path (MAIN/sql/planner/iterative/rule/PickTableLayout
-    * .java); here the layout identity is (root paths, data schema, byte
+    * the metadata path (SPI ConnectorMetadata.getTableLayouts); here the
+    * layout identity is (root paths, data schema, byte
     * size) — extracted per leaf relation, with the relations themselves
     * replaced by `LocalRelation` skeletons so the rest of the canonicalized
     * plan (filters, projections) compares structurally. */

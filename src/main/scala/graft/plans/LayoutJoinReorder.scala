@@ -16,7 +16,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * with NO exchange. The reference reorders joins from a cost model over its
   * join graph (MAIN/sql/planner/iterative/rule/EliminateCrossJoins.java over
   * optimizations/joins/JoinGraph.java + MAIN/cost/CostComparator.java) and
-  * picks per-table layouts to match (iterative/rule/PickTableLayout.java).
+  * picks per-table layouts to match (SPI ConnectorMetadata.getTableLayouts).
   * This rule does the layout-driven part of that: flatten an inner-join
   * chain to its join graph, and when some edge of the graph is served
   * EXCHANGE-FREE by persisted bucketed layouts (both sides bucketed on the

@@ -12,10 +12,12 @@ import graft.operators.Bucketing
   *   orders:o_orderkey lineitem:l_orderkey
   *
   * Benchmarks then opt in with
-  * SPARK_GRAFT_CONF="spark.graft.bucketedDir=<layoutDir>" — Tables serves
-  * the bucketed catalog tables and keyed joins/aggregates plan with no
-  * exchange (operators/Bucketing.scala; the reference's grouped execution,
-  * presto-hive HiveBucketing.java).
+  * SPARK_GRAFT_CONF="spark.graft.bucketedDir=<layoutDir>" (one directory:
+  * each table has at most one layout) — Tables serves the bucketed catalog
+  * tables, their scans report the within-bucket sort order, and keyed
+  * joins/aggregates plan with no exchange (operators/Bucketing.scala; the
+  * reference's grouped execution, presto-hive HiveBucketing.java).
+  * `tools/gate.sh <out> layout` runs the oracle over such a layout.
   */
 object Bucketize {
   def main(args: Array[String]): Unit = {

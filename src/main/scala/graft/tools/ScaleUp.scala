@@ -35,7 +35,7 @@ object ScaleUp {
     val factor = if (args.length > 2) args(2).toInt else 10
     val files = if (args.length > 3) args(3).toInt else 32
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
+      .master(s"local[${graft.GraftSession.boxCpus}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

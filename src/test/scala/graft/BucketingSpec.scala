@@ -10,6 +10,25 @@ class BucketingSpec extends AnyFunSuite {
   import TestSession._
   import operators.Bucketing
 
+  /** orders and lineitem persisted on orderkey (4 buckets), served through
+    * the `spark.graft.bucketedDir` redirect for the duration of `f`. */
+  private def withOrderkeyLayout[T](f: => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-colocated").toString
+    Bucketing.persistBucketed(spark,
+      Tables.t(spark, sf, "orders"), dir, "orders", "o_orderkey", 4)
+    Bucketing.persistBucketed(spark,
+      Tables.t(spark, sf, "lineitem"), dir, "lineitem", "l_orderkey", 4)
+    try {
+      spark.conf.set("spark.graft.bucketedDir", dir)
+      f
+    } finally {
+      spark.conf.unset("spark.graft.bucketedDir")
+      spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
+      spark.sql("DROP TABLE IF EXISTS graft_bucketed_orders")
+      spark.sql("DROP TABLE IF EXISTS graft_bucketed_lineitem")
+    }
+  }
+
   test("co-located bucketed join is shuffle-free below the aggregation") {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -17,13 +36,14 @@ class BucketingSpec extends AnyFunSuite {
       // force a non-broadcast join so the bucket path is what's planned
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      Bucketing.stageOrdersLineitem(spark, sf)
-      val joined = spark.table("orders_b")
-        .join(spark.table("lineitem_b"), col("o_orderkey") === col("l_orderkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan.take(500))
-      assert(!plan.contains("Exchange"), "bucketed join must not shuffle:\n" +
-        plan.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
+      withOrderkeyLayout {
+        val joined = Tables.t(spark, sf, "orders")
+          .join(Tables.t(spark, sf, "lineitem"), col("o_orderkey") === col("l_orderkey"))
+        val plan = joined.queryExecution.executedPlan.toString
+        assert(plan.contains("SortMergeJoin"), plan.take(500))
+        assert(!plan.contains("Exchange"), "bucketed join must not shuffle:\n" +
+          plan.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
+      }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
@@ -31,10 +51,14 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("bucketed join result equals unbucketed join result") {
-    Bucketing.stageOrdersLineitem(spark, sf)
-    val bucketed = Bucketing.colocatedRevenue(spark).collect()
-    val plain = SparkEntry.all("q20_join_inner").fn(spark, sf).collect()
-    assert(bucketed.sameElements(plain))
+    val q20 = SparkEntry.all("q20_join_inner")
+    val plain = q20.fn(spark, sf).collect()
+    val bucketed = withOrderkeyLayout {
+      val df = q20.fn(spark, sf)
+      assert(df.queryExecution.logical.toString.contains("graft_bucketed_lineitem"))
+      df.collect()
+    }
+    assert(plain.nonEmpty && bucketed.sameElements(plain))
   }
 
   test("Presto CTAS WITH (bucketed_by, bucket_count) creates an " +
@@ -113,6 +137,7 @@ class BucketingSpec extends AnyFunSuite {
       assert(bucketed.sameElements(plain))
     } finally {
       spark.conf.unset("spark.graft.bucketedDir")
+      spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       // registered catalog tables are session-global — drop so other
@@ -125,45 +150,76 @@ class BucketingSpec extends AnyFunSuite {
 
   test("opt-in sorted-bucket scan: the SMJ Sorts above a bucketed join " +
       "vanish (one sorted file per bucket makes the legacy conf sound)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bucketsorted").toString
-    Bucketing.persistBucketed(spark,
-      Tables.t(spark, sf, "orders"), dir, "orders", "o_orderkey", 4)
-    Bucketing.persistBucketed(spark,
-      Tables.t(spark, sf, "lineitem"), dir, "lineitem", "l_orderkey", 4)
+    // the name predates the default: serving a layout turns the sorted scan on
     val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       spark.conf.set("spark.sql.shuffle.partitions", "4")
-      spark.conf.set("spark.graft.bucketedDir", dir)
-      spark.conf.set("spark.graft.bucketedSortedScan", "true")
-      val q = Tables.t(spark, sf, "orders")
-        .join(Tables.t(spark, sf, "lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_orderkey"), col("l_quantity"))
-      val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan.take(400))
-      assert(!plan.contains("Exchange"), plan.take(800))
-      assert(!plan.contains("Sort ["),
-        "sorted-bucket scan must eliminate the SMJ Sorts:\n" +
-          plan.linesIterator.filter(_.contains("Sort")).mkString("\n"))
-      // results identical to the flat path
-      spark.conf.unset("spark.graft.bucketedDir")
       val expect = Tables.t(spark, sf, "orders")
         .join(Tables.t(spark, sf, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
         .count()
-      assert(q.count() == expect)
+      withOrderkeyLayout {
+        val q = Tables.t(spark, sf, "orders")
+          .join(Tables.t(spark, sf, "lineitem"),
+            col("o_orderkey") === col("l_orderkey"))
+          .select(col("o_orderkey"), col("l_quantity"))
+        val plan = q.queryExecution.executedPlan.toString
+        assert(plan.contains("SortMergeJoin"), plan.take(400))
+        assert(!plan.contains("Exchange"), plan.take(800))
+        assert(!plan.contains("Sort ["),
+          "sorted-bucket scan must eliminate the SMJ Sorts:\n" +
+            plan.linesIterator.filter(_.contains("Sort")).mkString("\n"))
+        // results identical to the flat path
+        assert(q.count() == expect)
+      }
     } finally {
-      spark.conf.unset("spark.graft.bucketedDir")
-      spark.conf.unset("spark.graft.bucketedSortedScan")
-      spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
       spark.conf.set("spark.sql.shuffle.partitions", "32")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.sql("DROP TABLE IF EXISTS graft_bucketed_orders")
-      spark.sql("DROP TABLE IF EXISTS graft_bucketed_lineitem")
+    }
+  }
+
+  test("Spark guard: a bucket with two files reports no scan ordering, so " +
+      "the SMJ Sorts stay under the legacy ordering setting") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-twofiles").toString
+    // two write tasks, each holding rows of every bucket: two files per bucket
+    spark.sql("DROP TABLE IF EXISTS graft_two_file_buckets")
+    spark.range(0, 2000, 1, 2).withColumn("v", col("id") % 7)
+      .write.bucketBy(2, "id").sortBy("id")
+      .option("path", dir).format("parquet")
+      .saveAsTable("graft_two_file_buckets")
+    val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      val files = new java.io.File(dir).listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet"))
+      val perBucket = files.groupBy(n => n.substring(n.lastIndexOf('_') + 1))
+      assert(perBucket.size == 2 && perBucket.values.forall(_.length >= 2),
+        files.mkString(", "))
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+      val t = spark.table("graft_two_file_buckets")
+      val q = t.as("a").join(t.as("b"), col("a.id") === col("b.id"))
+      val plan = q.queryExecution.executedPlan
+      val scans = plan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+      assert(scans.nonEmpty && scans.forall(_.outputOrdering.isEmpty),
+        scans.map(s => s.outputOrdering.toString).mkString("; "))
+      assert(plan.toString.contains("SortMergeJoin"), plan.toString.take(400))
+      assert(!plan.toString.contains("Exchange"), plan.toString.take(800))
+      assert(plan.collect { case s: org.apache.spark.sql.execution.SortExec => s }
+        .length == 2, plan.toString)
+      assert(q.count() == 2000)
+    } finally {
+      spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.sql("DROP TABLE IF EXISTS graft_two_file_buckets")
     }
   }
 
@@ -176,6 +232,9 @@ class BucketingSpec extends AnyFunSuite {
       "o_orderkey", 2)
     Bucketing.persistBucketed(spark, orders.limit(300), dirB, "orders",
       "o_orderkey", 2)
+    // markers written by older versions carry rows=/xor= lines; they load
+    java.nio.file.Files.write(java.nio.file.Paths.get(dirB, "orders_b", "_graft_bucketspec"),
+      "rows=300\nxor=12345\n".getBytes("UTF-8"), java.nio.file.StandardOpenOption.APPEND)
     try {
       spark.conf.set("spark.graft.bucketedDir", dirA)
       assert(Tables.t(spark, sf, "orders").count() == 100)
@@ -183,42 +242,13 @@ class BucketingSpec extends AnyFunSuite {
       assert(Tables.t(spark, sf, "orders").count() == 300)
       spark.conf.set("spark.graft.bucketedDir", dirA)
       assert(Tables.t(spark, sf, "orders").count() == 100)
+      // one directory only: a list is refused, not silently served flat
+      spark.conf.set("spark.graft.bucketedDir", s"$dirA;$dirB")
+      intercept[IllegalArgumentException](Tables.t(spark, sf, "orders"))
     } finally {
       spark.conf.unset("spark.graft.bucketedDir")
+      spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
       spark.sql("DROP TABLE IF EXISTS graft_bucketed_orders")
-    }
-  }
-
-  test("sibling with equal row count but different CONTENT is refused; " +
-      "same rows in a different physical order are accepted (xor hash " +
-      "is order-independent)") {
-    val dirA = java.nio.file.Files.createTempDirectory("graft-fpA").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft-fpB").toString
-    val dirC = java.nio.file.Files.createTempDirectory("graft-fpC").toString
-    val base = Tables.t(spark, sf, "lineitem").where("l_orderkey < 500")
-    // same row COUNT, different content (every returnflag perturbed)
-    val perturbed = base.withColumn("l_returnflag",
-      concat(col("l_returnflag"), lit("X")))
-    Bucketing.persistBucketed(spark, base, dirA, "lineitem", "l_orderkey", 2)
-    Bucketing.persistBucketed(spark, perturbed, dirB, "lineitem", "l_partkey", 2)
-    // same rows as A, DIFFERENT bucket key and sort order
-    Bucketing.persistBucketed(spark, base, dirC, "lineitem", "l_partkey", 2)
-    def loc(d: String) = java.nio.file.Paths.get(s"$d/lineitem_b")
-      .toAbsolutePath.toString
-    try {
-      spark.conf.set("spark.graft.bucketedDir", s"$dirA,$dirB")
-      Tables.t(spark, sf, "lineitem") // triggers redirect + registration
-      assert(Bucketing.layoutAt(spark, loc(dirA)).isDefined)
-      assert(Bucketing.layoutAt(spark, loc(dirB)).isEmpty,
-        "equal-count/different-content sibling must be refused")
-      spark.conf.set("spark.graft.bucketedDir", s"$dirA,$dirC")
-      Tables.t(spark, sf, "lineitem")
-      assert(Bucketing.layoutAt(spark, loc(dirC)).isDefined,
-        "same rows in a different physical order must be accepted")
-    } finally {
-      spark.conf.unset("spark.graft.bucketedDir")
-      Seq("lineitem", "lineitem_l1")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_bucketed_$t"))
     }
   }
 
@@ -237,7 +267,6 @@ class BucketingSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     try {
       spark.conf.set("spark.graft.bucketedDir", dir)
-      spark.conf.set("spark.graft.bucketedSortedScan", "true")
       val q = agg(Tables.t(spark, sf, "lineitem"))
       q.collect()
       val plan = q.queryExecution.executedPlan.toString
@@ -249,7 +278,6 @@ class BucketingSpec extends AnyFunSuite {
       assert(got == plain)
     } finally {
       spark.conf.unset("spark.graft.bucketedDir")
-      spark.conf.unset("spark.graft.bucketedSortedScan")
       spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
       spark.sql("DROP TABLE IF EXISTS graft_bucketed_lineitem")
     }

@@ -62,6 +62,7 @@ class LayoutJoinReorderSpec extends AnyFunSuite {
       f(dir)
     } finally {
       spark.conf.unset("spark.graft.bucketedDir")
+      spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
       Tables.registerAll(spark, sf)
       spark.sql("DROP TABLE IF EXISTS graft_bucketed_orders")
       spark.sql("DROP TABLE IF EXISTS graft_bucketed_lineitem")

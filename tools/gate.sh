@@ -2,27 +2,39 @@
 # Correctness gate: run every oracled query through graft.Verify at sf0.01
 # and compare each result with the DuckDB oracle (tools/driver_check.py).
 #
-# Usage: tools/gate.sh <out_dir> [flat|off]
-#   flat  the shipped defaults (default)
-#   off   every graft optimizer rule disabled — a differential that shows
-#         each rewrite leaves results unchanged
+# Usage: tools/gate.sh <out_dir> [flat|off|layout]
+#   flat    the shipped defaults (default)
+#   off     every graft optimizer rule disabled — a differential that shows
+#           each rewrite leaves results unchanged
+#   layout  the shipped defaults over a bucketed layout: orders and lineitem
+#           persisted on orderkey into 8 buckets (tools.Bucketize, in a
+#           temporary directory removed on exit) and served through
+#           spark.graft.bucketedDir
 # Writes <out_dir>/verify.log and <out_dir>/check.txt; exits non-zero when
 # any query fails the oracle check.
 set -u
-OUT=${1:?usage: tools/gate.sh <out_dir> [flat|off]}
+OUT=${1:?usage: tools/gate.sh <out_dir> [flat|off|layout]}
 POSTURE=${2:-flat}
 SF=/root/testdata/sf0.01
 cd "$(dirname "$0")/.."
+mkdir -p "$OUT"
 
 case "$POSTURE" in
   flat) unset SPARK_GRAFT_CONF ;;
   off)
-    export SPARK_GRAFT_CONF="spark.graft.eagerAgg=false,spark.graft.dynamicFilter.enabled=false,spark.graft.dynamicFilter.longSet=false,spark.graft.scaledLongSum=false,spark.graft.cascadeGroupingSets=false,spark.graft.fuseScalarAggs=false,spark.graft.dynamicFrameJoin=false,spark.graft.singleStageAgg=false,spark.graft.sortSharedAgg=false,spark.graft.streamingSortedAgg=false,spark.graft.streamingSortedAgg.hybrid=false,spark.graft.joinReorder=false,spark.graft.layoutPick=false"
+    export SPARK_GRAFT_CONF="spark.graft.eagerAgg=false,spark.graft.dynamicFilter.enabled=false,spark.graft.dynamicFilter.longSet=false,spark.graft.scaledLongSum=false,spark.graft.cascadeGroupingSets=false,spark.graft.fuseScalarAggs=false,spark.graft.dynamicFrameJoin=false,spark.graft.singleStageAgg=false,spark.graft.sortSharedAgg=false,spark.graft.streamingSortedAgg=false,spark.graft.streamingSortedAgg.hybrid=false,spark.graft.joinReorder=false"
     ;;
-  *) echo "unknown posture: $POSTURE (flat|off)" >&2; exit 2 ;;
+  layout)
+    unset SPARK_GRAFT_CONF
+    LAYOUT=$(mktemp -d "${TMPDIR:-/tmp}/graft-gate-layout.XXXXXX")
+    trap 'rm -rf "$LAYOUT"' EXIT
+    tools/run.sh graft.tools.Bucketize "$SF" "$LAYOUT" 8 > "$OUT/bucketize.log" 2>&1 || {
+      echo "Bucketize failed: see $OUT/bucketize.log" >&2; exit 2; }
+    export SPARK_GRAFT_CONF="spark.graft.bucketedDir=$LAYOUT"
+    ;;
+  *) echo "unknown posture: $POSTURE (flat|off|layout)" >&2; exit 2 ;;
 esac
 
-mkdir -p "$OUT"
 tools/run.sh graft.Verify "$SF" "$OUT/results" > "$OUT/verify.log" 2>&1
 python3 tools/driver_check.py "$SF" "$OUT/results" > "$OUT/check.txt" 2>&1
 status=$?
