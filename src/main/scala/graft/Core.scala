@@ -188,8 +188,17 @@ object GraftSession {
     "spark.ui.enabled" -> "false") ++
     localExchangeConf ++
     // ad-hoc config sweeps for tools (Explain/Bench A/B): "k=v,k=v"
-    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(",")).map { kv =>
-      val Array(k, v) = kv.split("=", 2); k -> v
+    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(parseConfList)
+
+  /** `SPARK_GRAFT_CONF`'s "k=v,k=v" list: empty entries are skipped, an
+    * entry without `=` (or with an empty key) is rejected by name. */
+  def parseConfList(s: String): Seq[(String, String)] =
+    s.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entry '$kv' is not of the form key=value")
+      }
     }
 
   /** This box's core count for the tools' sessions: `SPARK_GRAFT_CPUS`,

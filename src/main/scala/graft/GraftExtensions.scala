@@ -70,6 +70,11 @@ class GraftPlannerExtensions extends (SparkSessionExtensions => Unit) {
     // multiply the key array into the task binary (round-16 h02 path)
     ext.injectQueryStagePrepRule(session =>
       new plans.UnboxedInProbe(session))
+    // a global sort whose input AQE coalesces to one partition sorts in
+    // that task: no range exchange, no sampling job (the reference's
+    // single-node OrderByOperator)
+    ext.injectQueryStagePrepRule(session =>
+      new plans.SingleTaskSort(session))
   }
 }
 

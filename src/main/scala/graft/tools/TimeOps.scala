@@ -1,6 +1,7 @@
 package graft.tools
 import graft._
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Full-evaluation timing of named entries at a fixture:
   *   TimeOps <sfDir> [runs=3] <name>...
@@ -12,7 +13,9 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * compiled-code cache did not hold) of the warm-up and of all measured
   * runs. A name listed again runs again in this JVM and reports under
   * `<name>#<k>` for its k-th listing: its `warmup_compiles` then shows
-  * whether the earlier passes' classes stayed cached. */
+  * whether the earlier passes' classes stayed cached. `measured_jobs` is
+  * the Spark jobs per measured run, counted by job group once `stop()` has
+  * drained the listener bus. */
 object TimeOps {
   def main(a: Array[String]): Unit = {
     val d = a(0)
@@ -23,6 +26,12 @@ object TimeOps {
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val load0 = os.getSystemLoadAverage
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    s.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    })
     def time(n: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.all(n).fn(s, d).write.format("noop").mode("overwrite").save()
@@ -30,19 +39,26 @@ object TimeOps {
     }
     val results = names.zipWithIndex.map { case (n, i) =>
       val k = names.take(i + 1).count(_ == n)
+      val label = if (k == 1) n else s"$n#$k"
       val c0 = compiles
       time(n) // warm-up
       val c1 = compiles
+      s.sparkContext.setJobGroup(label, label, interruptOnCancel = false)
       val ts = Seq.fill(runs)(time(n))
-      (if (k == 1) n else s"$n#$k", ts, c1 - c0, compiles - c1)
+      s.sparkContext.clearJobGroup()
+      (label, ts, c1 - c0, compiles - c1)
     }
+    val load1 = os.getSystemLoadAverage
+    s.stop() // drains the listener bus: every job start is counted
+    def jobsPerRun(label: String): Double =
+      jobs.getOrDefault(label, 0).toDouble / runs
     println(s"""{"sf":"$d","cpus":${GraftSession.boxCpus},"runs":$runs,""" +
-      f""""loadavg_start":$load0%.2f,"loadavg_end":${os.getSystemLoadAverage}%.2f,"queries":{""" +
+      f""""loadavg_start":$load0%.2f,"loadavg_end":$load1%.2f,"queries":{""" +
       results.map { case (n, ts, warm, measured) =>
         f""""$n":{"median_s":${ABInterleave.median(ts)}%.3f,"runs_s":""" +
           ts.map(t => f"$t%.3f").mkString("[", ",", "]") +
-          s""","warmup_compiles":$warm,"measured_compiles":$measured}"""
+          f""","warmup_compiles":$warm,"measured_compiles":$measured,""" +
+          f""""measured_jobs":${jobsPerRun(n)}%.1f}"""
       }.mkString(",") + "}}")
-    s.stop()
   }
 }

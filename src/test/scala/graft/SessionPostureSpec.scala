@@ -34,4 +34,13 @@ class SessionPostureSpec extends AnyFunSuite {
     }
     assert(applied == expected)
   }
+
+  test("SPARK_GRAFT_CONF parsing skips empty entries and names a malformed one") {
+    assert(GraftSession.parseConfList("").isEmpty)
+    assert(GraftSession.parseConfList(",a=1,, b=x=y ,") == Seq("a" -> "1", "b" -> "x=y"))
+    val e = intercept[IllegalArgumentException](
+      GraftSession.parseConfList("a=1,spark.graft.eagerAgg"))
+    assert(e.getMessage.contains("'spark.graft.eagerAgg'"), e.getMessage)
+    intercept[IllegalArgumentException](GraftSession.parseConfList("=1"))
+  }
 }
