@@ -32,12 +32,10 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   *  3. Spark's own `CoalesceShufflePartitions`, applied to `c` with the
   *     session's settings, reduces every shuffle read in `c` to one
   *     partition — so no operator loses parallelism AQE would have given
-  *     it, and there is no size knob of graft's own.
-  * Disable with `spark.graft.singleTaskSort=false`. */
+  *     it, and there is no size knob of graft's own. Where Spark would
+  *     keep more than one partition (or does not coalesce at all), the
+  *     rule does not fire and the stock range sort runs. */
 class SingleTaskSort(spark: SparkSession) extends Rule[SparkPlan] {
-
-  private def enabled: Boolean =
-    spark.conf.getOption(SingleTaskSort.KEY).forall(_.toBoolean)
 
   /** Conditions 1 and 2: operators that never add rows, down to
     * materialized shuffle stages. */
@@ -62,17 +60,10 @@ class SingleTaskSort(spark: SparkSession) extends Rule[SparkPlan] {
     neverAddsRows(c) &&
       readPartitions(CoalesceShufflePartitions(spark)(c)).forall(_ <= 1)
 
-  override def apply(plan: SparkPlan): SparkPlan = {
-    if (!enabled) return plan
-    plan.transformUp {
-      case s @ SortExec(_, true,
-          ShuffleExchangeExec(_: RangePartitioning, c, ENSURE_REQUIREMENTS, _), _)
-          if fitsOneTask(c) =>
-        s.copy(child = CoalesceExec(1, c))
-    }
+  override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
+    case s @ SortExec(_, true,
+        ShuffleExchangeExec(_: RangePartitioning, c, ENSURE_REQUIREMENTS, _), _)
+        if fitsOneTask(c) =>
+      s.copy(child = CoalesceExec(1, c))
   }
-}
-
-object SingleTaskSort {
-  val KEY = "spark.graft.singleTaskSort"
 }

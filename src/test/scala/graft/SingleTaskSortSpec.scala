@@ -16,7 +16,8 @@ class SingleTaskSortSpec extends AnyFunSuite {
 
   // the sf0.01 fixture, next to TestSession's sf0.001
   private val sf01 = java.nio.file.Paths.get(TestSession.sf).resolveSibling("sf0.01").toString
-  private val KEY = plans.SingleTaskSort.KEY
+  // the range-sort baseline: with AQE's coalescing off the rule never fires
+  private val NO_COALESCE = "spark.sql.adaptive.coalescePartitions.enabled" -> "false"
 
   private def withConfs[T](kvs: (String, String)*)(f: => T): T = {
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -52,20 +53,18 @@ class SingleTaskSortSpec extends AnyFunSuite {
   private def entry(name: String): DataFrame = SparkEntry.all(name).fn(spark, sf01)
 
   for (name <- Seq("q01_tpch_q1", "q30_win_rank", "q46_rollup", "h05_local_supplier"))
-    test(s"$name: the ORDER BY sorts behind Coalesce(1) with no range exchange, same rows as off") {
+    test(s"$name: the ORDER BY sorts behind Coalesce(1) with no range exchange, same rows as the range sort") {
       assert(shape(entry(name)) == (true, false))
-      val on = entry(name).collect().toSeq
-      val off = withConfs(KEY -> "false") {
+      val single = entry(name).collect().toSeq
+      val range = withConfs(NO_COALESCE) {
         assert(shape(entry(name)) == (false, true))
         entry(name).collect().toSeq
       }
-      assert(on.nonEmpty && on == off)
+      assert(single.nonEmpty && single == range)
     }
 
   test("no fire when AQE keeps more than one partition: the range exchange stays") {
-    withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
-      assert(shape(entry("q30_win_rank")) == (false, true))
-    }
+    withConfs(NO_COALESCE)(assert(shape(entry("q30_win_rank")) == (false, true)))
     withConfs(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1",
         "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1") {
@@ -91,6 +90,6 @@ class SingleTaskSortSpec extends AnyFunSuite {
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("n"))
       .orderBy(col("o_custkey"))
     assert(df.collect().isEmpty)
-    withConfs(KEY -> "false")(assert(df.collect().isEmpty))
+    withConfs(NO_COALESCE)(assert(df.collect().isEmpty))
   }
 }

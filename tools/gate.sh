@@ -4,8 +4,9 @@
 #
 # Usage: tools/gate.sh <out_dir> [flat|off|layout]
 #   flat    the shipped defaults (default)
-#   off     every graft optimizer rule disabled — a differential that shows
-#           each rewrite leaves results unchanged
+#   off     every graft optimizer rule switch off — a differential that shows
+#           each rewrite leaves results unchanged (plans.SingleTaskSort has
+#           no switch: SingleTaskSortSpec compares it with the range sort)
 #   layout  the shipped defaults over a bucketed layout: orders and lineitem
 #           persisted on orderkey into 8 buckets (tools.Bucketize, in a
 #           temporary directory removed on exit) and served through
@@ -22,7 +23,7 @@ mkdir -p "$OUT"
 case "$POSTURE" in
   flat) unset SPARK_GRAFT_CONF ;;
   off)
-    export SPARK_GRAFT_CONF="spark.graft.eagerAgg=false,spark.graft.dynamicFilter.enabled=false,spark.graft.dynamicFilter.longSet=false,spark.graft.scaledLongSum=false,spark.graft.cascadeGroupingSets=false,spark.graft.fuseScalarAggs=false,spark.graft.dynamicFrameJoin=false,spark.graft.singleStageAgg=false,spark.graft.sortSharedAgg=false,spark.graft.streamingSortedAgg=false,spark.graft.streamingSortedAgg.hybrid=false,spark.graft.joinReorder=false,spark.graft.singleTaskSort=false"
+    export SPARK_GRAFT_CONF="spark.graft.eagerAgg=false,spark.graft.dynamicFilter.enabled=false,spark.graft.dynamicFilter.longSet=false,spark.graft.scaledLongSum=false,spark.graft.cascadeGroupingSets=false,spark.graft.fuseScalarAggs=false,spark.graft.dynamicFrameJoin=false,spark.graft.singleStageAgg=false,spark.graft.sortSharedAgg=false,spark.graft.streamingSortedAgg=false,spark.graft.streamingSortedAgg.hybrid=false,spark.graft.joinReorder=false"
     ;;
   layout)
     unset SPARK_GRAFT_CONF
