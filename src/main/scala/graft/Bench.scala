@@ -11,11 +11,10 @@ import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // the shared local posture (partitioned hash join, 4 MB broadcast
-    // cutoff, tmpfs exchange, SPARK_GRAFT_CONF sweeps) — the same session
-    // graft.Verify checks results on
-    val spark = GraftSession.local(cpus)
+    // cutoff, tmpfs exchange, SPARK_GRAFT_CONF sweeps) — the same session,
+    // at the same core count, graft.Verify checks results on
+    val spark = GraftSession.local(GraftSession.boxCpus)
 
     def time(fn: => Unit): Double = {
       val t0 = System.nanoTime(); fn; (System.nanoTime() - t0) / 1e9
@@ -46,7 +45,8 @@ object Bench {
     // loadavg_start: the 1-min load BEFORE the suite ran (co-tenant noise
     // indicator — this box bursts to load-avg ~25; numbers recorded above
     // ~5 understate nothing on the Spark side but a reader should prefer a
-    // quiet-window re-run). loadavg_end includes our own 32-thread burst.
+    // quiet-window re-run). loadavg_end includes the suite's own load, one
+    // task thread per core.
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","loadavg_start":$loadStart%.2f,"loadavg_end":${os.getSystemLoadAverage}%.2f,"ts":"${java.time.Instant.now}"}""")
     spark.stop()
   }

@@ -201,8 +201,8 @@ object GraftSession {
       }
     }
 
-  /** This box's core count for the tools' sessions: `SPARK_GRAFT_CPUS`,
-    * else the JVM's available processors. */
+  /** This box's core count for `Bench`'s, `Verify`'s and the tools'
+    * sessions: `SPARK_GRAFT_CPUS`, else the JVM's available processors. */
   def boxCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 

@@ -39,14 +39,6 @@ class GraftPlannerExtensions extends (SparkSessionExtensions => Unit) {
     // the finest level once and re-aggregate coarser levels from it,
     // replacing the ×|sets| Expand row blowup
     ext.injectOptimizerRule(session => new plans.CascadeGroupingSets(session))
-    // layout-aware inner-join reordering: when a persisted co-bucketed
-    // layout serves some join edge exchange-free but the textual order
-    // executes a different join first, rebuild the chain layout-edge-first
-    // (the reference's join-graph reorder, done for the layout-driven
-    // case). Registered LAST: it must see the shape AFTER the structural
-    // rewrites above (EagerAggregationReuse in particular — reordering
-    // first was measured to break its h18 pattern match)
-    ext.injectOptimizerRule(session => new plans.LayoutJoinReorder(session))
     // an adjacent partial+final aggregate pair (child already partitioned
     // on the group keys) collapses to one complete-mode pass — runs as an
     // AQE stage-prep rule so it sees the post-replanning physical plan

@@ -30,7 +30,7 @@ object Verify {
     // plans graft.Bench times, including the q64_dynfilter_* entries'
     // dynamic-filter tiers (they lower the scale-sized fact floor on an
     // isolated child session)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = GraftSession.local(GraftSession.boxCpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

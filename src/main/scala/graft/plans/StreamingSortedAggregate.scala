@@ -404,9 +404,6 @@ class StreamingSortedAggregate(spark: SparkSession) extends Rule[SparkPlan] {
   private def enabled: Boolean =
     spark.conf.getOption(StreamingSortedAggregate.KEY).forall(_.toBoolean)
 
-  private def hybridEnabled: Boolean =
-    spark.conf.getOption(StreamingSortedAggregate.HYBRID_KEY).forall(_.toBoolean)
-
   private def supportedType(dt: DataType): Boolean = dt match {
     case StringType | BinaryType => true
     case _: DecimalType => true
@@ -450,8 +447,8 @@ class StreamingSortedAggregate(spark: SparkSession) extends Rule[SparkPlan] {
     // place — so the streamed side's arrival order survives even though
     // ShuffledHashJoinExec reports no outputOrdering at all. Matters when
     // AQE re-plans an SMJ over a sorted layout scan into an SHJ
-    // (maxShuffledHashJoinLocalMapThreshold): the streaming/hybrid
-    // aggregate above must keep firing.
+    // (maxShuffledHashJoinLocalMapThreshold): the streaming aggregate
+    // above must keep firing.
     case shj: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
         if {
           val streamedLeft = shj.buildSide ==
@@ -475,7 +472,7 @@ class StreamingSortedAggregate(spark: SparkSession) extends Rule[SparkPlan] {
       // the partner key — publish the equivalence the same way
       // SortMergeJoinExec's own getKeyOrdering does (q22 groups by
       // o_orderkey while the layout order is l_orderkey; without this
-      // the hybrid aggregate stops firing when AQE re-plans SMJ→SHJ).
+      // the streaming aggregate stops firing when AQE re-plans SMJ→SHJ).
       // NOT for left-outer: padded rows carry a NULL partner key, so the
       // equivalence (and run contiguity on the partner key) breaks.
       if (shj.joinType == org.apache.spark.sql.catalyst.plans.Inner) {
@@ -575,92 +572,8 @@ class StreamingSortedAggregate(spark: SparkSession) extends Rule[SparkPlan] {
           agg.resultExpressions,
           ordering,
           agg.child)
-      case None if hybridEnabled => rewriteHybrid(agg)
       case None => agg
     }
-
-  // ── strict-prefix hybrid (round-13 verdict ask #4): grouping keys that
-  // EXTEND the child's sort prefix run through RunHashAggregateExec — a
-  // bounded per-run hash flushed at prefix-run boundaries, serving plain
-  // single-key-sorted layouts without the extended-sort rewrite (the
-  // reference's segmented/pre-grouped aggregation path). ──
-
-  /** In-place-updatable buffer types for the run map's UnsafeRow buffers. */
-  private def fixedWidth(dt: DataType): Boolean = dt match {
-    case d: DecimalType => d.precision <= Decimal.MAX_LONG_DIGITS
-    case _ => CodeGenerator.isPrimitiveType(dt)
-  }
-
-  /** The longest effective-ordering prefix made of (distinct) grouping
-    * keys that does NOT cover the whole grouping set. Returns the ordering
-    * prefix and the matching grouping expressions. */
-  private def strictPrefix(agg: BaseAggregateExec)
-      : Option[(Seq[SortOrder], Seq[NamedExpression])] = {
-    val byId = agg.groupingExpressions.flatMap(g =>
-      underlying(g).map(_.exprId -> g)).toMap
-    if (byId.size != agg.groupingExpressions.length) return None
-    // a position may match its grouping key through a recorded same-order
-    // equivalence (inner-join key equality: layout order on l_orderkey
-    // covers a GROUP BY o_orderkey)
-    val seen = scala.collection.mutable.Set.empty[ExprId]
-    val pairs = effectiveOrdering(agg.child).iterator.map { so =>
-      val m = orderIds(so).find(id => byId.contains(id) && !seen.contains(id))
-      m.foreach(seen.add)
-      (so, m)
-    }.takeWhile(_._2.isDefined).toSeq
-    val prefix = pairs.map(_._1)
-    if (prefix.isEmpty || prefix.length >= agg.groupingExpressions.length)
-      None
-    else Some((prefix, pairs.map(p => byId(p._2.get))))
-  }
-
-  private def rewriteHybrid(agg: BaseAggregateExec): SparkPlan = {
-    // Partial mode only: its run map is capped at maxRunRows (a mid-run
-    // flush just emits a duplicate partial group the final merge folds).
-    // The Complete-mode leg had no such escape and measured a loss at sf30
-    // (q22 4.85 s vs 2.79 s) and a wash at sf100
-    // (bench/AB_sf{30,100}_q22_hybrid_equiv.json).
-    if (!agg.aggregateExpressions.headOption.exists(_.mode == Partial))
-      return agg
-    val bufferOk = agg.aggregateExpressions
-      .flatMap(_.aggregateFunction.aggBufferAttributes)
-      .forall(b => fixedWidth(b.dataType))
-    if (!bufferOk) return agg
-    // Size floor (the DSJP factMinBytes pattern): at small scale the
-    // per-row run-map lookup costs more than the tiny hash table it
-    // replaces — measured at the sf0.1 flat bench, where the hybrid
-    // fired on SMJ-shuffled groupings and cost +0.2 s per sub-second
-    // query. The win regime is big sorted inputs whose global hash
-    // would thrash (q22/h21 over sf30+ layouts). Leaf scan bytes via
-    // the logical link — the same input-size notion the probe rule
-    // uses; an unresolvable link conservatively keeps the hash agg.
-    // A malformed conf value falls back to the 64 MB default (the same
-    // defensive read as Bucketing's conf parsing).
-    val floor = spark.conf
-      .getOption(StreamingSortedAggregate.HYBRID_MIN_KEY)
-      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(64L << 20)
-    if (floor > 0) {
-      val leafBytes = agg.child.logicalLink
-        .map(_.collectLeaves().map(_.stats.sizeInBytes).sum)
-        .getOrElse(BigInt(0))
-      if (leafBytes < floor) return agg
-    }
-    val maxRunRows = spark.conf
-      .getOption(StreamingSortedAggregate.HYBRID_MAX_RUN_KEY)
-      .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(1 << 20)
-    strictPrefix(agg) match {
-      case Some((ordering, prefixExprs)) =>
-        RunHashAggregateExec(
-          agg.groupingExpressions,
-          prefixExprs,
-          agg.aggregateExpressions,
-          agg.resultExpressions,
-          ordering,
-          maxRunRows,
-          agg.child)
-      case None => agg
-    }
-  }
 
   /** The plan's effective ordering at `p`, looking through projections to
     * a converted streaming aggregate (whose emitted order the planner
@@ -702,7 +615,4 @@ class StreamingSortedAggregate(spark: SparkSession) extends Rule[SparkPlan] {
 
 object StreamingSortedAggregate {
   val KEY = "spark.graft.streamingSortedAgg"
-  val HYBRID_KEY = "spark.graft.streamingSortedAgg.hybrid"
-  val HYBRID_MIN_KEY = "spark.graft.streamingSortedAgg.hybridMinBytes"
-  val HYBRID_MAX_RUN_KEY = "spark.graft.streamingSortedAgg.hybridMaxRunRows"
 }

@@ -139,11 +139,8 @@ object TpchMacro {
         ORDER BY revenue DESC, c_custkey LIMIT 20"""),
 
       // Q10 in its ORIGINAL customer-first spelling (the TPC-H standard
-      // text order). Round 14: plans/LayoutJoinReorder rebuilds this chain
-      // layout-edge-first, so over the bucketed layouts it plans
-      // IDENTICALLY to the hand-ordered text above (plan-asserted in
-      // LayoutJoinReorderSpec); kept as its own gate entry so the oracle
-      // pins both spellings.
+      // text order), planned in that order; kept as its own gate entry so
+      // the oracle pins both spellings.
       both("h10_returned_items_orig", s"""
         SELECT c_custkey, c_name, $REV AS revenue, n_name,
           round(c_acctbal, 4) AS acctbal

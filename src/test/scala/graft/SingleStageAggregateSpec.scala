@@ -33,12 +33,6 @@ class SingleStageAggregateSpec extends AnyFunSuite {
       case h: HashAggregateExec =>
         out += h.aggregateExpressions.map(_.mode).distinct.mkString(",")
         h.children.foreach(walk)
-      // round 14: the strict-prefix hybrid may take the collapsed
-      // Complete aggregate (SMJ on l_orderkey = a sorted prefix of the
-      // grouping keys) — same modes, different operator
-      case r: plans.RunHashAggregateExec =>
-        out += r.aggregateExpressions.map(_.mode).distinct.mkString(",")
-        r.children.foreach(walk)
       case s: plans.StreamingSortedAggregateExec =>
         out += s.aggregateExpressions.map(_.mode).distinct.mkString(",")
         s.children.foreach(walk)

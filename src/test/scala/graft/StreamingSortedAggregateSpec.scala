@@ -180,6 +180,21 @@ class StreamingSortedAggregateSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString
     }
     assert(!plan.contains("StreamingSortedAggregate"), plan)
+    // grouping keys that only EXTEND the sort prefix: Spark's own hash
+    // aggregate runs, with the rows it gives with the rule off
+    def extended = Tables.t(spark, sf, "lineitem")
+      .sortWithinPartitions("l_orderkey")
+      .groupBy("l_orderkey", "l_suppkey")
+      .agg(sum(col("l_quantity")).as("sq"), count(lit(1)).as("cnt"))
+    val (extPlan, extRows) = withRule(on = true) {
+      val df = extended
+      val rows = sortedRows(df)
+      (df.queryExecution.executedPlan.toString, rows)
+    }
+    assert(extPlan.contains("HashAggregate"), extPlan)
+    assert(!extPlan.contains("StreamingSortedAggregate"), extPlan)
+    assert(extRows.nonEmpty)
+    assert(extRows == withRule(on = false)(sortedRows(extended)))
   }
 
   test("does not fire on distinct, filtered, or imperative aggregates") {

@@ -6,7 +6,9 @@
 #   flat    the shipped defaults (default)
 #   off     every graft optimizer rule switch off — a differential that shows
 #           each rewrite leaves results unchanged (plans.SingleTaskSort has
-#           no switch: SingleTaskSortSpec compares it with the range sort)
+#           no switch: SingleTaskSortSpec compares it with the range sort);
+#           exits 2 before running if no source under src/main reads one
+#           of its keys
 #   layout  the shipped defaults over a bucketed layout: orders and lineitem
 #           persisted on orderkey into 8 buckets (tools.Bucketize, in a
 #           temporary directory removed on exit) and served through
@@ -23,7 +25,14 @@ mkdir -p "$OUT"
 case "$POSTURE" in
   flat) unset SPARK_GRAFT_CONF ;;
   off)
-    export SPARK_GRAFT_CONF="spark.graft.eagerAgg=false,spark.graft.dynamicFilter.enabled=false,spark.graft.dynamicFilter.longSet=false,spark.graft.scaledLongSum=false,spark.graft.cascadeGroupingSets=false,spark.graft.fuseScalarAggs=false,spark.graft.dynamicFrameJoin=false,spark.graft.singleStageAgg=false,spark.graft.sortSharedAgg=false,spark.graft.streamingSortedAgg=false,spark.graft.streamingSortedAgg.hybrid=false,spark.graft.joinReorder=false"
+    OFF="spark.graft.eagerAgg=false,spark.graft.dynamicFilter.enabled=false,spark.graft.dynamicFilter.longSet=false,spark.graft.scaledLongSum=false,spark.graft.cascadeGroupingSets=false,spark.graft.fuseScalarAggs=false,spark.graft.dynamicFrameJoin=false,spark.graft.singleStageAgg=false,spark.graft.sortSharedAgg=false,spark.graft.streamingSortedAgg=false"
+    # a switch no source reads (a deleted rule's, or a typo) would turn
+    # nothing off: refuse it before anything runs
+    for kv in ${OFF//,/ }; do
+      grep -rqF "\"${kv%%=*}\"" src/main || {
+        echo "off posture: ${kv%%=*} is not read anywhere under src/main" >&2; exit 2; }
+    done
+    export SPARK_GRAFT_CONF="$OFF"
     ;;
   layout)
     unset SPARK_GRAFT_CONF
